@@ -32,7 +32,12 @@ from .search import (
 
 
 class IndexAlias:
-    """ref: index.go IndexAlias interface + index_alias_impl.go."""
+    """ref: index.go IndexAlias interface + index_alias_impl.go.
+
+    With concurrent=True every child's whole from_+size page is collected
+    to the driver before the merge: driver memory grows with
+    children x (from_ + size) rows, so deep pages over many children
+    belong on the default lazy union."""
 
     def __init__(
         self, searchers: Sequence[Searcher], concurrent: bool = False

@@ -20,7 +20,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from .index import SearchIndex
 from .mapping import IndexMapping
 from .search import Searcher, SearchRequest, SearchResult
-from .writer import IndexWriter
+from .writer import IndexWriter, read_snapshot
 
 
 class Index:
@@ -198,26 +198,21 @@ class Index:
     # -- lifecycle -------------------------------------------------------
 
     def copy_to(self, dest_path: str):
-        """Online backup: copy the current segment set + tombstones
-        (ref: index.go:314-318 CopyTo; on Iceberg this is a snapshot
-        export)."""
+        """Online backup: copy the current log version and the segments
+        and dead files it references (ref: index.go:314-318 CopyTo; on
+        Iceberg this is a snapshot export). A flat-layout index copies
+        its table dirs wholesale."""
         self._check_open()
-        os.makedirs(dest_path, exist_ok=True)
-        for name in ("segments", "tombstones"):
+        snap = read_snapshot(self.index_path)
+        names = snap.files() if snap.segments else os.listdir(self.index_path)
+        for name in names:
             src = os.path.join(self.index_path, name)
+            dst = os.path.join(dest_path, name)
+            os.makedirs(os.path.dirname(dst), exist_ok=True)
             if os.path.isdir(src):
-                shutil.copytree(
-                    src, os.path.join(dest_path, name), dirs_exist_ok=True
-                )
-        # flat-layout indexes copy their table dirs wholesale
-        if not os.path.isdir(os.path.join(self.index_path, "segments")):
-            for name in os.listdir(self.index_path):
-                src = os.path.join(self.index_path, name)
-                dst = os.path.join(dest_path, name)
-                if os.path.isdir(src):
-                    shutil.copytree(src, dst, dirs_exist_ok=True)
-                else:
-                    shutil.copy2(src, dst)
+                shutil.copytree(src, dst, dirs_exist_ok=True)
+            else:
+                shutil.copy2(src, dst)
 
     def close(self):
         """ref: index.go:226 Close — further calls error."""

@@ -373,9 +373,10 @@ class IndexBuilder:
         except (OSError, ValueError):
             return False
 
-    def _mark_stage(self, name: str, fingerprint: str):
-        with open(self._marker(name), "w") as f:
-            json.dump({"fingerprint": fingerprint, "stage": name}, f)
+    def _mark_stage(self, name: str, fingerprint: Optional[str]):
+        if fingerprint is not None:  # None: resume=False, nothing resumes
+            with open(self._marker(name), "w") as f:
+                json.dump({"fingerprint": fingerprint, "stage": name}, f)
 
     def _write(self, df: DataFrame, name: str):
         df.write.mode("overwrite").parquet(self._stage_dir(name))
@@ -421,9 +422,10 @@ class IndexBuilder:
         docid_offset: int = 0,
     ) -> BuildReport:
         os.makedirs(self.index_path, exist_ok=True)
-        if fingerprint is None and resume:
+        if not resume:
+            fingerprint = None
+        elif fingerprint is None:
             fingerprint = f"n={corpus.count()};cols={sorted(corpus.columns)};shift={self.block_shift}"
-        fingerprint = fingerprint or "no-resume"
         report = BuildReport(self.index_path)
         spark = self.spark
 
@@ -656,7 +658,7 @@ class IndexBuilder:
                     # a later read cannot infer a schema from — write
                     # the flat empty parquet (one 0-row footer file)
                     # and no marker, like a pre-tbucket index
-                    blocks.drop("tbucket").limit(0).write.mode(
+                    spark.createDataFrame([], POSTINGS_SCHEMA).write.mode(
                         "overwrite"
                     ).parquet(pdir)
             else:

@@ -138,8 +138,8 @@ def _decode_blocks_iter(batches, need_positions: bool):
 class SearchIndex:
     """Read-side snapshot handle. Works over both layouts: the flat
     single-build table set, and the segmented layout written by
-    IndexWriter (segments/seg-*/ + tombstones/) — in which case tables
-    are unioned across segments and tombstoned docs are masked, the
+    IndexWriter — in which case tables are unioned across the segments
+    of one committed log version and dead docids are masked, the
     IndexSnapshot + deleted-bitmap analogue
     (ref: index/scorch/snapshot_index.go:81, README.md:108-133). A new
     SearchIndex instance = a new MVCC snapshot."""
@@ -149,26 +149,18 @@ class SearchIndex:
         spark: SparkSession,
         index_path: str,
         mapping: Optional[IndexMapping] = None,
-        at_seq: Optional[int] = None,
+        version: Optional[int] = None,
     ):
-        """`at_seq` opens a historical snapshot of a segmented index:
-        only segments and tombstones with seq <= at_seq are visible —
-        the rollback/time-travel analogue
-        (ref: index/scorch/rollback.go; Iceberg time travel in
-        production). Append-only segments make this a pure filter."""
+        """Pins the latest committed version of a segmented index, or
+        `version` — read-only time travel (ref: index/scorch/rollback.go).
+        A version whose segments were merged away raises ValueError."""
+        from .writer import read_snapshot
+
         self.spark = spark
         self.index_path = index_path
         self.mapping = mapping
-        self.at_seq = at_seq
-
-    @cached_property
-    def _seg_metas(self) -> list:
-        from .writer import segment_metas
-
-        metas = segment_metas(self.index_path)
-        if self.at_seq is not None:
-            metas = [m for m in metas if m["seq"] <= self.at_seq]
-        return metas
+        self._snap = read_snapshot(index_path, version)
+        self._seg_metas = self._snap.metas()
 
     def _table(self, name: str) -> DataFrame:
         if self._seg_metas:
@@ -191,48 +183,11 @@ class SearchIndex:
         return self.spark.read.parquet(os.path.join(self.index_path, name))
 
     @cached_property
-    def _tombstones(self) -> Optional[DataFrame]:
-        d = os.path.join(self.index_path, "tombstones")
-        if not os.path.isdir(d) or not any(
-            f.endswith(".parquet") for f in os.listdir(d)
-        ):
-            return None
-        t = self.spark.read.parquet(d)
-        if self.at_seq is not None:
-            t = t.where(F.col("seq") <= self.at_seq)
-        return t
-
-    def _doc_seq_col(self):
-        """docid -> owning segment seq (ranges from segment metas)."""
-        expr = F.lit(-1)
-        for m in self._seg_metas:
-            expr = F.when(
-                (F.col("docid") >= m["docid_start"])
-                & (F.col("docid") < m["docid_end"]),
-                F.lit(m["seq"]),
-            ).otherwise(expr)
-        return expr
-
-    @cached_property
     def deleted_docids(self) -> Optional[DataFrame]:
-        """Docids masked by tombstones: doc is dead iff a tombstone with
-        seq > the doc's segment seq names its _id (upsert + delete)."""
-        if self._tombstones is None:
-            return None
-        raw = self._table("docs").select(
-            "docid", "_id", self._doc_seq_col().alias("__seq")
-        )
-        dead = (
-            raw.join(
-                self._tombstones.groupBy("_id").agg(
-                    F.max("seq").alias("__tomb_seq")
-                ),
-                "_id",
-            )
-            .where(F.col("__tomb_seq") > F.col("__seq"))
-            .select("docid")
-        )
-        return dead
+        """Docids the snapshot's dead files name: older versions of
+        upserted ids and deleted docs, resolved at commit time."""
+        files = self._snap.dead_files()
+        return self.spark.read.parquet(*files) if files else None
 
     @cached_property
     def docs(self) -> DataFrame:
@@ -274,7 +229,7 @@ class SearchIndex:
         d = self._table("dictionary")
         if len(self._seg_metas) > 1:
             # per-segment dictionaries merge by summation. Like scorch,
-            # df/cf still count tombstoned docs until compaction
+            # df/cf still count dead docs until compaction
             # (deleted bitmaps do not rewrite dictionaries).
             d = d.groupBy("field", "term").agg(
                 F.sum("df").alias("df"), F.sum("cf").alias("cf")
@@ -290,9 +245,10 @@ class SearchIndex:
         """Global N, live docs only (single-index semantics — the
         reference parity target, SURVEY.md §2.6 per-shard IDF caveat)."""
         if self._seg_metas:
-            if self._tombstones is not None:
-                return self.docs.count()
-            return max(m["docid_end"] for m in self._seg_metas)
+            return sum(
+                m["docid_end"] - m["docid_start"] - m["dead"]
+                for m in self._seg_metas
+            )
         return int(self._table("stats").collect()[0]["doc_count"])
 
     @cached_property
@@ -413,7 +369,7 @@ class SearchIndex:
 
         out = src.mapInPandas(gen, DECODED_SCHEMA)
         if self.deleted_docids is not None:
-            # mask tombstoned docs at the postings level — the
+            # mask dead docs at the postings level — the
             # deleted-roaring-bitmap analogue (scorch README:213-218)
             out = out.join(self.deleted_docids, "docid", "left_anti")
         return out

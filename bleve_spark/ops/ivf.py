@@ -96,15 +96,14 @@ def ivf_fit(
         F.col(vec_col).alias("v"),
         _content_hash(vec_col, seed).alias("hk"),
     )
-    pool = keyed.orderBy("hk").limit(int(sample))
-    pool = pool.persist()
+    sampled = keyed.orderBy("hk").limit(int(sample)).persist()
     try:
         # ragged rows (wrong-dim vectors) must not seed centroids or
         # feed the means: resolve the sample's modal dimension and fit
         # on that slice only — assign_cells later stamps the stragglers
         # with the -1 sentinel, same contract as the LSH bucket UDFs
         sizes = (
-            pool.groupBy(F.size("v").alias("d"))
+            sampled.groupBy(F.size("v").alias("d"))
             .count()
             .orderBy(F.desc("count"), F.asc("d"))
             .limit(1)
@@ -113,7 +112,7 @@ def ivf_fit(
         if not sizes:
             raise ValueError("ivf_fit: no non-null vectors to fit on")
         dim = int(sizes[0]["d"])
-        pool = pool.where(F.size("v") == dim)
+        pool = sampled.where(F.size("v") == dim)
         n_pool = pool.count()
         if n_pool < n_cells:
             raise ValueError(
@@ -158,7 +157,7 @@ def ivf_fit(
             cents = nxt
         return cents
     finally:
-        pool.unpersist()
+        sampled.unpersist()
 
 
 def assign_cells(

@@ -4,10 +4,10 @@ The reference is batch-only (its online path is Index/Batch calls,
 /root/reference/index.go:45-61); the Spark-native generalization is a
 stream of documents micro-batched into immutable segments via
 foreachBatch — each micro-batch is exactly one IndexWriter.batch_index
-call, so upsert/tombstone semantics, docid offsets, and snapshot
+call, so upsert/delete semantics, docid offsets, and snapshot
 isolation are identical to the batch path, and the streaming checkpoint
-makes ingestion exactly-once per micro-batch (a replayed batch rebuilds
-the same segment directory deterministically).
+makes ingestion exactly-once per micro-batch (a replayed batch is an
+upsert of the same ids, so each doc stays visible once).
 
 Scale shape: the streaming job runs beside query sessions; readers open
 new SearchIndex snapshots to observe newly introduced segments (the

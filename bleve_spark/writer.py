@@ -1,43 +1,56 @@
-"""Incremental write path: batches as immutable segments + tombstones.
+"""Incremental write path: immutable segments published by one commit log.
 
 Re-creates the reference's online index maintenance on top of the offline
 builder (SURVEY.md §2.1/§2.3): `Batch`/`Index` appends become immutable
 segments (/root/reference/index/scorch/scorch.go:365-443 — each batch
-becomes a zap segment), `Delete` becomes tombstones masked at read time
+becomes a zap segment), `Delete` marks docids dead, masked at read time
 (the deleted-roaring-bitmap analogue, index/scorch/README.md:108-133),
-and `compact()` is the merger (builder-style full k-way merge,
-index/scorch/builder.go:135-240 / mergeplan tiered compaction collapsed
-to one tier).
+and maybe_merge()/compact() are the merger (index/scorch/merge.go).
 
 Layout under index_path:
-    segments/seg-00000/        full table set (IndexBuilder output)
-    segments/seg-00000/_SEGMENT.json   {seq, docid_start, docid_end}
-    tombstones/                parquet (_id string, seq long)
+    _log/<version, 20 digits>.json   commit 0, 1, ...: the only record of
+                                     what the index holds
+    segments/seg-00000-<token>/      full table set (IndexBuilder output)
+    dead/<token>.parquet             dead docids (docid long)
 
-Docids are globally unique: segment k's docids start at the previous
-segment's docid_end (snapshot offsets, snapshot_index.go:475-480), so
-posting blocks from different segments never alias a docid range.
+A commit is a JSON list of one-key actions: add_segment {seq, dir,
+docid_start, docid_end}, remove_segment {seq}, add_dead {path, counts:
+{seq: dead docids in it}} and, for rollback, remove_dead {path}.
+Replaying commits 0..v gives snapshot v (the IndexSnapshot analogue,
+index/scorch/snapshot_index.go:81). A commit is published put-if-absent
+(temp file, then os.link), so a crash leaves the old snapshot or the new
+one and a writer that lost a race raises. It then deletes every segment
+dir and dead file the new head does not reference. Docids are never
+reused: a segment starts where the highest range committed so far ended.
 
-Visibility rule: a doc in segment s is dead iff a tombstone with
-seq > s names its `_id`. batch_index(seq=k) tombstones incoming ids at
-seq k — upsert semantics: older versions die, the new segment (seq k)
-survives. delete() writes tombstones at seq = current segment count.
+Visibility rule: a doc is dead iff a dead file of the snapshot names its
+docid. Upsert and delete resolve `_id`s to the live docids of committed
+segments: batch_index kills the older versions of its ids (duplicates
+inside one batch both survive), delete kills every live version.
 """
 
 from __future__ import annotations
 
 import json
+import math
 import os
 import shutil
-from dataclasses import dataclass
-from typing import Dict, List, Optional, Sequence
+import uuid
+from dataclasses import dataclass, field
+from typing import Dict, List, Optional
 
+import numpy as np
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from .build import BuildReport, IndexBuilder
+from .build import BuildReport, IndexBuilder, _parquet_rows
+from .index import SearchIndex
 from .mapping import IndexMapping
 
 SEG_PREFIX = "seg-"
+LOG_DIR = "_log"
+DEAD_DIR = "dead"
 
 
 @dataclass
@@ -71,8 +84,6 @@ def plan_merges(
     their live size, so reclaiming deletes happens by construction
     (a mostly-dead big segment lands in a small tier and merges).
     """
-    import math
-
     dead_counts = dead_counts or {}
     tiers: Dict[int, List[int]] = {}
     for seq, total in seg_sizes.items():
@@ -111,30 +122,100 @@ def plan_merges(
     return plans
 
 
-def segment_dirs(index_path: str) -> List[str]:
-    root = os.path.join(index_path, "segments")
-    if not os.path.isdir(root):
-        return []
-    return [
-        os.path.join(root, d)
-        for d in sorted(os.listdir(root))
-        if d.startswith(SEG_PREFIX)
-        and os.path.exists(os.path.join(root, d, "_SEGMENT.json"))
-    ]
+@dataclass
+class Snapshot:
+    """One replayed log version: seq -> add_segment body, and dead file
+    -> {seq: count}; paths are relative to `root`."""
+
+    root: str
+    version: int = -1
+    segments: Dict[int, dict] = field(default_factory=dict)
+    dead: Dict[str, Dict[int, int]] = field(default_factory=dict)
+    next_seq: int = 0
+    next_docid: int = 0
+
+    @property
+    def refs(self) -> set:
+        return {m["dir"] for m in self.segments.values()} | set(self.dead)
+
+    def metas(self) -> List[dict]:
+        """Segments by seq, with an absolute `dir` and a `dead` count."""
+        return [
+            {**m, "dir": os.path.join(self.root, m["dir"]),
+             "dead": sum(c.get(seq, 0) for c in self.dead.values())}
+            for seq, m in sorted(self.segments.items())
+        ]
+
+    def dead_files(self) -> List[str]:
+        return [os.path.join(self.root, p) for p in sorted(self.dead)]
+
+    def files(self) -> List[str]:
+        """Relative paths a copy needs: the log up to this version and
+        the files it references."""
+        return [_entry(v) for v in range(self.version + 1)] + sorted(self.refs)
+
+
+def _entry(version: int) -> str:
+    return os.path.join(LOG_DIR, f"{version:020d}.json")
+
+
+def _replay(index_path: str) -> List[Snapshot]:
+    """Every committed version, oldest first; [] without a log."""
+    log = os.path.join(index_path, LOG_DIR)
+    names = os.listdir(log) if os.path.isdir(log) else []
+    snaps, s = [], Snapshot(index_path)
+    for v in sorted(int(n[:-5]) for n in names if n.endswith(".json") and n[:-5].isdigit()):
+        with open(os.path.join(index_path, _entry(v))) as f:
+            actions = json.load(f)
+        s = Snapshot(index_path, v, dict(s.segments), dict(s.dead),
+                     s.next_seq, s.next_docid)
+        for ((kind, a),) in (x.items() for x in actions):
+            if kind == "add_segment":
+                s.segments[a["seq"]] = a
+                s.next_seq = max(s.next_seq, a["seq"] + 1)
+                s.next_docid = max(s.next_docid, a["docid_end"])
+            elif kind == "remove_segment":
+                s.segments.pop(a["seq"], None)
+            elif kind == "add_dead":
+                s.dead[a["path"]] = {int(q): n for q, n in a["counts"].items()}
+            elif kind == "remove_dead":
+                s.dead.pop(a["path"], None)
+            else:
+                raise ValueError(f"{index_path}: unknown log action {kind!r}")
+        s.dead = {p: c for p, c in s.dead.items() if s.segments.keys() & c}
+        snaps.append(s)
+    return snaps
+
+
+def _restorable(snaps: List[Snapshot]) -> Dict[int, Snapshot]:
+    """The versions whose files the head still holds."""
+    keep = snaps[-1].refs if snaps else set()
+    return {s.version: s for s in snaps if s.refs <= keep}
+
+
+def read_snapshot(index_path: str, version: Optional[int] = None) -> Snapshot:
+    """The head of the log, or `version`. Without a log (the flat
+    single-build layout) the snapshot is empty."""
+    snaps = _replay(index_path)
+    if version is None:
+        return snaps[-1] if snaps else Snapshot(index_path)
+    points = _restorable(snaps)
+    if version not in points:
+        raise ValueError(
+            f"cannot open version {version} of {index_path}: never committed, "
+            f"or its segments were merged away; available: {sorted(points)}"
+        )
+    return points[version]
 
 
 def segment_metas(index_path: str) -> List[dict]:
-    metas = []
-    for d in segment_dirs(index_path):
-        with open(os.path.join(d, "_SEGMENT.json")) as f:
-            m = json.load(f)
-        m["dir"] = d
-        metas.append(m)
-    return sorted(metas, key=lambda m: m["seq"])
+    """Head segments by seq: {seq, dir, docid_start, docid_end, dead}."""
+    return read_snapshot(index_path).metas()
 
 
 class IndexWriter:
-    """ref: index.go:45-89 (Index/Delete/Batch) + scorch introducer."""
+    """ref: index.go:45-89 (Index/Delete/Batch) + scorch introducer.
+    Every call writes its new files, then publishes one commit."""
 
     def __init__(
         self, spark: SparkSession, mapping: IndexMapping, index_path: str
@@ -145,67 +226,99 @@ class IndexWriter:
 
     # -- internals -------------------------------------------------------
 
-    def _tomb_dir(self) -> str:
-        return os.path.join(self.index_path, "tombstones")
-
-    def _next_seq_and_offset(self):
-        metas = segment_metas(self.index_path)
-        # max+1, not len(): tiered merges retire mid-sequence segments
-        seq = max((m["seq"] for m in metas), default=-1) + 1
-        offset = max((m["docid_end"] for m in metas), default=0)
-        return seq, offset
-
-    def _write_tombstones(self, ids_df: DataFrame, seq: int):
-        (
-            ids_df.select(
-                F.col("_id").cast("string").alias("_id"),
-                F.lit(seq).cast("long").alias("seq"),
-            )
-            .write.mode("append")
-            .parquet(self._tomb_dir())
+    def _build_segment(self, df: DataFrame, id_expr, seq: int, start: int):
+        """Build `df` into a new segment dir at docid `start`; returns
+        its add_segment body and the build report."""
+        rel = os.path.join("segments", f"{SEG_PREFIX}{seq:05d}-{uuid.uuid4().hex[:8]}")
+        seg_dir = os.path.join(self.index_path, rel)
+        report = IndexBuilder(self.spark, self.mapping, seg_dir).build(
+            df, id_expr=id_expr, resume=False, docid_offset=start
         )
+        end = start + _parquet_rows(os.path.join(seg_dir, "docs"))
+        return {"seq": seq, "dir": rel, "docid_start": start, "docid_end": end}, report
+
+    def _kill(self, idx, ids) -> List[dict]:
+        """The add_dead action for the live docids of snapshot `idx`
+        whose _id is in `ids` (a list or an `_id` DataFrame), if any."""
+        if not idx._snap.segments:
+            return []
+        docs = idx._table("docs")
+        if isinstance(ids, DataFrame):
+            docs = docs.join(ids, "_id", "left_semi")
+        else:
+            docs = docs.where(F.col("_id").isin(ids))
+        files = idx._snap.dead_files()
+        docids = np.setdiff1d(
+            docs.select("docid").toPandas()["docid"].to_numpy(np.int64),
+            pq.read_table(files)["docid"].to_numpy() if files else [],
+        )
+        if not docids.size:
+            return []
+        rel = os.path.join(DEAD_DIR, f"{uuid.uuid4().hex}.parquet")
+        os.makedirs(os.path.join(self.index_path, DEAD_DIR), exist_ok=True)
+        pq.write_table(pa.table({"docid": docids}), os.path.join(self.index_path, rel))
+        counts = {}
+        for seq, m in idx._snap.segments.items():
+            lo, hi = np.searchsorted(docids, [m["docid_start"], m["docid_end"]])
+            if hi > lo:
+                counts[str(seq)] = int(hi - lo)
+        return [{"add_dead": {"path": rel, "counts": counts}}]
+
+    def _commit(self, base: Snapshot, actions: List[dict]) -> None:
+        """Publish `actions` as the version after `base`, put-if-absent."""
+        os.makedirs(os.path.join(self.index_path, LOG_DIR), exist_ok=True)
+        tmp = os.path.join(self.index_path, LOG_DIR, f".tmp-{uuid.uuid4().hex}")
+        try:
+            with open(tmp, "w") as f:
+                json.dump(actions, f)
+                f.flush()
+                os.fsync(f.fileno())
+            os.link(tmp, os.path.join(self.index_path, _entry(base.version + 1)))
+        except FileExistsError:
+            raise RuntimeError(
+                f"version {base.version + 1} of {self.index_path} was committed"
+                " by another writer; nothing was published, retry the call"
+            ) from None
+        finally:
+            os.remove(tmp)
+        self._remove_orphans()
+
+    def _remove_orphans(self) -> None:
+        """Delete every segment dir and dead file the head does not
+        reference: retired or rolled back, or left by a crashed call."""
+        keep = read_snapshot(self.index_path).refs
+        for sub in ("segments", DEAD_DIR):
+            root = os.path.join(self.index_path, sub)
+            for name in sorted(os.listdir(root)) if os.path.isdir(root) else []:
+                path = os.path.join(root, name)
+                if os.path.join(sub, name) in keep:
+                    continue
+                shutil.rmtree(path) if os.path.isdir(path) else os.remove(path)
 
     # -- public API ------------------------------------------------------
 
     def batch_index(self, df: DataFrame, id_expr=None) -> BuildReport:
         """Index a batch as a new immutable segment; existing docs with
         the same _id are superseded (upsert)."""
-        seq, offset = self._next_seq_and_offset()
-        seg_dir = os.path.join(
-            self.index_path, "segments", f"{SEG_PREFIX}{seq:05d}"
-        )
-        builder = IndexBuilder(self.spark, self.mapping, seg_dir)
-        report = builder.build(
-            df, id_expr=id_expr, resume=False, docid_offset=offset
-        )
-        n = int(
-            self.spark.read.parquet(os.path.join(seg_dir, "stats"))
-            .collect()[0]["doc_count"]
-        )
-        with open(os.path.join(seg_dir, "_SEGMENT.json"), "w") as f:
-            json.dump(
-                {"seq": seq, "docid_start": offset, "docid_end": offset + n},
-                f,
-            )
-        if seq > 0:
-            # upsert: kill older versions of the incoming ids
-            ids = self.spark.read.parquet(
-                os.path.join(seg_dir, "docs")
-            ).select("_id")
-            self._write_tombstones(ids, seq)
+        idx = SearchIndex(self.spark, self.index_path, self.mapping)
+        base = idx._snap
+        seg, report = self._build_segment(df, id_expr, base.next_seq, base.next_docid)
+        ids = self.spark.read.parquet(
+            os.path.join(self.index_path, seg["dir"], "docs")
+        ).select("_id")
+        self._commit(base, [{"add_segment": seg}] + self._kill(idx, ids))
         return report
 
     def delete(self, ids) -> None:
-        """Tombstone ids across all current segments
-        (ref: index.go:85-89)."""
-        seq, _ = self._next_seq_and_offset()
+        """Mark every live version of `ids` dead (ref: index.go:85-89)."""
+        idx = SearchIndex(self.spark, self.index_path, self.mapping)
+        if not idx._snap.segments:
+            raise ValueError(f"{self.index_path} has no IndexWriter segments")
         if isinstance(ids, DataFrame):
-            ids_df = ids.select(F.col(ids.columns[0]).alias("_id"))
+            ids = ids.select(F.col(ids.columns[0]).cast("string").alias("_id"))
         else:
-            ids_df = self.spark.createDataFrame(
-                [(str(i),) for i in ids], ["_id"]
-            )
-        self._write_tombstones(ids_df, seq)
+            ids = [str(i) for i in ids]
+        self._commit(idx._snap, self._kill(idx, ids))
 
     def maybe_merge(
         self,
@@ -213,135 +326,60 @@ class IndexWriter:
         searcher_index=None,
     ) -> List[List[int]]:
         """Tiered compaction (ref: index/scorch/merge.go +
-        mergeplan/merge_plan.go): merge each over-full tier's smallest
-        segments into one new segment, leaving big segments untouched —
-        incremental writers no longer pay a full rebuild per compaction
-        (contrast compact()). Returns the executed merge plans (lists
-        of retired seqs)."""
-        from .index import SearchIndex
-
-        idx = searcher_index or SearchIndex(
-            self.spark, self.index_path, self.mapping
+        mergeplan/merge_plan.go): rebuild the LIVE docs of each over-full
+        tier's smallest segments into one new segment, leaving big
+        segments untouched (contrast compact()), all in one commit.
+        Returns the executed merge plans (lists of retired seqs)."""
+        idx = searcher_index or SearchIndex(self.spark, self.index_path, self.mapping)
+        base = idx._snap
+        metas = {m["seq"]: m for m in base.metas()}
+        plans = plan_merges(
+            {s: m["docid_end"] - m["docid_start"] for s, m in metas.items()},
+            opts,
+            {s: m["dead"] for s, m in metas.items()},
         )
-        metas = {m["seq"]: m for m in segment_metas(self.index_path)}
-        seg_sizes = {
-            s: m["docid_end"] - m["docid_start"] for s, m in metas.items()
-        }
-        dead_counts: Dict[int, int] = {}
-        if idx.deleted_docids is not None:
-            seq_col = idx._doc_seq_col()
-            dead_counts = {
-                int(r["__seq"]): int(r["cnt"])
-                for r in idx.deleted_docids.join(
-                    idx._table("docs").select("docid"), "docid"
-                )
-                .select(seq_col.alias("__seq"))
-                .groupBy("__seq")
-                .agg(F.count("*").alias("cnt"))
-                .collect()
-            }
-        plans = plan_merges(seg_sizes, opts, dead_counts)
+        actions: List[dict] = []
+        seq, start = base.next_seq, base.next_docid
         for seqs in plans:
-            self._merge_segments(seqs, metas, idx)
-            # re-open: the next plan sees the post-merge segment set
-            idx = SearchIndex(self.spark, self.index_path, self.mapping)
+            in_range = F.lit(False)
+            for s in seqs:
+                lo, hi = metas[s]["docid_start"], metas[s]["docid_end"]
+                in_range |= (F.col("docid") >= lo) & (F.col("docid") < hi)
+            live = idx.docs.where(in_range).drop("docid")
+            seg, _ = self._build_segment(live, F.col("_id"), seq, start)
+            actions += [{"remove_segment": {"seq": s}} for s in seqs]
+            actions.append({"add_segment": seg})
+            seq, start = seq + 1, seg["docid_end"]
+        if plans:
+            self._commit(base, actions)
         return plans
 
-    def _merge_segments(self, seqs: List[int], metas: dict, idx) -> None:
-        """Rebuild the LIVE docs of `seqs` into one fresh segment at a
-        new seq + docid range, then retire the old segment dirs (on
-        Iceberg: one atomic rewrite-data-files commit)."""
-        new_seq, offset = self._next_seq_and_offset()
-        ranges = [
-            (metas[s]["docid_start"], metas[s]["docid_end"]) for s in seqs
-        ]
-        in_range = None
-        for lo, hi in ranges:
-            c = (F.col("docid") >= lo) & (F.col("docid") < hi)
-            in_range = c if in_range is None else (in_range | c)
-        live = idx.docs.where(in_range).drop("docid")
-        seg_dir = os.path.join(
-            self.index_path, "segments", f"{SEG_PREFIX}{new_seq:05d}"
-        )
-        builder = IndexBuilder(self.spark, self.mapping, seg_dir)
-        builder.build(
-            live, id_expr=F.col("_id"), resume=False, docid_offset=offset
-        )
-        n = int(
-            self.spark.read.parquet(os.path.join(seg_dir, "stats"))
-            .collect()[0]["doc_count"]
-        )
-        with open(os.path.join(seg_dir, "_SEGMENT.json"), "w") as f:
-            json.dump(
-                {
-                    "seq": new_seq,
-                    "docid_start": offset,
-                    "docid_end": offset + n,
-                },
-                f,
-            )
-        for s in seqs:
-            shutil.rmtree(metas[s]["dir"], ignore_errors=True)
-
     def rollback_points(self) -> List[int]:
-        """Available rollback targets: the segment seqs currently on
-        disk (ref: index/scorch/rollback.go RollbackPoints — scorch
-        keeps recent epochs; append-only segments keep all of ours)."""
-        return [m["seq"] for m in segment_metas(self.index_path)]
+        """Versions rollback() can restore: every commit whose files the
+        head still holds (ref: index/scorch/rollback.go RollbackPoints)."""
+        return sorted(_restorable(_replay(self.index_path)))
 
-    def rollback(self, to_seq: int) -> None:
-        """Physically revert to the state at seq `to_seq` (ref:
-        rollback.go Rollback): remove segments AND tombstones with
-        seq > to_seq. Read-only time travel without mutation is
-        SearchIndex(at_seq=...); this is the destructive variant that
-        makes the rollback permanent and reclaims space."""
-        metas = segment_metas(self.index_path)
-        if to_seq not in [m["seq"] for m in metas]:
-            raise ValueError(
-                f"no rollback point at seq {to_seq}; available: "
-                f"{[m['seq'] for m in metas]}"
-            )
-        for m in metas:
-            if m["seq"] > to_seq:
-                shutil.rmtree(m["dir"], ignore_errors=True)
-        tomb = self._tomb_dir()
-        if os.path.isdir(tomb):
-            t = self.spark.read.parquet(tomb)
-            kept = t.where(F.col("seq") <= to_seq)
-            tmp = tomb + "_rollback"
-            shutil.rmtree(tmp, ignore_errors=True)
-            if kept.count() > 0:
-                kept.write.mode("overwrite").parquet(tmp)
-                shutil.rmtree(tomb, ignore_errors=True)
-                os.rename(tmp, tomb)
-            else:
-                shutil.rmtree(tomb, ignore_errors=True)
+    def rollback(self, version: int) -> None:
+        """Restore `version` as a new commit (ref: rollback.go Rollback)
+        that removes the segments and dead files committed since.
+        Read-only time travel is SearchIndex(version=...)."""
+        old = read_snapshot(self.index_path, version)
+        head = read_snapshot(self.index_path)
+        self._commit(
+            head,
+            [{"remove_segment": {"seq": s}} for s in head.segments.keys() - old.segments.keys()]
+            + [{"remove_dead": {"path": p}} for p in head.dead.keys() - old.dead.keys()],
+        )
 
     def compact(self, searcher_index=None) -> BuildReport:
-        """Merge all segments minus tombstones into one fresh segment —
+        """Merge all segments minus dead docs into one fresh segment —
         the merger/mergeplan analogue collapsed to a single tier
         (ref: index/scorch/merge.go, mergeplan/merge_plan.go:67-135)."""
-        from .index import SearchIndex
-
-        idx = searcher_index or SearchIndex(
-            self.spark, self.index_path, self.mapping
+        idx = searcher_index or SearchIndex(self.spark, self.index_path, self.mapping)
+        base = idx._snap
+        seg, report = self._build_segment(
+            idx.docs.drop("docid"), F.col("_id"), base.next_seq, base.next_docid
         )
-        live = idx.docs.drop("docid")  # rebuild reassigns dense docids
-        tmp = os.path.join(self.index_path, "segments_compacting")
-        shutil.rmtree(tmp, ignore_errors=True)
-        seg_dir = os.path.join(tmp, f"{SEG_PREFIX}00000")
-        builder = IndexBuilder(self.spark, self.mapping, seg_dir)
-        report = builder.build(live, id_expr=F.col("_id"), resume=False)
-        n = int(
-            self.spark.read.parquet(os.path.join(seg_dir, "stats"))
-            .collect()[0]["doc_count"]
-        )
-        with open(os.path.join(seg_dir, "_SEGMENT.json"), "w") as f:
-            json.dump({"seq": 0, "docid_start": 0, "docid_end": n}, f)
-        # swap in the compacted segment set (on Iceberg this is the
-        # atomic snapshot commit; here: directory swap)
-        old = os.path.join(self.index_path, "segments")
-        shutil.rmtree(old, ignore_errors=True)
-        os.rename(tmp, old)
-        shutil.rmtree(self._tomb_dir(), ignore_errors=True)
+        removes = [{"remove_segment": {"seq": s}} for s in base.segments]
+        self._commit(base, removes + [{"add_segment": seg}])
         return report

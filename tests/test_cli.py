@@ -91,18 +91,16 @@ def test_cli_check_clean_and_corrupt(cli_index, capsys):
     )
     assert json.loads(out.splitlines()[-1])["problems"] == 0
 
-    # corrupt a segment meta: shrink its docid range -> check trips
+    # corrupt a segment's log entry: shrink its docid range -> check trips
     broken = f"{BASE}/broken"
     shutil.copytree(cli_index, broken)
-    segs = sorted(
-        d for d in os.listdir(f"{broken}/segments") if d.startswith("seg-")
-    )
-    meta_path = f"{broken}/segments/{segs[0]}/_SEGMENT.json"
-    with open(meta_path) as f:
-        meta = json.load(f)
-    meta["docid_end"] = meta["docid_start"]  # claim zero docs
-    with open(meta_path, "w") as f:
-        json.dump(meta, f)
+    entry = os.path.join(broken, "_log", sorted(os.listdir(f"{broken}/_log"))[0])
+    with open(entry) as f:
+        actions = json.load(f)
+    add = next(a["add_segment"] for a in actions if "add_segment" in a)
+    add["docid_end"] = add["docid_start"]  # claim zero docs
+    with open(entry, "w") as f:
+        json.dump(actions, f)
     with pytest.raises(SystemExit):
         spark_job.main(
             ["check", "--index", broken, "--mapping", "dynamic",

@@ -63,7 +63,13 @@ def shape_index(spark):
 @pytest.mark.parametrize(
     "case",
     load_searches() if os.path.isdir(REF_DIR) else [],
-    ids=lambda c: c.get("comment", "")[:60].replace(" ", "_"),
+    # without the reference data pytest passes its empty-parameter
+    # placeholder here; a fixed id lets the module's skip apply
+    ids=lambda c: (
+        c.get("comment", "")[:60].replace(" ", "_")
+        if isinstance(c, dict)
+        else "no_reference_data"
+    ),
 )
 def test_geoshape_search(shape_index, case):
     req = case["search"]
@@ -85,14 +91,14 @@ def test_geoshape_search(shape_index, case):
     assert got_ids == want_ids, case.get("comment")
 
 
-# -- round-4: geoshape x at_seq interplay (round-2 carried note) -------------
+# -- round-4: geoshape x version= interplay (round-2 carried note) -----------
 
 
 def test_geoshape_at_seq_masks_later_shape_update(spark):
-    """A geoshape query against an at_seq snapshot must see the shape
-    version live AT that sequence: the mid-sequence upsert of doc
-    'mover' (polygon around Paris -> polygon around Tokyo) is masked in
-    the at_seq=0 view and visible at HEAD — segment union + tombstone
+    """A geoshape query against a version= snapshot must see the shape
+    version live AT that commit: the later upsert of doc 'mover'
+    (polygon around Paris -> polygon around Tokyo) is masked in the
+    version=0 view and visible at HEAD — segment union + dead-docid
     masking compose with the geoshape relation filter exactly like any
     other query (ref: index/scorch/rollback.go + geoshape searcher)."""
     import json as _json
@@ -119,7 +125,7 @@ def test_geoshape_at_seq_masks_later_shape_update(spark):
     m = IndexMapping(default_analyzer="keyword", compose_all=False)
     m.add(FieldMapping("region", type="geoshape", index=False))
     w = IndexWriter(spark, m, path)
-    # seq 0: mover @ paris, anchor @ berlin
+    # version 0: mover @ paris, anchor @ berlin
     w.batch_index(
         spark.createDataFrame(
             [("mover", poly(*paris)), ("anchor", poly(*berlin))],
@@ -127,7 +133,7 @@ def test_geoshape_at_seq_masks_later_shape_update(spark):
         ),
         id_expr=F.col("id"),
     )
-    # seq 1+: upsert mover -> tokyo (tombstones the seq-0 version)
+    # version 1: upsert mover -> tokyo (kills the version-0 doc)
     w.batch_index(
         spark.createDataFrame([("mover", poly(*tokyo))], ["id", "region"]),
         id_expr=F.col("id"),
@@ -143,12 +149,12 @@ def test_geoshape_at_seq_masks_later_shape_update(spark):
         return sorted(r["_id"] for r in res.hits.collect())
 
     head = SearchIndex(spark, path, m)
-    past = SearchIndex(spark, path, m, at_seq=0)
+    past = SearchIndex(spark, path, m, version=0)
     # HEAD: mover moved to tokyo
     assert hit_ids(head, *tokyo) == ["mover"]
     assert hit_ids(head, *paris) == []
     assert hit_ids(head, *berlin) == ["anchor"]
-    # at_seq=0: the paris shape is live, the tokyo segment invisible
+    # version=0: the paris shape is live, the tokyo segment invisible
     assert hit_ids(past, *paris) == ["mover"]
     assert hit_ids(past, *tokyo) == []
     assert hit_ids(past, *berlin) == ["anchor"]

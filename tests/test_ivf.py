@@ -37,6 +37,19 @@ def test_fit_is_deterministic(spark, corpus):
     np.testing.assert_allclose(a, b)
 
 
+def test_fit_frees_its_cached_sample(spark, corpus):
+    """ivf_fit persists its sample only while it fits: once it returns,
+    on success or on a raise, the session caches nothing."""
+    df, _ = corpus
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    spark.catalog.clearCache()
+    ivf.ivf_fit(df, n_cells=8, iters=2)
+    assert cache.isEmpty()
+    with pytest.raises(ValueError, match="n_cells"):
+        ivf.ivf_fit(df, n_cells=64, sample=32)
+    assert cache.isEmpty()
+
+
 def test_fit_rejects_more_cells_than_sample(spark, corpus):
     df, _ = corpus
     with pytest.raises(ValueError, match="n_cells"):

@@ -1,4 +1,4 @@
-"""Incremental write path: batch segments, upsert, delete tombstones,
+"""Incremental write path: batch segments, upsert, delete,
 compaction — the scorch Batch/Delete/merge semantics (SURVEY.md §2.1/2.3;
 ref index/scorch/scorch.go:365-443, README.md:108-133, builder.go:135-240)
 re-done as immutable parquet segments + read-time masking."""
@@ -108,12 +108,12 @@ def test_compact_preserves_results(spark, writer):
     after_dog, _ = _search_ids(spark, {"field": "body", "term": "dog"})
     assert after_fox == before_fox
     assert after_dog == before_dog
-    # tombstones are gone; dictionary df no longer counts dead docs
-    assert idx._tombstones is None
+    # no dead docids remain; dictionary df no longer counts dead docs
+    assert idx.deleted_docids is None
 
 
 def test_snapshot_time_travel(spark):
-    """at_seq opens a historical view — the rollback analogue
+    """version= opens a historical view — the rollback analogue
     (ref: index/scorch/rollback.go)."""
     import shutil as sh
 
@@ -136,7 +136,7 @@ def test_snapshot_time_travel(spark):
     w.delete(["a"])
     now = SearchIndex(spark, path, m)
     assert now.doc_count == 1  # a deleted
-    past = SearchIndex(spark, path, m, at_seq=0)
+    past = SearchIndex(spark, path, m, version=0)
     assert past.doc_count == 1  # only segment 0, before the delete
     res = Searcher(past).search(
         SearchRequest(
@@ -208,7 +208,7 @@ def test_tiered_merge_leaves_big_segment(spark):
     before = {m["seq"]: m for m in segment_metas(path)}
     assert len(before) == 5
     big_dir = before[0]["dir"]
-    big_mtime = os.path.getmtime(os.path.join(big_dir, "_SEGMENT.json"))
+    big_mtime = os.path.getmtime(os.path.join(big_dir, "docs"))
 
     def ids():
         idx = SearchIndex(spark, path, _mapping())
@@ -230,7 +230,7 @@ def test_tiered_merge_leaves_big_segment(spark):
     assert len(plans) == 1 and len(plans[0]) == 3
     after = {m["seq"]: m for m in segment_metas(path)}
     assert 0 in after  # big segment retained...
-    assert os.path.getmtime(os.path.join(big_dir, "_SEGMENT.json")) == big_mtime
+    assert os.path.getmtime(os.path.join(big_dir, "docs")) == big_mtime
     assert len(after) == 3  # big + 1 small survivor + merged
     merged_seq = max(after)
     assert after[merged_seq]["docid_end"] - after[merged_seq]["docid_start"] == 9
@@ -245,8 +245,8 @@ def test_tiered_merge_leaves_big_segment(spark):
 
 
 def test_rollback(spark):
-    """Destructive rollback removes later segments + tombstones
-    (ref: index/scorch/rollback.go); results equal the at_seq
+    """Destructive rollback removes later segments + dead docids
+    (ref: index/scorch/rollback.go); results equal the version=
     time-travel view of the same point."""
     path = "/tmp/bleve_spark_rollback_test_index"
     shutil.rmtree(path, ignore_errors=True)
@@ -269,9 +269,9 @@ def test_rollback(spark):
         return sorted(r["_id"] for r in res.hits.collect())
 
     assert ids() == []  # a upserted to cat, b deleted
-    assert w.rollback_points() == [0, 1]
-    # time-travel view at seq 0 matches what rollback will restore
-    tt = SearchIndex(spark, path, _mapping(), at_seq=0)
+    assert w.rollback_points() == [0, 1, 2]
+    # time-travel view at version 0 matches what rollback will restore
+    tt = SearchIndex(spark, path, _mapping(), version=0)
     tt_ids = sorted(
         r["_id"]
         for r in Searcher(tt)

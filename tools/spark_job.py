@@ -21,8 +21,8 @@ Then submit against any cluster (YARN/k8s/standalone/local):
 The build is checkpoint-resumable: re-submitting the same build command
 skips completed stages via the per-stage fingerprint markers and appends
 per-stage lineage/metrics rows to the index's ``manifest`` table
-(bleve_spark/build.py). Executor-count scaling evidence comes from
-bench.py, which runs the identical build at two parallelism levels.
+(bleve_spark/build.py). Build, ingest and query timings come from the
+benchmark, ``python3 perfbench/run.py`` (perfbench/README.md).
 """
 
 from __future__ import annotations
@@ -275,13 +275,13 @@ def cmd_dump(args):
 
 def cmd_check(args):
     """Index consistency checks (ref: cmd/bleve/cmd/check.go), extended
-    with segment/tombstone/meta invariants:
+    with segment/dead-docid/meta invariants:
 
     1. per-term: dictionary df == term-query hit total (the reference's
        check), over --count sampled terms per field
     2. segment metas: docid ranges disjoint, doc counts match the
        stored table, seqs unique
-    3. tombstones only ever mask docs that exist in some segment
+    3. each segment's dead docids exist in it and match its logged count
     4. live doc_count == distinct live docids
     """
     from pyspark.sql import functions as F
@@ -299,9 +299,9 @@ def cmd_check(args):
     problems = []
 
     # 1. dictionary-vs-search parity per field. Like scorch, dictionary
-    # df still counts tombstoned docs until compaction, so with live
-    # tombstones the invariant is total <= df; without, total == df.
-    has_tombstones = idx._tombstones is not None
+    # df still counts dead docs until compaction, so with dead docids
+    # the invariant is total <= df; without, total == df.
+    has_dead = idx.deleted_docids is not None
     fields = [args.field] if args.field else sorted(idx.field_stats)
     searcher = Searcher(idx)
     for fld in fields:
@@ -328,7 +328,7 @@ def cmd_check(args):
                 )
                 break
             bad = (
-                res.total > df if has_tombstones else res.total != df
+                res.total > df if has_dead else res.total != df
             )
             if bad:
                 problems.append(
@@ -376,17 +376,20 @@ def cmd_check(args):
                 f"[{m['docid_start']},{m['docid_end']})"
             )
 
-    # 3. tombstones reference existing doc ids
-    tomb = idx._tombstones
-    if tomb is not None:
-        all_ids = idx._table("docs").select("_id")
-        orphans = (
-            tomb.select("_id").distinct().join(all_ids, "_id", "left_anti")
-        ).count()
-        if orphans:
-            problems.append(
-                f"{orphans} tombstoned ids never existed in any segment"
-            )
+    # 3. dead docids exist in their segment and match its logged count
+    if has_dead:
+        dead = idx.deleted_docids.join(
+            idx._table("docs").select("docid"), "docid", "left_semi"
+        )
+        for m in metas:
+            n = dead.where(
+                F.col("docid").between(m["docid_start"], m["docid_end"] - 1)
+            ).count()
+            if n != m["dead"]:
+                problems.append(
+                    f"segment {m['seq']}: {n} dead docids stored, "
+                    f"log counts {m['dead']}"
+                )
 
     # 4. live doc count == distinct docids
     live = idx.docs
