@@ -47,7 +47,7 @@ def _load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 
 
 def _doc_index(spark: SparkSession, sf_dir: str) -> SearchIndex:
-    """Build (once, checkpoint-resumable) the inverted index over the
+    """Build (once; an equal fingerprint skips it) the inverted index over the
     `documents` table with the oracle-exact whitespace_lower analyzer."""
     if sf_dir in _INDEXES:
         return _INDEXES[sf_dir]

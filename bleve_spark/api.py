@@ -198,13 +198,13 @@ class Index:
     # -- lifecycle -------------------------------------------------------
 
     def copy_to(self, dest_path: str):
-        """Online backup: copy the current log version and the segments
-        and dead files it references (ref: index.go:314-318 CopyTo; on
-        Iceberg this is a snapshot export). A flat-layout index copies
-        its table dirs wholesale."""
+        """Online backup: copy the current log version, the segments and
+        dead files it references, and the persisted mapping (ref:
+        index.go:314-318 CopyTo; on Iceberg this is a snapshot export)."""
         self._check_open()
-        snap = read_snapshot(self.index_path)
-        names = snap.files() if snap.segments else os.listdir(self.index_path)
+        names = read_snapshot(self.index_path).files()
+        if os.path.exists(self._mapping_path(self.index_path)):
+            names.append("_MAPPING.json")
         for name in names:
             src = os.path.join(self.index_path, name)
             dst = os.path.join(dest_path, name)

@@ -10,8 +10,10 @@ of batch-1000 + k-way merge, the plan is one declarative pipeline:
   docid-range block): the docid-range key IS the salt that defuses
   hot-term skew; every hot term spreads over ~N/2^shift reducers)-->
   delta+varint-compressed posting blocks with block-max metadata -->
-  parquet tables {docs, norms, postings, dictionary, fieldstats, stats}
-  + manifest lineage rows; every stage is checkpoint-resumable.
+  parquet tables {docs, analyzed, norms, postings, dictionary,
+  fieldstats} in one new segment dir, published by one commit of the
+  index's commit log (writer.py) — the same segment an IndexWriter
+  batch writes.
 
 Scale notes (100 TB / 1000 executors):
 - exactly one wide shuffle over the exploded term rows (the block groupBy);
@@ -42,7 +44,7 @@ from . import codec
 from .analysis.udfs import ANALYZED_ROW_SCHEMA, make_analyzed_rows_fn
 from .mapping import IndexMapping
 
-DEFAULT_BLOCK_SHIFT = 10  # docid-range span per posting block = 1024
+BLOCK_SHIFT = 10  # docid-range span per posting block = 1024
 
 BLOCK_ENC_TYPE = T.StructType(
     [
@@ -334,13 +336,17 @@ class BuildReport:
 
 
 class IndexBuilder:
-    """Builds the full index table set under ``index_path``.
+    """Builds a corpus into one segment of the commit log under
+    ``index_path`` (writer.py) and publishes it as one commit that
+    retires every segment the head held — the reference's offline
+    builder emits an ordinary segment set, not a second format
+    (ref: index/scorch/builder.go).
 
-    Tables: docs, norms, postings, dictionary, fieldstats, stats, manifest.
-    (Persisted as parquet; on a production cluster these map 1:1 onto
-    Iceberg tables where the atomic-commit/snapshot machinery replaces the
-    _STAGE markers — the reference's introducer/persister analogue,
-    /root/reference/index/scorch/introducer.go.)
+    Segment tables: docs, analyzed, norms, postings, dictionary,
+    fieldstats. (Persisted as parquet; on a production cluster these
+    map 1:1 onto Iceberg tables and the commit log onto its snapshot
+    log — the reference's introducer/persister analogue,
+    ref: index/scorch/introducer.go.)
     """
 
     def __init__(
@@ -348,42 +354,20 @@ class IndexBuilder:
         spark: SparkSession,
         mapping: IndexMapping,
         index_path: str,
-        block_shift: int = DEFAULT_BLOCK_SHIFT,
         tbuckets: int = DEFAULT_TBUCKETS,
     ):
         self.spark = spark
         self.mapping = mapping
         self.index_path = index_path
-        self.block_shift = block_shift
         # directory-level term pruning fanout; 0/1 disables partitioning
         self.tbuckets = int(tbuckets)
 
-    # -- stage plumbing ----------------------------------------------------
+    def _write(self, df: DataFrame, path: str, *partition_by: str):
+        df.write.partitionBy(*partition_by).mode("overwrite").parquet(path)
 
-    def _stage_dir(self, name: str) -> str:
-        return os.path.join(self.index_path, name)
-
-    def _marker(self, name: str) -> str:
-        return os.path.join(self.index_path, f"_STAGE_{name}.json")
-
-    def _stage_done(self, name: str, fingerprint: str) -> bool:
-        try:
-            with open(self._marker(name)) as f:
-                return json.load(f).get("fingerprint") == fingerprint
-        except (OSError, ValueError):
-            return False
-
-    def _mark_stage(self, name: str, fingerprint: Optional[str]):
-        if fingerprint is not None:  # None: resume=False, nothing resumes
-            with open(self._marker(name), "w") as f:
-                json.dump({"fingerprint": fingerprint, "stage": name}, f)
-
-    def _write(self, df: DataFrame, name: str):
-        df.write.mode("overwrite").parquet(self._stage_dir(name))
-
-    def _fine_splits(self, src_stage: str):
-        """Context manager: size input splits of `src_stage`'s files to
-        >= 4 tasks per core for the enclosed action, then restore the
+    def _fine_splits(self, src: str):
+        """Context manager: size input splits of the `src` table's files
+        to >= 4 tasks per core for the enclosed action, then restore the
         session default. The heavy pandas/shuffle stages want fine,
         balanced splits even over a modest intermediate table; query-time
         scans in the same session keep the coarse default so tiny lookups
@@ -393,10 +377,9 @@ class IndexBuilder:
 
         @contextlib.contextmanager
         def scoped():
-            d = self._stage_dir(src_stage)
             nbytes = sum(
-                os.path.getsize(os.path.join(d, f))
-                for f in os.listdir(d)
+                os.path.getsize(os.path.join(src, f))
+                for f in os.listdir(src)
                 if f.endswith(".parquet")
             )
             cores = self.spark.sparkContext.defaultParallelism
@@ -419,122 +402,149 @@ class IndexBuilder:
         id_expr=None,
         resume: bool = True,
         fingerprint: Optional[str] = None,
-        docid_offset: int = 0,
     ) -> BuildReport:
-        os.makedirs(self.index_path, exist_ok=True)
+        """Build `corpus` into a new segment and commit it in place of
+        every segment the head held. With `resume`, a build whose
+        fingerprint (by default: row count, columns and mapping) equals
+        that of the head's single segment, none of whose docs were
+        deleted since, publishes nothing."""
+        from .writer import IndexWriter, read_snapshot
+
+        base = read_snapshot(self.index_path)
         if not resume:
             fingerprint = None
         elif fingerprint is None:
-            fingerprint = f"n={corpus.count()};cols={sorted(corpus.columns)};shift={self.block_shift}"
-        report = BuildReport(self.index_path)
+            fingerprint = (
+                f"n={corpus.count()};cols={sorted(corpus.columns)};"
+                f"mapping={json.dumps(self.mapping.to_dict(), sort_keys=True)}"
+            )
+        built = [m.get("fingerprint") for m in base.segments.values()]
+        if fingerprint is not None and built == [fingerprint] and not base.dead:
+            report = BuildReport(self.index_path)
+        else:
+            report = IndexWriter(self.spark, self.mapping, self.index_path)._replace_all(
+                base, corpus, id_expr, self, fingerprint
+            )
+        # persist the mapping (the index_meta.json analogue) so tools
+        # reopening the index see the REAL mapping, not a preset guess
+        with open(os.path.join(self.index_path, "_MAPPING.json"), "w") as f:
+            json.dump(self.mapping.to_dict(), f)
+        return report
+
+    def write_tables(
+        self, corpus: DataFrame, id_expr, seg_dir: str, docid_start: int
+    ) -> BuildReport:
+        """Write the segment tables of `corpus` under `seg_dir`, docids
+        from `docid_start`; publishing the segment is the caller's."""
+        report = BuildReport(seg_dir)
         spark = self.spark
 
+        def at(name: str) -> str:
+            return os.path.join(seg_dir, name)
+
         # stage 1: docs (deterministic docids + stored plane) --------------
-        if not (resume and self._stage_done("docs", fingerprint)):
-            t0 = time.time()
-            if id_expr is None:
-                id_expr = F.col("_id")
-            # _id is always a string (bleve doc ids are strings;
-            # ref: index.go Index(id string, ...)). Casting here keeps
-            # _idh = xxhash64(string) consistent with document()'s
-            # xxhash64(lit(str(doc_id))) probe — xxhash64 over an int
-            # column hashes the raw long bytes and would never match.
-            keyed = corpus.withColumn("_id", id_expr.cast("string"))
-            # stored plane = the corpus columns themselves (docvalues
-            # too); _idh and the mapping-derived helper columns
-            # (geoshape __bbox, vector __buckets) are re-derived, never
-            # carried (rebuild inputs from compact()/merge include them
-            # — carrying __buckets would collide with the rename below)
-            derived = {
-                f"{fm.name}__bbox"
-                for fm in self.mapping.fields.values()
-                if fm.type == "geoshape"
-            } | {
-                f"{fm.name}__buckets"
-                for fm in self.mapping.fields.values()
-                if fm.type == "vector"
-            }
-            stored = [
-                c
-                for c in corpus.columns
-                if c not in ("_id", "_idh") and c not in derived
-            ]
-            # One content shuffle total: the whole corpus goes through the
-            # two-pass range ranking (sample -> range exchange on _id ->
-            # per-partition counts -> offset+local index). The output is
-            # _id/docid-sorted across 4-tasks-per-core partitions, so (a)
-            # the downstream analysis stage load-balances instead of
-            # inheriting the input's row-group layout, and (b) query-time
-            # stored-field fetches get row-group min/max pruning on docid.
-            out_parts = max(
-                4 * self.spark.sparkContext.defaultParallelism,
-                corpus.rdd.getNumPartitions(),
-            )
-            docs = assign_docids(
-                keyed, F.col("_id"), n_partitions=out_parts,
-                offset=docid_offset,
-            )
-            # backtick-quote: dotted-path field names (flattened nested
-            # fields, e.g. manages.reports) are plain column names here
-            sel = docs.select(
-                "docid",
-                "_id",
-                # _idh: stored-fetch pruning key. docs are written in
-                # (hash-bucket, _id) order, so row groups hold narrow
-                # _idh ranges; Document(id) filters on _idh and gets
-                # parquet min/max pruning that plain _id (hash-shuffled
-                # across the file) cannot provide
-                F.xxhash64(F.col("_id")).alias("_idh"),
-                *[F.col(f"`{c}`") for c in stored],
-            )
-            # geoshape fields get a bbox struct column — the native
-            # prefilter the query side prunes with (the s2
-            # covering-token analogue; see geoshape.py)
-            for fm in self.mapping.fields.values():
-                if fm.type == "geoshape" and fm.name in sel.columns:
-                    src_col = F.col(fm.name)
-                    if isinstance(
-                        sel.schema[fm.name].dataType, T.StructType
-                    ):
-                        src_col = F.to_json(src_col)
-                    sel = sel.withColumn(
-                        f"{fm.name}__bbox", _shape_bbox_udf(src_col)
+        t0 = time.time()
+        if id_expr is None:
+            id_expr = F.col("_id")
+        # _id is always a string (bleve doc ids are strings;
+        # ref: index.go Index(id string, ...)). Casting here keeps
+        # _idh = xxhash64(string) consistent with document()'s
+        # xxhash64(lit(str(doc_id))) probe — xxhash64 over an int
+        # column hashes the raw long bytes and would never match.
+        keyed = corpus.withColumn("_id", id_expr.cast("string"))
+        # stored plane = the corpus columns themselves (docvalues
+        # too); _idh and the mapping-derived helper columns
+        # (geoshape __bbox, vector __buckets) are re-derived, never
+        # carried (rebuild inputs from compact()/merge include them
+        # — carrying __buckets would collide with the rename below)
+        derived = {
+            f"{fm.name}__bbox"
+            for fm in self.mapping.fields.values()
+            if fm.type == "geoshape"
+        } | {
+            f"{fm.name}__buckets"
+            for fm in self.mapping.fields.values()
+            if fm.type == "vector"
+        }
+        stored = [
+            c
+            for c in corpus.columns
+            if c not in ("_id", "_idh") and c not in derived
+        ]
+        # One content shuffle total: the whole corpus goes through the
+        # two-pass range ranking (sample -> range exchange on _id ->
+        # per-partition counts -> offset+local index). The output is
+        # _id/docid-sorted across 4-tasks-per-core partitions, so (a)
+        # the downstream analysis stage load-balances instead of
+        # inheriting the input's row-group layout, and (b) query-time
+        # stored-field fetches get row-group min/max pruning on docid.
+        out_parts = max(
+            4 * self.spark.sparkContext.defaultParallelism,
+            corpus.rdd.getNumPartitions(),
+        )
+        docs = assign_docids(
+            keyed, F.col("_id"), n_partitions=out_parts, offset=docid_start,
+        )
+        # backtick-quote: dotted-path field names (flattened nested
+        # fields, e.g. manages.reports) are plain column names here
+        sel = docs.select(
+            "docid",
+            "_id",
+            # _idh: stored-fetch pruning key. docs are written in
+            # (hash-bucket, _id) order, so row groups hold narrow
+            # _idh ranges; Document(id) filters on _idh and gets
+            # parquet min/max pruning that plain _id (hash-shuffled
+            # across the file) cannot provide
+            F.xxhash64(F.col("_id")).alias("_idh"),
+            *[F.col(f"`{c}`") for c in stored],
+        )
+        # geoshape fields get a bbox struct column — the native
+        # prefilter the query side prunes with (the s2
+        # covering-token analogue; see geoshape.py)
+        for fm in self.mapping.fields.values():
+            if fm.type == "geoshape" and fm.name in sel.columns:
+                src_col = F.col(fm.name)
+                if isinstance(
+                    sel.schema[fm.name].dataType, T.StructType
+                ):
+                    src_col = F.to_json(src_col)
+                sel = sel.withColumn(
+                    f"{fm.name}__bbox", _shape_bbox_udf(src_col)
+                )
+            # vector fields get a precomputed multi-table LSH
+            # bucket column — the kNN route's native prefilter: at
+            # query time candidate selection is a JVM bitcount
+            # filter over these ints instead of a per-query matmul
+            # pass over every vector (BASELINE.md round-3 study)
+            if fm.type == "vector" and fm.name in sel.columns:
+                from .mapping import validate_vector_field
+                from .ops.similarity import lsh_bucket_tables
+
+                # normalize + validate here too: mappings built via
+                # IndexMapping(fields={...}) bypass add()'s check
+                validate_vector_field(fm)
+
+                # explicit dims wins (reference semantics); else
+                # infer as max over non-null rows, not first(): a
+                # null first row must not silently disable bucket
+                # persistence
+                d = fm.dims
+                if not d:
+                    row = corpus.agg(
+                        F.max(F.size(F.col(fm.name))).alias("d")
+                    ).first()
+                    if row is not None and row["d"] is not None:
+                        d = int(row["d"])
+                if d and d > 0:
+                    sel = lsh_bucket_tables(
+                        sel, d, vec_col=fm.name
+                    ).withColumnRenamed(
+                        "buckets", f"{fm.name}__buckets"
                     )
-                # vector fields get a precomputed multi-table LSH
-                # bucket column — the kNN route's native prefilter: at
-                # query time candidate selection is a JVM bitcount
-                # filter over these ints instead of a per-query matmul
-                # pass over every vector (BASELINE.md round-3 study)
-                if fm.type == "vector" and fm.name in sel.columns:
-                    from .mapping import validate_vector_field
-                    from .ops.similarity import lsh_bucket_tables
+        self._write(sel, at("docs"))
+        report.add("docs", _parquet_rows(at("docs")), (time.time() - t0) * 1e3)
 
-                    # normalize + validate here too: mappings built via
-                    # IndexMapping(fields={...}) bypass add()'s check
-                    validate_vector_field(fm)
-
-                    # explicit dims wins (reference semantics); else
-                    # infer as max over non-null rows, not first(): a
-                    # null first row must not silently disable bucket
-                    # persistence
-                    d = fm.dims
-                    if not d:
-                        row = corpus.agg(
-                            F.max(F.size(F.col(fm.name))).alias("d")
-                        ).first()
-                        if row is not None and row["d"] is not None:
-                            d = int(row["d"])
-                    if d and d > 0:
-                        sel = lsh_bucket_tables(
-                            sel, d, vec_col=fm.name
-                        ).withColumnRenamed(
-                            "buckets", f"{fm.name}__buckets"
-                        )
-            self._write(sel, "docs")
-            self._mark_stage("docs", fingerprint)
-            report.add("docs", _parquet_rows(self._stage_dir("docs")), (time.time() - t0) * 1e3)
-
-        docs = spark.read.parquet(self._stage_dir("docs"))
+        docs = spark.read.parquet(at("docs"))
 
         # stage 2: analyze (the expensive pandas-UDF pass) -----------------
         # ALL text fields analyzed in ONE mapInPandas pass over docs,
@@ -545,187 +555,138 @@ class IndexBuilder:
         # composite (ref document/field_composite.go:103-131) is merged
         # in the same pass. Norms ride along as term=NULL marker rows.
         text_fields = self.mapping.text_fields()
-        if not (resume and self._stage_done("analyzed", fingerprint)):
-            t0 = time.time()
-            # dotted-path fields ride through mapInPandas under shielded
-            # column names; postings keep the user-facing dotted name
-            safe = {
-                c: c.replace(".", "\x01") for c in docs.columns if "." in c
-            }
-            docs_in = docs.withColumnsRenamed(safe) if safe else docs
-            field_analyzers = [
-                (
-                    safe.get(fm.name, fm.name),
-                    self.mapping.analyzer_for(fm.name),
-                    fm.name,
-                )
-                for fm in text_fields
-            ]
-            compose = (
-                frozenset(
-                    fm.name for fm in text_fields if fm.include_in_all
-                )
-                if self.mapping.compose_all
-                else None
+        t0 = time.time()
+        # dotted-path fields ride through mapInPandas under shielded
+        # column names; postings keep the user-facing dotted name
+        safe = {
+            c: c.replace(".", "\x01") for c in docs.columns if "." in c
+        }
+        docs_in = docs.withColumnsRenamed(safe) if safe else docs
+        field_analyzers = [
+            (
+                safe.get(fm.name, fm.name),
+                self.mapping.analyzer_for(fm.name),
+                fm.name,
             )
-            analyzed = docs_in.mapInPandas(
-                make_analyzed_rows_fn(field_analyzers, compose),
-                ANALYZED_ROW_SCHEMA,
+            for fm in text_fields
+        ]
+        compose = (
+            frozenset(
+                fm.name for fm in text_fields if fm.include_in_all
             )
-            with self._fine_splits("docs"):
-                self._write(analyzed, "analyzed")
-            self._mark_stage("analyzed", fingerprint)
-            report.add(
-                "analyzed",
-                _parquet_rows(self._stage_dir("analyzed")),
-                (time.time() - t0) * 1e3,
-            )
+            if self.mapping.compose_all
+            else None
+        )
+        analyzed = docs_in.mapInPandas(
+            make_analyzed_rows_fn(field_analyzers, compose),
+            ANALYZED_ROW_SCHEMA,
+        )
+        with self._fine_splits(at("docs")):
+            self._write(analyzed, at("analyzed"))
+        report.add(
+            "analyzed", _parquet_rows(at("analyzed")), (time.time() - t0) * 1e3
+        )
 
-        analyzed = spark.read.parquet(self._stage_dir("analyzed"))
+        analyzed = spark.read.parquet(at("analyzed"))
 
         # stage 3: norms (the term=NULL marker rows) -----------------------
-        if not (resume and self._stage_done("norms", fingerprint)):
-            t0 = time.time()
-            # float32 norm, as the reference stores it
-            # (/root/reference/index/upsidedown/upsidedown.go:608-609)
-            norms = analyzed.where(F.col("term").isNull()).select(
-                "docid",
-                "field",
-                "length",
-                (
-                    F.lit(1.0) / F.sqrt(F.greatest(F.col("length"), F.lit(1)))
-                ).cast("float").alias("norm"),
-            )
-            with self._fine_splits("analyzed"):
-                self._write(norms, "norms")
-            self._mark_stage("norms", fingerprint)
-            report.add("norms", _parquet_rows(self._stage_dir("norms")), (time.time() - t0) * 1e3)
+        t0 = time.time()
+        # float32 norm, as the reference stores it
+        # (ref: index/upsidedown/upsidedown.go:608-609)
+        norms = analyzed.where(F.col("term").isNull()).select(
+            "docid",
+            "field",
+            "length",
+            (
+                F.lit(1.0) / F.sqrt(F.greatest(F.col("length"), F.lit(1)))
+            ).cast("float").alias("norm"),
+        )
+        with self._fine_splits(at("analyzed")):
+            self._write(norms, at("norms"))
+        report.add("norms", _parquet_rows(at("norms")), (time.time() - t0) * 1e3)
 
         # stage 4: postings blocks -----------------------------------------
-        if not (resume and self._stage_done("postings", fingerprint)):
-            t0 = time.time()
-            rows = analyzed.where(F.col("term").isNotNull())
+        t0 = time.time()
+        rows = analyzed.where(F.col("term").isNotNull())
 
-            # ONE wide shuffle: hash-partition by (field, term, BLOCK) —
-            # the docid-range block key IS the salt that defuses hot-term
-            # skew (module docstring): a df≈N term's postings spread over
-            # ~N/2^shift reducers instead of landing on one. Each
-            # (field, term, block) group is complete within its partition
-            # (hash on all three keys), so the streaming encoder emits
-            # exactly one posting row per group; scan pruning comes from
-            # the tbucket directory layout + row-group min/max, not from
-            # file contiguity.
-            nbuckets = int(self.spark.conf.get("spark.sql.shuffle.partitions"))
-            sorted_rows = (
-                rows.withColumn(
-                    "block", F.shiftright(F.col("docid"), self.block_shift)
-                )
-                .repartition(nbuckets, "field", "term", "block")
-                .sortWithinPartitions("field", "term", "block", "docid")
+        # ONE wide shuffle: hash-partition by (field, term, BLOCK) —
+        # the docid-range block key IS the salt that defuses hot-term
+        # skew (module docstring): a df≈N term's postings spread over
+        # ~N/2^shift reducers instead of landing on one. Each
+        # (field, term, block) group is complete within its partition
+        # (hash on all three keys), so the streaming encoder emits
+        # exactly one posting row per group; scan pruning comes from
+        # the tbucket directory layout + row-group min/max, not from
+        # file contiguity.
+        nbuckets = int(self.spark.conf.get("spark.sql.shuffle.partitions"))
+        sorted_rows = (
+            rows.withColumn("block", F.shiftright(F.col("docid"), BLOCK_SHIFT))
+            .repartition(nbuckets, "field", "term", "block")
+            .sortWithinPartitions("field", "term", "block", "docid")
+        )
+        blocks = sorted_rows.mapInPandas(
+            _encode_sorted_stream, POSTINGS_SCHEMA
+        )
+        pdir = at("postings")
+        if self.tbuckets > 1:
+            # directory-level pruning: partition the (few) encoded
+            # block rows by term bucket. The local re-sort puts
+            # tbucket first so the dynamic-partition writer's
+            # required ordering is already satisfied (no extra
+            # sort) and files stay (field, term)-sorted within each
+            # bucket for row-group min/max skipping.
+            blocks = blocks.withColumn(
+                "tbucket",
+                tbucket_col(F.col("field"), F.col("term"), self.tbuckets),
+            ).sortWithinPartitions("tbucket", "field", "term", "block")
+            with self._fine_splits(at("analyzed")):
+                self._write(blocks, pdir, "tbucket")
+            wrote_any = any(
+                f.endswith(".parquet")
+                for _r, _d, fs in os.walk(pdir)
+                for f in fs
             )
-            blocks = sorted_rows.mapInPandas(
-                _encode_sorted_stream, POSTINGS_SCHEMA
-            )
-            if self.tbuckets > 1:
-                # directory-level pruning: partition the (few) encoded
-                # block rows by term bucket. The local re-sort puts
-                # tbucket first so the dynamic-partition writer's
-                # required ordering is already satisfied (no extra
-                # sort) and files stay (field, term)-sorted within each
-                # bucket for row-group min/max skipping.
-                blocks = blocks.withColumn(
-                    "tbucket",
-                    tbucket_col(F.col("field"), F.col("term"), self.tbuckets),
-                ).sortWithinPartitions("tbucket", "field", "term", "block")
-                with self._fine_splits("analyzed"):
-                    blocks.write.partitionBy("tbucket").mode(
-                        "overwrite"
-                    ).parquet(self._stage_dir("postings"))
-                pdir = self._stage_dir("postings")
-                wrote_any = any(
-                    f.endswith(".parquet")
-                    for _r, _d, fs in os.walk(pdir)
-                    for f in fs
-                )
-                if wrote_any:
-                    with open(
-                        os.path.join(pdir, TBUCKETS_MARKER), "w"
-                    ) as f:
-                        json.dump({"n_tbuckets": self.tbuckets}, f)
-                else:
-                    # empty postings (vector/geo/numeric-only index): a
-                    # partitionBy write of 0 rows emits NO files, which
-                    # a later read cannot infer a schema from — write
-                    # the flat empty parquet (one 0-row footer file)
-                    # and no marker, like a pre-tbucket index
-                    spark.createDataFrame([], POSTINGS_SCHEMA).write.mode(
-                        "overwrite"
-                    ).parquet(pdir)
+            if wrote_any:
+                with open(os.path.join(pdir, TBUCKETS_MARKER), "w") as f:
+                    json.dump({"n_tbuckets": self.tbuckets}, f)
             else:
-                with self._fine_splits("analyzed"):
-                    blocks.write.mode("overwrite").parquet(
-                        self._stage_dir("postings")
-                    )
-            self._mark_stage("postings", fingerprint)
-            report.add("postings", _parquet_rows(self._stage_dir("postings")), (time.time() - t0) * 1e3)
+                # empty postings (vector/geo/numeric-only index): a
+                # partitionBy write of 0 rows emits NO files, which
+                # a later read cannot infer a schema from — write
+                # the flat empty parquet (one 0-row footer file)
+                # and no marker, like a pre-tbucket index
+                self._write(spark.createDataFrame([], POSTINGS_SCHEMA), pdir)
+        else:
+            with self._fine_splits(at("analyzed")):
+                self._write(blocks, pdir)
+        report.add("postings", _parquet_rows(pdir), (time.time() - t0) * 1e3)
 
-        postings = spark.read.parquet(self._stage_dir("postings"))
+        postings = spark.read.parquet(pdir)
 
-        # stage 4: dictionary (from block rows — small relative to terms) --
-        if not (resume and self._stage_done("dictionary", fingerprint)):
-            t0 = time.time()
-            dictionary = postings.groupBy("field", "term").agg(
-                F.sum("df_block").alias("df"), F.sum("cf_block").alias("cf")
-            )
-            (
-                dictionary.repartition(8, "field")
-                .sortWithinPartitions("field", "term")
-                .write.mode("overwrite")
-                .parquet(self._stage_dir("dictionary"))
-            )
-            self._mark_stage("dictionary", fingerprint)
-            report.add("dictionary", _parquet_rows(self._stage_dir("dictionary")), (time.time() - t0) * 1e3)
+        # stage 5: dictionary (from block rows — small relative to terms) --
+        t0 = time.time()
+        dictionary = postings.groupBy("field", "term").agg(
+            F.sum("df_block").alias("df"), F.sum("cf_block").alias("cf")
+        )
+        self._write(
+            dictionary.repartition(8, "field").sortWithinPartitions("field", "term"),
+            at("dictionary"),
+        )
+        report.add(
+            "dictionary", _parquet_rows(at("dictionary")), (time.time() - t0) * 1e3
+        )
 
-        # stage 5: field stats + global stats ------------------------------
-        if not (resume and self._stage_done("stats", fingerprint)):
-            t0 = time.time()
-            norms = spark.read.parquet(self._stage_dir("norms"))
-            fieldstats = norms.groupBy("field").agg(
-                F.count("*").alias("doc_count"),
-                F.sum("length").alias("total_len"),
-                F.avg("length").alias("avg_len"),
-            )
-            self._write(fieldstats.coalesce(1), "fieldstats")
-            stats = docs.agg(F.count("*").alias("doc_count"))
-            self._write(stats.coalesce(1), "stats")
-            self._mark_stage("stats", fingerprint)
-            report.add("stats", 1, (time.time() - t0) * 1e3)
-
-        # manifest lineage --------------------------------------------------
-        self._append_manifest(report)
-        # persist the mapping (the index_meta.json analogue) so tools
-        # reopening the index see the REAL mapping, not a preset guess.
-        # Segment builds (writer passes .../segments/seg-*) skip this —
-        # the mapping belongs to the index root, which the Index facade
-        # persists itself.
-        if os.path.basename(os.path.dirname(self.index_path)) != "segments":
-            meta = os.path.join(self.index_path, "_MAPPING.json")
-            # Overwrite on every successful build: the file is derived
-            # from self.mapping, and an in-place rebuild with a changed
-            # mapping must not leave a stale copy that cmd_mapping and a
-            # mapping-less reopen (Index._load_mapping) would trust.
-            import json as _json
-
-            with open(meta, "w") as f:
-                _json.dump(self.mapping.to_dict(), f)
+        # stage 6: field stats (doc count and docid range come from the
+        # commit log) -------------------------------------------------------
+        t0 = time.time()
+        fieldstats = spark.read.parquet(at("norms")).groupBy("field").agg(
+            F.count("*").alias("doc_count"),
+            F.sum("length").alias("total_len"),
+            F.avg("length").alias("avg_len"),
+        )
+        self._write(fieldstats.coalesce(1), at("fieldstats"))
+        report.add("stats", 1, (time.time() - t0) * 1e3)
         return report
-
-    def _append_manifest(self, report: BuildReport):
-        if not report.stages:
-            return
-        pdf = pd.DataFrame(report.stages)
-        sdf = self.spark.createDataFrame(pdf)
-        sdf.coalesce(1).write.mode("append").parquet(self._stage_dir("manifest"))
 
 
 def drop_index(index_path: str):

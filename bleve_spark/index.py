@@ -136,10 +136,8 @@ def _decode_blocks_iter(batches, need_positions: bool):
 
 
 class SearchIndex:
-    """Read-side snapshot handle. Works over both layouts: the flat
-    single-build table set, and the segmented layout written by
-    IndexWriter — in which case tables are unioned across the segments
-    of one committed log version and dead docids are masked, the
+    """Read-side snapshot handle: the tables of the segments of one
+    committed log version, unioned, with dead docids masked — the
     IndexSnapshot + deleted-bitmap analogue
     (ref: index/scorch/snapshot_index.go:81, README.md:108-133). A new
     SearchIndex instance = a new MVCC snapshot."""
@@ -151,7 +149,7 @@ class SearchIndex:
         mapping: Optional[IndexMapping] = None,
         version: Optional[int] = None,
     ):
-        """Pins the latest committed version of a segmented index, or
+        """Pins the latest committed version of the index, or
         `version` — read-only time travel (ref: index/scorch/rollback.go).
         A version whose segments were merged away raises ValueError."""
         from .writer import read_snapshot
@@ -163,24 +161,26 @@ class SearchIndex:
         self._seg_metas = self._snap.metas()
 
     def _table(self, name: str) -> DataFrame:
-        if self._seg_metas:
-            paths = [os.path.join(m["dir"], name) for m in self._seg_metas]
-            if name == "postings" and len(paths) > 1:
-                # each segment's postings dir is its own partitionBy
-                # (tbucket) root: a single multi-path read would try to
-                # discover ONE partition scheme across conflicting roots
-                # (CONFLICTING_DIRECTORY_STRUCTURES). Per-root scans
-                # unioned keep per-scan partition pruning; tiered merging
-                # bounds the segment count, so the union stays small.
-                from functools import reduce
+        paths = [os.path.join(m["dir"], name) for m in self._seg_metas]
+        if not paths:
+            raise ValueError(
+                f"{self.index_path} has no committed segment to read {name!r} from"
+            )
+        if name == "postings" and len(paths) > 1:
+            # each segment's postings dir is its own partitionBy
+            # (tbucket) root: a single multi-path read would try to
+            # discover ONE partition scheme across conflicting roots
+            # (CONFLICTING_DIRECTORY_STRUCTURES). Per-root scans
+            # unioned keep per-scan partition pruning; tiered merging
+            # bounds the segment count, so the union stays small.
+            from functools import reduce
 
-                dfs = [self.spark.read.parquet(p) for p in paths]
-                return reduce(
-                    lambda a, b: a.unionByName(b, allowMissingColumns=True),
-                    dfs,
-                )
-            return self.spark.read.parquet(*paths)
-        return self.spark.read.parquet(os.path.join(self.index_path, name))
+            dfs = [self.spark.read.parquet(p) for p in paths]
+            return reduce(
+                lambda a, b: a.unionByName(b, allowMissingColumns=True),
+                dfs,
+            )
+        return self.spark.read.parquet(*paths)
 
     @cached_property
     def deleted_docids(self) -> Optional[DataFrame]:
@@ -208,17 +208,12 @@ class SearchIndex:
         depends on the layout."""
         import json as _json
 
-        dirs = (
-            [os.path.join(m["dir"], "postings") for m in self._seg_metas]
-            if self._seg_metas
-            else [os.path.join(self.index_path, "postings")]
-        )
         from .build import TBUCKETS_MARKER
 
         ns = set()
-        for d in dirs:
+        for m in self._seg_metas:
             try:
-                with open(os.path.join(d, TBUCKETS_MARKER)) as f:
+                with open(os.path.join(m["dir"], "postings", TBUCKETS_MARKER)) as f:
                     ns.add(int(_json.load(f)["n_tbuckets"]))
             except (OSError, ValueError, KeyError):
                 return None
@@ -243,13 +238,11 @@ class SearchIndex:
     @cached_property
     def doc_count(self) -> int:
         """Global N, live docs only (single-index semantics — the
-        reference parity target, SURVEY.md §2.6 per-shard IDF caveat)."""
-        if self._seg_metas:
-            return sum(
-                m["docid_end"] - m["docid_start"] - m["dead"]
-                for m in self._seg_metas
-            )
-        return int(self._table("stats").collect()[0]["doc_count"])
+        reference parity target, SURVEY.md §2.6 per-shard IDF caveat),
+        from the commit log."""
+        return sum(
+            m["docid_end"] - m["docid_start"] - m["dead"] for m in self._seg_metas
+        )
 
     @cached_property
     def field_stats(self) -> Dict[str, dict]:

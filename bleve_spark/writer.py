@@ -10,7 +10,7 @@ and maybe_merge()/compact() are the merger (index/scorch/merge.go).
 Layout under index_path:
     _log/<version, 20 digits>.json   commit 0, 1, ...: the only record of
                                      what the index holds
-    segments/seg-00000-<token>/      full table set (IndexBuilder output)
+    segments/seg-00000-<token>/      one segment's tables (IndexBuilder)
     dead/<token>.parquet             dead docids (docid long)
 
 A commit is a JSON list of one-key actions: add_segment {seq, dir,
@@ -20,8 +20,11 @@ Replaying commits 0..v gives snapshot v (the IndexSnapshot analogue,
 index/scorch/snapshot_index.go:81). A commit is published put-if-absent
 (temp file, then os.link), so a crash leaves the old snapshot or the new
 one and a writer that lost a race raises. It then deletes every segment
-dir and dead file the new head does not reference. Docids are never
-reused: a segment starts where the highest range committed so far ended.
+dir and dead file the new head does not reference, except that a commit
+replacing every segment (IndexBuilder.build, compact()) leaves the files
+it retired to the next commit, so a reader opened before it keeps
+answering. Docids are never reused: a segment starts where the highest
+range committed so far ended.
 
 Visibility rule: a doc is dead iff a dead file of the snapshot names its
 docid. Upsert and delete resolve `_id`s to the live docids of committed
@@ -194,8 +197,8 @@ def _restorable(snaps: List[Snapshot]) -> Dict[int, Snapshot]:
 
 
 def read_snapshot(index_path: str, version: Optional[int] = None) -> Snapshot:
-    """The head of the log, or `version`. Without a log (the flat
-    single-build layout) the snapshot is empty."""
+    """The head of the log, or `version`. A path with no commit reads
+    as the empty snapshot, version -1."""
     snaps = _replay(index_path)
     if version is None:
         return snaps[-1] if snaps else Snapshot(index_path)
@@ -226,16 +229,36 @@ class IndexWriter:
 
     # -- internals -------------------------------------------------------
 
-    def _build_segment(self, df: DataFrame, id_expr, seq: int, start: int):
-        """Build `df` into a new segment dir at docid `start`; returns
-        its add_segment body and the build report."""
+    def _build_segment(
+        self, df: DataFrame, id_expr, seq: int, start: int,
+        builder: Optional[IndexBuilder] = None,
+    ):
+        """Build `df` into a new segment dir at docid `start` with
+        `builder` (default: a default IndexBuilder); returns its
+        add_segment body and the build report."""
         rel = os.path.join("segments", f"{SEG_PREFIX}{seq:05d}-{uuid.uuid4().hex[:8]}")
         seg_dir = os.path.join(self.index_path, rel)
-        report = IndexBuilder(self.spark, self.mapping, seg_dir).build(
-            df, id_expr=id_expr, resume=False, docid_offset=start
-        )
+        builder = builder or IndexBuilder(self.spark, self.mapping, self.index_path)
+        report = builder.write_tables(df, id_expr, seg_dir, start)
         end = start + _parquet_rows(os.path.join(seg_dir, "docs"))
         return {"seq": seq, "dir": rel, "docid_start": start, "docid_end": end}, report
+
+    def _replace_all(
+        self, base: Snapshot, df: DataFrame, id_expr=None,
+        builder: Optional[IndexBuilder] = None,
+        fingerprint: Optional[str] = None,
+    ) -> BuildReport:
+        """Build `df` into one new segment and publish one commit that
+        retires every segment of `base`: the bulk build and compact().
+        The retired files outlive this commit's cleanup."""
+        seg, report = self._build_segment(
+            df, id_expr, base.next_seq, base.next_docid, builder
+        )
+        if fingerprint is not None:
+            seg["fingerprint"] = fingerprint
+        removes = [{"remove_segment": {"seq": s}} for s in base.segments]
+        self._commit(base, removes + [{"add_segment": seg}], keep=frozenset(base.refs))
+        return report
 
     def _kill(self, idx, ids) -> List[dict]:
         """The add_dead action for the live docids of snapshot `idx`
@@ -264,8 +287,11 @@ class IndexWriter:
                 counts[str(seq)] = int(hi - lo)
         return [{"add_dead": {"path": rel, "counts": counts}}]
 
-    def _commit(self, base: Snapshot, actions: List[dict]) -> None:
-        """Publish `actions` as the version after `base`, put-if-absent."""
+    def _commit(
+        self, base: Snapshot, actions: List[dict], keep: frozenset = frozenset()
+    ) -> None:
+        """Publish `actions` as the version after `base`, put-if-absent;
+        the cleanup spares the relative paths in `keep`."""
         os.makedirs(os.path.join(self.index_path, LOG_DIR), exist_ok=True)
         tmp = os.path.join(self.index_path, LOG_DIR, f".tmp-{uuid.uuid4().hex}")
         try:
@@ -281,12 +307,13 @@ class IndexWriter:
             ) from None
         finally:
             os.remove(tmp)
-        self._remove_orphans()
+        self._remove_orphans(keep)
 
-    def _remove_orphans(self) -> None:
-        """Delete every segment dir and dead file the head does not
-        reference: retired or rolled back, or left by a crashed call."""
-        keep = read_snapshot(self.index_path).refs
+    def _remove_orphans(self, keep: frozenset = frozenset()) -> None:
+        """Delete every segment dir and dead file neither the head nor
+        `keep` references: retired or rolled back, or left by a crashed
+        call."""
+        keep = read_snapshot(self.index_path).refs | keep
         for sub in ("segments", DEAD_DIR):
             root = os.path.join(self.index_path, sub)
             for name in sorted(os.listdir(root)) if os.path.isdir(root) else []:
@@ -312,8 +339,6 @@ class IndexWriter:
     def delete(self, ids) -> None:
         """Mark every live version of `ids` dead (ref: index.go:85-89)."""
         idx = SearchIndex(self.spark, self.index_path, self.mapping)
-        if not idx._snap.segments:
-            raise ValueError(f"{self.index_path} has no IndexWriter segments")
         if isinstance(ids, DataFrame):
             ids = ids.select(F.col(ids.columns[0]).cast("string").alias("_id"))
         else:
@@ -376,10 +401,4 @@ class IndexWriter:
         the merger/mergeplan analogue collapsed to a single tier
         (ref: index/scorch/merge.go, mergeplan/merge_plan.go:67-135)."""
         idx = searcher_index or SearchIndex(self.spark, self.index_path, self.mapping)
-        base = idx._snap
-        seg, report = self._build_segment(
-            idx.docs.drop("docid"), F.col("_id"), base.next_seq, base.next_docid
-        )
-        removes = [{"remove_segment": {"seq": s}} for s in base.segments]
-        self._commit(base, removes + [{"add_segment": seg}])
-        return report
+        return self._replace_all(idx._snap, idx.docs.drop("docid"), F.col("_id"))

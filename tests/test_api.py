@@ -77,6 +77,25 @@ def test_delete_and_copy_to(spark, ix):
     assert res.hits.collect() == []
 
 
+def test_delete_on_bulk_built_index(spark, tmp_path):
+    from bleve_spark import IndexBuilder
+
+    path = str(tmp_path / "bulk")
+    m = IndexMapping(default_analyzer="standard", compose_all=True)
+    m.add(FieldMapping("body"))
+    docs = spark.createDataFrame(
+        [("a", "red fox"), ("b", "blue cow")], ["_id", "body"]
+    )
+    IndexBuilder(spark, m, path).build(docs)
+    ix = Index(spark, path)  # the mapping the build persisted
+    ix.delete("a")
+    assert ix.doc_count() == 1
+    res = ix.search(
+        SearchRequest(query=parse_query({"field": "body", "term": "fox"}))
+    )
+    assert res.hits.collect() == []
+
+
 def test_close(ix):
     ix.close()
     with pytest.raises(RuntimeError):

@@ -110,6 +110,34 @@ def test_cli_check_clean_and_corrupt(cli_index, capsys):
     assert "PROBLEM" in out
 
 
+def test_cli_build_publishes_one_commit(spark, capsys):
+    from bleve_spark.corpus import generate_corpus
+
+    corpus = f"{BASE}/build-corpus"
+    spark.createDataFrame(
+        generate_corpus(40).drop(columns=["content_sha256"])
+    ).write.mode("overwrite").parquet(corpus)
+    idx_path = f"{BASE}/built"
+    shutil.rmtree(idx_path, ignore_errors=True)
+    build = ["build", "--corpus", corpus, "--index", idx_path]
+
+    def versions():
+        return sorted(os.listdir(f"{idx_path}/_log"))
+
+    out = run_cli(capsys, *build)
+    assert json.loads(out.splitlines()[-1])["stages"]
+    assert len(versions()) == 1
+    assert sorted(os.listdir(idx_path)) == ["_MAPPING.json", "_log", "segments"]
+    # the same build again is already done; --no-resume rebuilds
+    out = run_cli(capsys, *build)
+    assert json.loads(out.splitlines()[-1])["stages"] == []
+    assert len(versions()) == 1
+    run_cli(capsys, *build, "--no-resume")
+    assert len(versions()) == 2
+    out = run_cli(capsys, "check", "--index", idx_path, "--count", "2")
+    assert json.loads(out.splitlines()[-1]) == {"problems": 0, "segments": 1}
+
+
 def test_cli_mapping(cli_index, capsys):
     out = run_cli(capsys, "mapping", "--index", cli_index)
     m = json.loads(out)

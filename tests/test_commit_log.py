@@ -1,8 +1,9 @@
-"""The segmented index's commit log: each IndexWriter call publishes one
-commit, a crash at any step of a call leaves either the state before it
-or the state after it, and an open SearchIndex keeps answering from the
-version it pinned (ref: index/scorch/snapshot_index.go:81 — one immutable
-snapshot per introduced segment set)."""
+"""The index's commit log: each IndexWriter call and each bulk build
+publishes one commit, a crash at any step of a call leaves either the
+state before it or the state after it, and an open SearchIndex keeps
+answering from the version it pinned (ref:
+index/scorch/snapshot_index.go:81 — one immutable snapshot per
+introduced segment set)."""
 
 import os
 import shutil
@@ -135,6 +136,15 @@ OPS = {
         "build",
     ),
     "compact": (lambda spark, w: w.compact(), MODEL, 1, "build"),
+    # a bulk build of other docs over the base replaces all of it
+    "build": (
+        lambda spark, w: IndexBuilder(spark, _mapping(), w.index_path).build(
+            _df(spark, NEW), id_expr=F.col("id")
+        ),
+        NEW,
+        1,
+        "build",
+    ),
     "rollback": (lambda spark, w: w.rollback(0), BATCH_A, 1, "log"),
 }
 
@@ -175,8 +185,8 @@ def _inject(monkeypatch, point, files):
                 raise Injected("at cleanup")
             real_rmtree(*args, **kwargs)
 
-        def cleanup(self):
-            real_cleanup(self)
+        def cleanup(self, *args):
+            real_cleanup(self, *args)
             raise Injected("at cleanup end")
 
         monkeypatch.setattr(W.os, "link", publish(os.link))
@@ -230,3 +240,27 @@ def test_open_reader_keeps_its_version(spark, base):
     with pytest.raises(ValueError, match="merged away"):
         SearchIndex(spark, path, _mapping(), version=pinned._snap.version)
     assert _state(SearchIndex(spark, path, _mapping())) == _expected(post)
+
+
+def test_open_reader_keeps_its_hits_across_a_rebuild(spark, base):
+    path = _copy(base, "rebuild")
+    pinned = SearchIndex(spark, path, _mapping())  # not read until after
+    read = SearchIndex(spark, path, _mapping())
+    assert _state(read) == _expected(MODEL)
+    IndexBuilder(spark, _mapping(), path).build(
+        _df(spark, NEW), id_expr=F.col("id")
+    )
+    for idx in (pinned, read):
+        assert _state(idx) == _expected(MODEL)
+    assert _state(SearchIndex(spark, path, _mapping())) == _expected(NEW)
+    # the build's files are all the head holds once the next commit ran
+    IndexWriter(spark, _mapping(), path).delete(["no-such-id"])
+    assert _unreferenced(path) == set()
+
+
+def test_path_with_no_commit_reads_as_empty(spark, tmp_path):
+    path = str(tmp_path / "never-built")
+    idx = SearchIndex(spark, path, _mapping())
+    assert idx.doc_count == 0
+    with pytest.raises(ValueError, match="never-built"):
+        idx.docs

@@ -11,7 +11,9 @@
 3. n_planes / bits_per_band int32 guards — >=32 planes would wrap the
    int32 bucket id silently.
 4. _MAPPING.json is overwritten on rebuild, so an in-place rebuild with
-   a changed mapping can't leave a stale persisted mapping.
+   a changed mapping can't leave a stale persisted mapping; and the
+   default build fingerprint covers the mapping, so that rebuild is not
+   skipped as already done.
 """
 
 import json
@@ -282,3 +284,30 @@ def test_mapping_json_overwritten_on_rebuild(spark, tmp_path):
         second = json.load(f)
     assert first != second
     assert second == m2.to_dict()
+
+
+def test_default_fingerprint_covers_the_mapping(spark, tmp_path):
+    from bleve_spark import SearchIndex, Searcher, SearchRequest
+    from bleve_spark import query as Q
+
+    path = str(tmp_path / "idx")
+    docs = spark.createDataFrame(
+        [(1, "alpha beta"), (2, "beta gamma")], "doc_id long, text string"
+    )
+    for analyzer in ("standard", "keyword"):
+        m = IndexMapping().add(
+            FieldMapping(name="text", type="text", analyzer=analyzer)
+        )
+        IndexBuilder(spark, m, path).build(
+            docs, id_expr=F.col("doc_id").cast("string")
+        )
+
+    def hits(term):
+        res = Searcher(SearchIndex(spark, path, m)).search(
+            SearchRequest(query=Q.TermQuery(field="text", term=term))
+        )
+        return sorted(r["_id"] for r in res.hits.collect())
+
+    # the keyword analyzer indexed each whole value as one term
+    assert hits("alpha beta") == ["1"]
+    assert hits("beta") == []

@@ -76,8 +76,9 @@ def test_partition_filter_in_plan_and_file_listing(spark, tmp_path):
     b = tbucket_of("body", "alpha", 8)
     assert f"tbucket" in plan and f"= {b})" in plan
     # the layout actually splits files across bucket dirs
-    total = len(glob.glob(f"{path}/postings/tbucket=*/*.parquet"))
-    in_bucket = len(glob.glob(f"{path}/postings/tbucket={b}/*.parquet"))
+    seg = idx._seg_metas[0]["dir"]
+    total = len(glob.glob(f"{seg}/postings/tbucket=*/*.parquet"))
+    in_bucket = len(glob.glob(f"{seg}/postings/tbucket={b}/*.parquet"))
     assert 0 < in_bucket < total
     # multi-term lookups take the union of their buckets
     blocks2 = idx.blocks("body", ["alpha", "beta"])

@@ -18,11 +18,13 @@ Then submit against any cluster (YARN/k8s/standalone/local):
         --query '{"match": "parse index stream", "field": "content"}' \
         --similarity bm25 --size 10
 
-The build is checkpoint-resumable: re-submitting the same build command
-skips completed stages via the per-stage fingerprint markers and appends
-per-stage lineage/metrics rows to the index's ``manifest`` table
-(bleve_spark/build.py). Build, ingest and query timings come from the
-benchmark, ``python3 perfbench/run.py`` (perfbench/README.md).
+A build writes one segment and publishes it as one commit of the index's
+commit log (bleve_spark/build.py, bleve_spark/writer.py), retiring what
+the index held. Re-submitting the same build command publishes nothing:
+the build's fingerprint (row count, columns, mapping) is logged with its
+segment; ``--no-resume`` rebuilds regardless. Build, ingest and query
+timings come from the benchmark, ``python3 perfbench/run.py``
+(perfbench/README.md).
 """
 
 from __future__ import annotations
@@ -226,7 +228,7 @@ def cmd_dump(args):
     from pyspark.sql import functions as F
 
     from bleve_spark import Index, SearchIndex
-    from bleve_spark.build import DEFAULT_BLOCK_SHIFT
+    from bleve_spark.build import BLOCK_SHIFT
     from bleve_spark.writer import segment_metas
 
     spark = _session(args)
@@ -246,7 +248,7 @@ def cmd_dump(args):
             .collect()
         )
         docid = row[0]["docid"]
-        block = docid >> DEFAULT_BLOCK_SHIFT
+        block = docid >> BLOCK_SHIFT
         for fld in sorted(reader.field_stats):
             blocks = reader.postings.where(
                 (F.col("field") == fld) & (F.col("block") == block)
