@@ -143,7 +143,10 @@ def _streamed_doc_index(spark: SparkSession, sf_dir: str) -> SearchIndex:
     streaming.py stream_index) instead of the offline builder. The
     corpus is staged as 4 parquet files and ingested with
     maxFilesPerTrigger=1, so the index genuinely accretes across 4
-    micro-batches; the checkpoint makes re-runs exactly-once."""
+    micro-batches; the checkpoint makes re-runs exactly-once. `_DONE`
+    holds the corpus row count, the fingerprint `_doc_index` uses: a
+    corpus regenerated at the same `sf_dir` with another count is
+    ingested afresh."""
     if sf_dir in _STREAMED:
         return _STREAMED[sf_dir]
     import shutil
@@ -158,7 +161,12 @@ def _streamed_doc_index(spark: SparkSession, sf_dir: str) -> SearchIndex:
     ckpt = os.path.join(base, "ckpt")
     docs = _load(spark, sf_dir, "documents")
     marker = os.path.join(base, "_DONE")
-    if not os.path.exists(marker):
+    n_docs = str(docs.count())
+    done = None
+    if os.path.exists(marker):
+        with open(marker) as f:
+            done = f.read()
+    if done != n_docs:
         shutil.rmtree(base, ignore_errors=True)
         docs.repartition(4).write.mode("overwrite").parquet(stage)
         writer = IndexWriter(spark, documents_mapping(), idx_dir)
@@ -175,7 +183,7 @@ def _streamed_doc_index(spark: SparkSession, sf_dir: str) -> SearchIndex:
         )
         q.awaitTermination()
         with open(marker, "w") as f:
-            f.write("ok")
+            f.write(n_docs)
     idx = SearchIndex(spark, idx_dir, documents_mapping())
     _STREAMED[sf_dir] = idx
     return idx

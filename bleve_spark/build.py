@@ -10,20 +10,21 @@ of batch-1000 + k-way merge, the plan is one declarative pipeline:
   docid-range block): the docid-range key IS the salt that defuses
   hot-term skew; every hot term spreads over ~N/2^shift reducers)-->
   delta+varint-compressed posting blocks with block-max metadata -->
-  parquet tables {docs, analyzed, norms, postings, dictionary,
-  fieldstats} in one new segment dir, published by one commit of the
-  index's commit log (writer.py) — the same segment an IndexWriter
-  batch writes.
+  parquet tables {docs, postings, dictionary} in one new segment dir,
+  published by one commit of the index's commit log (writer.py) — the
+  same segment an IndexWriter batch writes. The analysis output is never
+  stored: its per-field (doc_count, total_len) go into the commit.
 
 Scale notes (100 TB / 1000 executors):
 - exactly one wide shuffle over the exploded term rows (the block groupBy);
-  dictionary/fieldstats aggregate the much smaller block/norm tables.
+  the dictionary aggregates the much smaller block table and the field
+  stats the one-per-(doc, field) length rows.
 - docids are deterministic dense ranks over the _id sort key (two-pass
   range-partitioned ranking) — never monotonically_increasing_id — so
   output is rank-identical across cluster sizes (north rule).
-- postings are written partitionBy(tbucket = crc32(field,term) % n) and
+- postings are written partitionBy(tbucket = crc32(field,term) % 16) and
   sorted by (term, block) within files, so a literal term lookup LISTS
-  only 1/n of the files (directory-level partition pruning) and row-group
+  only 1/16 of the files (directory-level partition pruning) and row-group
   min/max on `term` prunes within them.
 """
 
@@ -34,7 +35,7 @@ import os
 import shutil
 import time
 from dataclasses import dataclass, field as dc_field
-from typing import List, Optional
+from typing import List, Optional, Tuple
 
 import numpy as np
 import pandas as pd
@@ -286,7 +287,7 @@ def _parquet_rows(path: str) -> int:
 
 # -- directory-level postings pruning ----------------------------------------
 # Postings are written partitionBy(tbucket) where tbucket =
-# crc32(field || \x00 || term) % n_tbuckets. A literal term lookup
+# crc32(field || \x00 || term) % TBUCKETS. A literal term lookup
 # derives its bucket in pure Python (zlib.crc32 == Spark's crc32,
 # CRC-32/ISO-HDLC) and filters on the partition column, so the scan
 # LISTS only 1/n of the files — at 100k-file scale every other layout
@@ -295,8 +296,7 @@ def _parquet_rows(path: str) -> int:
 # Within a bucket, files stay (field, term)-sorted so parquet row-group
 # min/max stats skip as before.
 
-DEFAULT_TBUCKETS = 16
-TBUCKETS_MARKER = "_TBUCKETS.json"
+TBUCKETS = 16
 
 
 def tbucket_col(field_col, term_col, n: int):
@@ -342,10 +342,13 @@ class IndexBuilder:
     builder emits an ordinary segment set, not a second format
     (ref: index/scorch/builder.go).
 
-    Segment tables: docs, analyzed, norms, postings, dictionary,
-    fieldstats. (Persisted as parquet; on a production cluster these
-    map 1:1 onto Iceberg tables and the commit log onto its snapshot
-    log — the reference's introducer/persister analogue,
+    Segment tables: docs, postings, dictionary; per-field doc count
+    and total length, and the postings' tbucket fanout, are facts of
+    the segment's add_segment action (ref: a zap segment is a term
+    dictionary, postings carrying freq and norm, and stored fields).
+    (Persisted as parquet; on a production cluster these map 1:1 onto
+    Iceberg tables and the commit log onto its snapshot log — the
+    reference's introducer/persister analogue,
     ref: index/scorch/introducer.go.)
     """
 
@@ -354,13 +357,10 @@ class IndexBuilder:
         spark: SparkSession,
         mapping: IndexMapping,
         index_path: str,
-        tbuckets: int = DEFAULT_TBUCKETS,
     ):
         self.spark = spark
         self.mapping = mapping
         self.index_path = index_path
-        # directory-level term pruning fanout; 0/1 disables partitioning
-        self.tbuckets = int(tbuckets)
 
     def _write(self, df: DataFrame, path: str, *partition_by: str):
         df.write.partitionBy(*partition_by).mode("overwrite").parquet(path)
@@ -407,7 +407,8 @@ class IndexBuilder:
         every segment the head held. With `resume`, a build whose
         fingerprint (by default: row count, columns and mapping) equals
         that of the head's single segment, none of whose docs were
-        deleted since, publishes nothing."""
+        deleted since, publishes nothing; a segment committed without
+        field stats is always rebuilt."""
         from .writer import IndexWriter, read_snapshot
 
         base = read_snapshot(self.index_path)
@@ -418,7 +419,10 @@ class IndexBuilder:
                 f"n={corpus.count()};cols={sorted(corpus.columns)};"
                 f"mapping={json.dumps(self.mapping.to_dict(), sort_keys=True)}"
             )
-        built = [m.get("fingerprint") for m in base.segments.values()]
+        built = [
+            m.get("fingerprint") if "fields" in m else None
+            for m in base.segments.values()
+        ]
         if fingerprint is not None and built == [fingerprint] and not base.dead:
             report = BuildReport(self.index_path)
         else:
@@ -433,9 +437,12 @@ class IndexBuilder:
 
     def write_tables(
         self, corpus: DataFrame, id_expr, seg_dir: str, docid_start: int
-    ) -> BuildReport:
+    ) -> Tuple[dict, BuildReport]:
         """Write the segment tables of `corpus` under `seg_dir`, docids
-        from `docid_start`; publishing the segment is the caller's."""
+        from `docid_start`; publishing the segment is the caller's.
+        Returns the segment's facts for its add_segment action —
+        `fields` {field: [doc_count, total_len]} and, unless the
+        postings are empty, `tbuckets` — and the build report."""
         report = BuildReport(seg_dir)
         spark = self.spark
 
@@ -546,14 +553,15 @@ class IndexBuilder:
 
         docs = spark.read.parquet(at("docs"))
 
-        # stage 2: analyze (the expensive pandas-UDF pass) -----------------
+        # stage 2: analyze and encode postings ----------------------------
         # ALL text fields analyzed in ONE mapInPandas pass over docs,
-        # materialized once; per-doc term aggregation happens inside the
-        # UDF (map-side, ref analysis/freq.go:21-70) and positions are
-        # delta+varint encoded at the source, so the output is flat
-        # scalar columns — no nested Arrow structs anywhere. The `_all`
-        # composite (ref document/field_composite.go:103-131) is merged
-        # in the same pass. Norms ride along as term=NULL marker rows.
+        # persisted for its two readers (postings and the field stats);
+        # per-doc term aggregation happens inside the UDF (map-side, ref
+        # analysis/freq.go:21-70) and positions are delta+varint encoded
+        # at the source, so the output is flat scalar columns — no nested
+        # Arrow structs anywhere. The `_all` composite (ref
+        # document/field_composite.go:103-131) is merged in the same
+        # pass. Each (doc, field) also emits one term=NULL length row.
         text_fields = self.mapping.text_fields()
         t0 = time.time()
         # dotted-path fields ride through mapInPandas under shielded
@@ -580,92 +588,71 @@ class IndexBuilder:
         analyzed = docs_in.mapInPandas(
             make_analyzed_rows_fn(field_analyzers, compose),
             ANALYZED_ROW_SCHEMA,
-        )
-        with self._fine_splits(at("docs")):
-            self._write(analyzed, at("analyzed"))
-        report.add(
-            "analyzed", _parquet_rows(at("analyzed")), (time.time() - t0) * 1e3
-        )
+        ).persist()
+        facts = {}
+        try:
+            rows = analyzed.where(F.col("term").isNotNull())
 
-        analyzed = spark.read.parquet(at("analyzed"))
-
-        # stage 3: norms (the term=NULL marker rows) -----------------------
-        t0 = time.time()
-        # float32 norm, as the reference stores it
-        # (ref: index/upsidedown/upsidedown.go:608-609)
-        norms = analyzed.where(F.col("term").isNull()).select(
-            "docid",
-            "field",
-            "length",
-            (
-                F.lit(1.0) / F.sqrt(F.greatest(F.col("length"), F.lit(1)))
-            ).cast("float").alias("norm"),
-        )
-        with self._fine_splits(at("analyzed")):
-            self._write(norms, at("norms"))
-        report.add("norms", _parquet_rows(at("norms")), (time.time() - t0) * 1e3)
-
-        # stage 4: postings blocks -----------------------------------------
-        t0 = time.time()
-        rows = analyzed.where(F.col("term").isNotNull())
-
-        # ONE wide shuffle: hash-partition by (field, term, BLOCK) —
-        # the docid-range block key IS the salt that defuses hot-term
-        # skew (module docstring): a df≈N term's postings spread over
-        # ~N/2^shift reducers instead of landing on one. Each
-        # (field, term, block) group is complete within its partition
-        # (hash on all three keys), so the streaming encoder emits
-        # exactly one posting row per group; scan pruning comes from
-        # the tbucket directory layout + row-group min/max, not from
-        # file contiguity.
-        nbuckets = int(self.spark.conf.get("spark.sql.shuffle.partitions"))
-        sorted_rows = (
-            rows.withColumn("block", F.shiftright(F.col("docid"), BLOCK_SHIFT))
-            .repartition(nbuckets, "field", "term", "block")
-            .sortWithinPartitions("field", "term", "block", "docid")
-        )
-        blocks = sorted_rows.mapInPandas(
-            _encode_sorted_stream, POSTINGS_SCHEMA
-        )
-        pdir = at("postings")
-        if self.tbuckets > 1:
-            # directory-level pruning: partition the (few) encoded
-            # block rows by term bucket. The local re-sort puts
-            # tbucket first so the dynamic-partition writer's
-            # required ordering is already satisfied (no extra
-            # sort) and files stay (field, term)-sorted within each
-            # bucket for row-group min/max skipping.
-            blocks = blocks.withColumn(
-                "tbucket",
-                tbucket_col(F.col("field"), F.col("term"), self.tbuckets),
-            ).sortWithinPartitions("tbucket", "field", "term", "block")
-            with self._fine_splits(at("analyzed")):
-                self._write(blocks, pdir, "tbucket")
-            wrote_any = any(
-                f.endswith(".parquet")
-                for _r, _d, fs in os.walk(pdir)
-                for f in fs
+            # ONE wide shuffle: hash-partition by (field, term, BLOCK) —
+            # the docid-range block key IS the salt that defuses hot-term
+            # skew (module docstring): a df≈N term's postings spread over
+            # ~N/2^shift reducers instead of landing on one. Each
+            # (field, term, block) group is complete within its partition
+            # (hash on all three keys), so the streaming encoder emits
+            # exactly one posting row per group; scan pruning comes from
+            # the tbucket directory layout + row-group min/max, not from
+            # file contiguity.
+            nbuckets = int(self.spark.conf.get("spark.sql.shuffle.partitions"))
+            sorted_rows = (
+                rows.withColumn("block", F.shiftright(F.col("docid"), BLOCK_SHIFT))
+                .repartition(nbuckets, "field", "term", "block")
+                .sortWithinPartitions("field", "term", "block", "docid")
             )
-            if wrote_any:
-                with open(os.path.join(pdir, TBUCKETS_MARKER), "w") as f:
-                    json.dump({"n_tbuckets": self.tbuckets}, f)
+            # directory-level pruning: partition the (few) encoded block
+            # rows by term bucket. The local re-sort puts tbucket first
+            # so the dynamic-partition writer's required ordering is
+            # already satisfied (no extra sort) and files stay (field,
+            # term)-sorted within each bucket for row-group min/max
+            # skipping.
+            blocks = (
+                sorted_rows.mapInPandas(_encode_sorted_stream, POSTINGS_SCHEMA)
+                .withColumn(
+                    "tbucket", tbucket_col(F.col("field"), F.col("term"), TBUCKETS)
+                )
+                .sortWithinPartitions("tbucket", "field", "term", "block")
+            )
+            pdir = at("postings")
+            with self._fine_splits(at("docs")):
+                self._write(blocks, pdir, "tbucket")
+            if any(f.endswith(".parquet") for _r, _d, fs in os.walk(pdir) for f in fs):
+                facts["tbuckets"] = TBUCKETS
             else:
                 # empty postings (vector/geo/numeric-only index): a
-                # partitionBy write of 0 rows emits NO files, which
-                # a later read cannot infer a schema from — write
-                # the flat empty parquet (one 0-row footer file)
-                # and no marker, like a pre-tbucket index
+                # partitionBy write of 0 rows emits NO files, which a
+                # later read cannot infer a schema from — write the flat
+                # empty parquet (one 0-row footer file)
                 self._write(spark.createDataFrame([], POSTINGS_SCHEMA), pdir)
-        else:
-            with self._fine_splits(at("analyzed")):
-                self._write(blocks, pdir)
-        report.add("postings", _parquet_rows(pdir), (time.time() - t0) * 1e3)
+            report.add("postings", _parquet_rows(pdir), (time.time() - t0) * 1e3)
 
-        postings = spark.read.parquet(pdir)
+            # stage 3: field stats, from the length rows, kept in the
+            # segment's commit (doc count and docid range are there too)
+            t0 = time.time()
+            lengths = (
+                analyzed.where(F.col("term").isNull())
+                .groupBy("field")
+                .agg(F.count("*").alias("n"), F.sum("length").alias("total"))
+                .collect()
+            )
+            facts["fields"] = {
+                r["field"]: [int(r["n"]), int(r["total"])] for r in lengths
+            }
+            report.add("stats", len(lengths), (time.time() - t0) * 1e3)
+        finally:
+            analyzed.unpersist()
 
-        # stage 5: dictionary (from block rows — small relative to terms) --
+        # stage 4: dictionary (from block rows — small relative to terms) --
         t0 = time.time()
-        dictionary = postings.groupBy("field", "term").agg(
+        dictionary = spark.read.parquet(pdir).groupBy("field", "term").agg(
             F.sum("df_block").alias("df"), F.sum("cf_block").alias("cf")
         )
         self._write(
@@ -675,18 +662,7 @@ class IndexBuilder:
         report.add(
             "dictionary", _parquet_rows(at("dictionary")), (time.time() - t0) * 1e3
         )
-
-        # stage 6: field stats (doc count and docid range come from the
-        # commit log) -------------------------------------------------------
-        t0 = time.time()
-        fieldstats = spark.read.parquet(at("norms")).groupBy("field").agg(
-            F.count("*").alias("doc_count"),
-            F.sum("length").alias("total_len"),
-            F.avg("length").alias("avg_len"),
-        )
-        self._write(fieldstats.coalesce(1), at("fieldstats"))
-        report.add("stats", 1, (time.time() - t0) * 1e3)
-        return report
+        return facts, report
 
 
 def drop_index(index_path: str):

@@ -136,11 +136,13 @@ def _decode_blocks_iter(batches, need_positions: bool):
 
 
 class SearchIndex:
-    """Read-side snapshot handle: the tables of the segments of one
-    committed log version, unioned, with dead docids masked — the
-    IndexSnapshot + deleted-bitmap analogue
-    (ref: index/scorch/snapshot_index.go:81, README.md:108-133). A new
-    SearchIndex instance = a new MVCC snapshot."""
+    """Read-side snapshot handle: the docs, postings and dictionary
+    tables of the segments of one committed log version, unioned, with
+    dead docids masked — the IndexSnapshot + deleted-bitmap analogue
+    (ref: index/scorch/snapshot_index.go:81, README.md:108-133). Doc
+    count, field stats and the tbucket fanout come from the segments'
+    add_segment actions, with no Spark job. A new SearchIndex instance
+    = a new MVCC snapshot."""
 
     def __init__(
         self,
@@ -202,21 +204,11 @@ class SearchIndex:
 
     @cached_property
     def tbuckets(self) -> Optional[int]:
-        """Directory-pruning fanout, if EVERY postings dir was written
-        partitionBy(tbucket) with the SAME n (build.py stage 4). Any
-        missing/odd marker disables the pruned path — correctness never
-        depends on the layout."""
-        import json as _json
-
-        from .build import TBUCKETS_MARKER
-
-        ns = set()
-        for m in self._seg_metas:
-            try:
-                with open(os.path.join(m["dir"], "postings", TBUCKETS_MARKER)) as f:
-                    ns.add(int(_json.load(f)["n_tbuckets"]))
-            except (OSError, ValueError, KeyError):
-                return None
+        """Directory-pruning fanout, if EVERY segment's commit logs the
+        SAME one (a segment with empty postings logs none). Otherwise
+        the pruned path is off — correctness never depends on the
+        layout."""
+        ns = {m.get("tbuckets") for m in self._seg_metas}
         return ns.pop() if len(ns) == 1 else None
 
     @cached_property
@@ -232,10 +224,6 @@ class SearchIndex:
         return d
 
     @cached_property
-    def norms(self) -> DataFrame:
-        return self._table("norms")
-
-    @cached_property
     def doc_count(self) -> int:
         """Global N, live docs only (single-index semantics — the
         reference parity target, SURVEY.md §2.6 per-shard IDF caveat),
@@ -246,20 +234,23 @@ class SearchIndex:
 
     @cached_property
     def field_stats(self) -> Dict[str, dict]:
-        rows = self._table("fieldstats")
-        if len(self._seg_metas) > 1:
-            rows = rows.groupBy("field").agg(
-                F.sum("doc_count").alias("doc_count"),
-                F.sum("total_len").alias("total_len"),
-                (F.sum("total_len") / F.sum("doc_count")).alias("avg_len"),
-            )
+        """Per-field doc_count / total_len / avg_len summed over the
+        segments' commits (dead docs included, like the dictionary's
+        df), with no Spark job."""
+        totals: Dict[str, List[int]] = {}
+        for m in self._seg_metas:
+            if "fields" not in m:
+                raise ValueError(
+                    f"{m['dir']} was committed without field stats by an "
+                    "older version; rebuild the index"
+                )
+            for fld, (n, total) in m["fields"].items():
+                acc = totals.setdefault(fld, [0, 0])
+                acc[0] += n
+                acc[1] += total
         return {
-            r["field"]: {
-                "doc_count": r["doc_count"],
-                "total_len": r["total_len"],
-                "avg_len": r["avg_len"],
-            }
-            for r in rows.collect()
+            fld: {"doc_count": n, "total_len": total, "avg_len": total / n}
+            for fld, (n, total) in totals.items()
         }
 
     def avg_len(self, field: str) -> float:

@@ -1200,9 +1200,7 @@ class Searcher:
         derives these from term vectors; we re-derive from the query tree
         (dictionary-expanded for prefix/wildcard/regexp/fuzzy)."""
         out: set = set()
-
-        def expand(pred):
-            out.update(t for t, _ in self.index.expand_terms(fld, pred))
+        expanding = (Q.PrefixQuery, Q.WildcardQuery, Q.RegexpQuery, Q.FuzzyQuery)
 
         def walk(node):
             qf = getattr(node, "field", None) or self.default_field()
@@ -1222,22 +1220,9 @@ class Searcher:
                             out.update(t)
                         else:
                             out.add(t)
-            elif isinstance(node, Q.PrefixQuery) and qf == fld:
-                expand(F.col("term").startswith(node.prefix))
-            elif isinstance(node, Q.WildcardQuery) and qf == fld:
-                expand(F.col("term").rlike(_wildcard_to_regex(node.wildcard)))
-            elif isinstance(node, Q.RegexpQuery) and qf == fld:
-                expand(F.col("term").rlike(f"^(?:{node.regexp})$"))
-            elif isinstance(node, Q.FuzzyQuery) and qf == fld:
-                pred = (
-                    F.levenshtein(F.col("term"), F.lit(node.term))
-                    <= node.fuzziness
-                )
-                if node.prefix_length > 0:
-                    pred = pred & F.col("term").startswith(
-                        node.term[: node.prefix_length]
-                    )
-                expand(pred)
+            elif isinstance(node, expanding) and qf == fld:
+                pred = self._expansion_predicate(node)
+                out.update(t for t, _ in self.index.expand_terms(fld, pred))
             elif isinstance(node, Q.ConjunctionQuery):
                 for c in node.conjuncts:
                     walk(c)

@@ -37,8 +37,8 @@ def get_spark(
         .config("spark.sql.parquet.filterPushdown", "true")
         # query-time scans keep Spark's coarse default splits (small
         # postings/dictionary lookups become a handful of tasks, not
-        # hundreds); the BUILD's analysis stage instead scopes a finer
-        # maxPartitionBytes around itself (build.py stage 2) so the
+        # hundreds); the BUILD's analysis + postings stage instead scopes
+        # a finer maxPartitionBytes around itself (build.py stage 2) so the
         # pandas-UDF pass still gets >= 4 balanced tasks per core
         .config("spark.sql.files.maxPartitionBytes", "64m")
         .config("spark.sql.files.openCostInBytes", "131072")

@@ -10,11 +10,15 @@ and maybe_merge()/compact() are the merger (index/scorch/merge.go).
 Layout under index_path:
     _log/<version, 20 digits>.json   commit 0, 1, ...: the only record of
                                      what the index holds
-    segments/seg-00000-<token>/      one segment's tables (IndexBuilder)
+    segments/seg-00000-<token>/      one segment (IndexBuilder): docs/,
+                                     postings/ (partitionBy tbucket) and
+                                     dictionary/
     dead/<token>.parquet             dead docids (docid long)
 
 A commit is a JSON list of one-key actions: add_segment {seq, dir,
-docid_start, docid_end}, remove_segment {seq}, add_dead {path, counts:
+docid_start, docid_end, fields: {field: [doc_count, total_len]},
+tbuckets: the postings fanout (absent when they are empty), and a bulk
+build's fingerprint}, remove_segment {seq}, add_dead {path, counts:
 {seq: dead docids in it}} and, for rollback, remove_dead {path}.
 Replaying commits 0..v gives snapshot v (the IndexSnapshot analogue,
 index/scorch/snapshot_index.go:81). A commit is published put-if-absent
@@ -239,9 +243,9 @@ class IndexWriter:
         rel = os.path.join("segments", f"{SEG_PREFIX}{seq:05d}-{uuid.uuid4().hex[:8]}")
         seg_dir = os.path.join(self.index_path, rel)
         builder = builder or IndexBuilder(self.spark, self.mapping, self.index_path)
-        report = builder.write_tables(df, id_expr, seg_dir, start)
+        facts, report = builder.write_tables(df, id_expr, seg_dir, start)
         end = start + _parquet_rows(os.path.join(seg_dir, "docs"))
-        return {"seq": seq, "dir": rel, "docid_start": start, "docid_end": end}, report
+        return {"seq": seq, "dir": rel, "docid_start": start, "docid_end": end, **facts}, report
 
     def _replace_all(
         self, base: Snapshot, df: DataFrame, id_expr=None,

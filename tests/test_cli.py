@@ -91,23 +91,35 @@ def test_cli_check_clean_and_corrupt(cli_index, capsys):
     )
     assert json.loads(out.splitlines()[-1])["problems"] == 0
 
-    # corrupt a segment's log entry: shrink its docid range -> check trips
-    broken = f"{BASE}/broken"
-    shutil.copytree(cli_index, broken)
-    entry = os.path.join(broken, "_log", sorted(os.listdir(f"{broken}/_log"))[0])
-    with open(entry) as f:
-        actions = json.load(f)
-    add = next(a["add_segment"] for a in actions if "add_segment" in a)
-    add["docid_end"] = add["docid_start"]  # claim zero docs
-    with open(entry, "w") as f:
-        json.dump(actions, f)
-    with pytest.raises(SystemExit):
-        spark_job.main(
-            ["check", "--index", broken, "--mapping", "dynamic",
-             "--count", "2"]
-        )
-    out = capsys.readouterr().out
-    assert "PROBLEM" in out
+    def corrupt(name, edit):
+        path = f"{BASE}/{name}"
+        shutil.copytree(cli_index, path)
+        entry = os.path.join(path, "_log", sorted(os.listdir(f"{path}/_log"))[0])
+        with open(entry) as f:
+            actions = json.load(f)
+        edit(next(a["add_segment"] for a in actions if "add_segment" in a))
+        with open(entry, "w") as f:
+            json.dump(actions, f)
+        with pytest.raises(SystemExit):
+            spark_job.main(
+                ["check", "--index", path, "--mapping", "dynamic",
+                 "--count", "2"]
+            )
+        return capsys.readouterr().out
+
+    # one logged field doc count off by one -> exactly that problem
+    def miscount(add):
+        add["fields"]["body"][0] += 1
+
+    out = corrupt("miscounted", miscount)
+    assert json.loads(out.splitlines()[-1])["problems"] == 1
+    assert "field 'body' logs doc_count" in out
+
+    # shrink a segment's docid range -> check trips
+    def shrink(add):
+        add["docid_end"] = add["docid_start"]  # claim zero docs
+
+    assert "PROBLEM" in corrupt("broken", shrink)
 
 
 def test_cli_build_publishes_one_commit(spark, capsys):

@@ -1,7 +1,9 @@
 """Driver contract smoke: entry() runs, queries()/oracle_sql() are
 consistent, and a sample of oracle checks passes at sf0.001."""
 
+import hashlib
 import os
+import shutil
 import sys
 
 import duckdb
@@ -58,3 +60,23 @@ def test_oracle_sample(spark, duck, name):
     assert list(a.columns) == list(b.columns)
     assert len(a) == len(b)
     assert a.equals(b), f"{name} value mismatch"
+
+
+def test_streamed_index_follows_a_regenerated_corpus(spark, tmp_path):
+    """The streamed index is rebuilt when the corpus at the same sf_dir
+    changes row count, not compared stale against fresh oracle data."""
+    import pandas as pd
+
+    sf_dir = str(tmp_path / "sf")
+    os.makedirs(sf_dir)
+    src = pd.read_parquet(os.path.join(SF_DIR, "documents.parquet"))
+    key = hashlib.md5(sf_dir.encode()).hexdigest()[:10]
+    base = f"/tmp/bleve_spark_entry/streamed_{key}"
+    try:
+        for n in (12, 20):
+            src.head(n).to_parquet(os.path.join(sf_dir, "documents.parquet"))
+            entrymod._STREAMED.pop(sf_dir, None)
+            assert entrymod._streamed_doc_index(spark, sf_dir).doc_count == n
+    finally:
+        entrymod._STREAMED.pop(sf_dir, None)
+        shutil.rmtree(base, ignore_errors=True)

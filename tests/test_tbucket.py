@@ -4,13 +4,11 @@ Postings are written partitionBy(tbucket = crc32(field||\\x00||term) % n)
 so a literal term lookup LISTS ~1/n of the files instead of opening
 every footer (the scorch analogue: per-segment FST dictionaries key the
 lookup, ref index/scorch/snapshot_index.go:475-480). Correctness must
-never depend on the layout: missing/odd markers fall back to the full
-scan.
+never depend on the layout: a segment whose commit logs no fanout (its
+postings are empty) turns the pruned path off.
 """
 
 import glob
-import json
-import os
 
 import pytest
 from pyspark.sql import functions as F
@@ -24,7 +22,7 @@ from bleve_spark import (
     SearchRequest,
 )
 from bleve_spark import query as Q
-from bleve_spark.build import TBUCKETS_MARKER, tbucket_col, tbucket_of
+from bleve_spark.build import TBUCKETS, tbucket_col, tbucket_of
 from bleve_spark.writer import IndexWriter
 
 
@@ -65,15 +63,13 @@ def test_spark_python_crc32_bucket_parity(spark):
 def test_partition_filter_in_plan_and_file_listing(spark, tmp_path):
     path = str(tmp_path / "idx")
     m = _mapping()
-    IndexBuilder(spark, m, path, tbuckets=8).build(
-        _corpus(spark), id_expr=F.col("_id")
-    )
+    IndexBuilder(spark, m, path).build(_corpus(spark), id_expr=F.col("_id"))
     idx = SearchIndex(spark, path, m)
-    assert idx.tbuckets == 8
+    assert idx.tbuckets == TBUCKETS
     blocks = idx.blocks("body", ["alpha"])
     plan = blocks._jdf.queryExecution().executedPlan().toString()
     assert "PartitionFilters" in plan
-    b = tbucket_of("body", "alpha", 8)
+    b = tbucket_of("body", "alpha", TBUCKETS)
     assert f"tbucket" in plan and f"= {b})" in plan
     # the layout actually splits files across bucket dirs
     seg = idx._seg_metas[0]["dir"]
@@ -84,21 +80,6 @@ def test_partition_filter_in_plan_and_file_listing(spark, tmp_path):
     blocks2 = idx.blocks("body", ["alpha", "beta"])
     plan2 = blocks2._jdf.queryExecution().executedPlan().toString()
     assert "PartitionFilters" in plan2
-
-
-def test_query_results_identical_with_and_without_layout(spark, tmp_path):
-    m = _mapping()
-    p_flat = str(tmp_path / "flat")
-    p_part = str(tmp_path / "part")
-    IndexBuilder(spark, m, p_flat, tbuckets=0).build(
-        _corpus(spark), id_expr=F.col("_id")
-    )
-    IndexBuilder(spark, m, p_part, tbuckets=8).build(
-        _corpus(spark), id_expr=F.col("_id")
-    )
-    assert SearchIndex(spark, p_flat, m).tbuckets is None
-    for term in ("alpha", "token3", "gamma", "missing"):
-        assert _hits(spark, p_flat, m, term) == _hits(spark, p_part, m, term)
 
 
 def test_segmented_index_prunes_per_segment(spark, tmp_path):
@@ -122,29 +103,28 @@ def test_mixed_layout_falls_back_to_full_scan(spark, tmp_path):
     m = _mapping()
     w = IndexWriter(spark, m, path)
     docs = _corpus(spark, 60)
-    w.batch_index(docs.where(F.col("_id") < "d3"), id_expr=F.col("_id"))
+    # a batch whose bodies are all empty has empty postings, so its
+    # commit logs no fanout
+    w.batch_index(
+        docs.where(F.col("_id") < "d3").withColumn("body", F.lit("")),
+        id_expr=F.col("_id"),
+    )
     w.batch_index(docs.where(F.col("_id") >= "d3"), id_expr=F.col("_id"))
-    # simulate a segment from a pre-tbucket build: marker missing
-    seg0 = SearchIndex(spark, path, m)._seg_metas[0]["dir"]
-    os.remove(os.path.join(seg0, "postings", TBUCKETS_MARKER))
     idx = SearchIndex(spark, path, m)
+    assert "tbuckets" not in idx._seg_metas[0]
     assert idx.tbuckets is None  # gate closed -> no partition filter
-    got = _hits(spark, path, m, "gamma")
-    assert got == sorted(f"d{i}" for i in range(60) if i % 3 == 0)
-
-
-def test_marker_disagreement_falls_back(spark, tmp_path):
-    path = str(tmp_path / "odd")
-    m = _mapping()
-    w = IndexWriter(spark, m, path)
-    docs = _corpus(spark, 40)
-    w.batch_index(docs.where(F.col("_id") < "d3"), id_expr=F.col("_id"))
-    w.batch_index(docs.where(F.col("_id") >= "d3"), id_expr=F.col("_id"))
-    seg0 = SearchIndex(spark, path, m)._seg_metas[0]["dir"]
-    with open(os.path.join(seg0, "postings", TBUCKETS_MARKER), "w") as f:
-        json.dump({"n_tbuckets": 99}, f)  # disagrees with the real layout
-    idx = SearchIndex(spark, path, m)
-    assert idx.tbuckets is None
-    assert _hits(spark, path, m, "alpha") == sorted(
-        f"d{i}" for i in range(40)
+    assert "PartitionFilters: []" in (
+        idx.blocks("body", ["gamma"])._jdf.queryExecution().executedPlan().toString()
+    )
+    # hits do not depend on pruning: equal to a pruned index of the
+    # same (non-empty) docs
+    pruned = str(tmp_path / "pruned")
+    IndexBuilder(spark, m, pruned).build(
+        docs.where(F.col("_id") >= "d3"), id_expr=F.col("_id")
+    )
+    assert SearchIndex(spark, pruned, m).tbuckets == TBUCKETS
+    for term in ("alpha", "token3", "gamma", "missing"):
+        assert _hits(spark, path, m, term) == _hits(spark, pruned, m, term)
+    assert _hits(spark, path, m, "gamma") == sorted(
+        f"d{i}" for i in range(60) if i % 3 == 0 and f"d{i}" >= "d3"
     )

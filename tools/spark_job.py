@@ -285,6 +285,8 @@ def cmd_check(args):
        stored table, seqs unique
     3. each segment's dead docids exist in it and match its logged count
     4. live doc_count == distinct live docids
+    5. every per-field doc_count a head segment logs equals its docid
+       span (each doc emits one length row per text field)
     """
     from pyspark.sql import functions as F
 
@@ -405,6 +407,16 @@ def cmd_check(args):
         problems.append(
             f"doc_count {idx.doc_count} != live rows {n_live}"
         )
+
+    # 5. logged field stats cover every doc of their segment
+    for m in metas:
+        span = m["docid_end"] - m["docid_start"]
+        for fld, (n, _total) in sorted(m.get("fields", {}).items()):
+            if n != span:
+                problems.append(
+                    f"segment {m['seq']}: field {fld!r} logs doc_count "
+                    f"{n}, docid span {span}"
+                )
 
     for pr in problems:
         print(f"PROBLEM: {pr}")
