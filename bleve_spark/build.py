@@ -405,10 +405,10 @@ class IndexBuilder:
     ) -> BuildReport:
         """Build `corpus` into a new segment and commit it in place of
         every segment the head held. With `resume`, a build whose
-        fingerprint (by default: row count, columns and mapping) equals
-        that of the head's single segment, none of whose docs were
-        deleted since, publishes nothing; a segment committed without
-        field stats is always rebuilt."""
+        fingerprint (by default: row count, columns, id expression and
+        mapping) equals that of the head's single segment, none of whose
+        docs were deleted since, publishes nothing; a segment committed
+        without field stats is always rebuilt."""
         from .writer import IndexWriter, read_snapshot
 
         base = read_snapshot(self.index_path)
@@ -417,6 +417,7 @@ class IndexBuilder:
         elif fingerprint is None:
             fingerprint = (
                 f"n={corpus.count()};cols={sorted(corpus.columns)};"
+                f"id={'_id' if id_expr is None else id_expr};"
                 f"mapping={json.dumps(self.mapping.to_dict(), sort_keys=True)}"
             )
         built = [

@@ -22,28 +22,7 @@ _MASK7 = _U64(0x7F)
 
 def varint_encode(values: np.ndarray) -> bytes:
     """LEB128-encode an array of non-negative ints, vectorized."""
-    v = np.asarray(values, dtype=np.uint64)
-    n = len(v)
-    if n == 0:
-        return b""
-    nbytes = np.ones(n, dtype=np.int64)
-    for shift in (7, 14, 21, 28, 35, 42, 49, 56, 63):
-        nbytes += (v >= (_U64(1) << _U64(shift))).astype(np.int64)
-    total = int(nbytes.sum())
-    out = np.zeros(total, dtype=np.uint8)
-    cur = np.concatenate(([0], np.cumsum(nbytes)[:-1]))
-    rem = v.copy()
-    active = np.arange(n)
-    while len(active):
-        r = rem[active]
-        more = r >= _U64(0x80)
-        out[cur[active]] = (r & _MASK7).astype(np.uint8) | (
-            more.astype(np.uint8) << 7
-        )
-        cur[active] += 1
-        rem[active] = r >> _SHIFT7
-        active = active[more]
-    return out.tobytes()
+    return varint_encode_with_sizes(values)[0]
 
 
 def varint_encode_with_sizes(values: np.ndarray) -> tuple:

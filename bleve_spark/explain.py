@@ -8,7 +8,14 @@ Usage: `Searcher.explain(query, doc_id)` -> nested dict
 {"value", "message", "children"} for one hit. Driver-side by design —
 explanations are a debugging surface for individual hits, never a
 distributed column (the reference likewise computes them per returned
-DocumentMatch)."""
+DocumentMatch).
+
+The trees are built by the plan that search() runs, as the reference
+builds them from the scorer tree that produced the score: each planner
+in search.py pairs its DataFrame builder with an explain closure over
+the same plan-time state, and calls the node builders below. A tree
+therefore has the plan's shape (a one-token match is its bare term
+node) and its root value is the hit's score."""
 
 from __future__ import annotations
 

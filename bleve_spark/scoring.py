@@ -39,6 +39,16 @@ def idf(similarity: str, n_docs: int, df: int) -> float:
     return math.log(1.0 + (n_docs - df + 0.5) / (df + 0.5))
 
 
+def idf_col(similarity: str, n_docs: int, df_col: Column) -> Column:
+    """`idf` as a column over a per-row df column (multi-term
+    expansions score each expanded term with its own idf)."""
+    n = F.lit(float(n_docs))
+    dfd = df_col.cast("double")
+    if similarity == TFIDF:
+        return F.lit(1.0) + F.log(n / (dfd + F.lit(1.0)))
+    return F.log(F.lit(1.0) + (n - dfd + F.lit(0.5)) / (dfd + F.lit(0.5)))
+
+
 def term_weight(similarity: str, boost: float, idf_val: float) -> float:
     """Leaf weight fed into queryNorm (ref: scorer_term.go:92-96)."""
     if similarity == TFIDF:
@@ -51,28 +61,30 @@ def term_score_col(
     similarity: str,
     tf_col: Column,
     len_col: Column,
-    idf_val: float,
+    idf: Column,
     boost: float,
     query_norm: float | None,
     avg_len: float,
 ) -> Column:
-    """Per-posting score column for one term."""
+    """Per-posting score column; `idf` is a column (a literal for one
+    term, per-row for expansions and phrases)."""
     if similarity == TFIDF:
         # float32 norm emulation for parity
         # (ref: index/upsidedown/upsidedown.go:608-609)
         norm = (F.lit(1.0) / F.sqrt(F.greatest(len_col, F.lit(1)))).cast(
             "float"
         ).cast("double")
-        score = F.sqrt(tf_col.cast("double")) * norm * F.lit(idf_val)
+        score = F.sqrt(tf_col.cast("double")) * norm * idf
         if query_norm is not None:
-            score = score * F.lit(boost * idf_val * query_norm)
+            # fieldWeight x queryWeight (ref: scorer_term.go:128,149-150)
+            score = score * (F.lit(boost) * idf * F.lit(query_norm))
         return score
     tf_d = tf_col.cast("double")
     denom = tf_d + F.lit(BM25_K1) * (
         F.lit(1.0 - BM25_B)
         + F.lit(BM25_B) * len_col.cast("double") / F.lit(max(avg_len, 1e-9))
     )
-    return F.lit(boost * idf_val) * tf_d * F.lit(BM25_K1 + 1.0) / denom
+    return F.lit(boost) * idf * tf_d * F.lit(BM25_K1 + 1.0) / denom
 
 
 def tfidf_score_py(

@@ -27,6 +27,7 @@ from typing import Dict, List, Optional, Sequence, Tuple
 import pandas as pd
 from pyspark.sql import Column, DataFrame, functions as F, types as T
 
+from . import explain as E
 from . import query as Q
 from . import scoring
 from . import wand
@@ -155,16 +156,26 @@ def _phrase_path_exists(pos_by_slot, deltas, nslots, slop) -> bool:
 
 
 class _Plan:
-    """A planned sub-searcher: carries the leaf-weight sum (for queryNorm)
-    and a builder closure df(query_norm) -> DataFrame(docid, score)."""
+    """A planned sub-searcher: carries the leaf-weight sum (for queryNorm),
+    a builder closure df(query_norm) -> DataFrame(docid, score), and an
+    explainer explain(query_norm, docid, doc_id) -> the explanation tree
+    of that one doc's score, or None when the doc does not match. Both
+    closures read the same plan-time state (term sets, idf, weights,
+    phrase slots), so an explanation's value is the score search()
+    gives."""
 
-    def __init__(self, weight: float, build, n_leaves: int = 1):
+    def __init__(self, weight: float, build, explain):
         self.weight = weight
         self._build = build
-        self.n_leaves = n_leaves
+        self.explain = explain
 
     def df(self, query_norm: Optional[float]) -> DataFrame:
         return self._build(query_norm)
+
+
+def _has_docid(df: DataFrame, docid: int) -> bool:
+    """Whether a DataFrame with a docid column holds `docid`."""
+    return bool(df.where(F.col("docid") == docid).limit(1).collect())
 
 
 class Searcher:
@@ -222,6 +233,20 @@ class Searcher:
             F.col("docid"), F.lit(0.0).alias("score")
         ).limit(0)
 
+    def _empty_plan(self) -> _Plan:
+        return _Plan(0.0, lambda qn: self._empty(), lambda *_: None)
+
+    def _term_expl(self, fld, term, doc_id, tf, length, idf, df, boost, qn):
+        if self.similarity == scoring.TFIDF:
+            return E.term_explanation(
+                fld, term, doc_id, tf, length, idf, df,
+                self.index.doc_count, boost, qn,
+            )
+        return E.bm25_term_explanation(
+            fld, term, doc_id, tf, length, idf, df, self.index.doc_count,
+            boost, self.index.avg_len(fld),
+        )
+
     # -- leaf planners --------------------------------------------------
 
     def _restricted_blocks(self, fld, terms, block_filter):
@@ -240,7 +265,7 @@ class Searcher:
     ) -> _Plan:
         stats = self.index.term_stats(fld, [term])
         if term not in stats:
-            return _Plan(0.0, lambda qn: self._empty())
+            return self._empty_plan()
         df_count, _cf = stats[term]
         idf = scoring.idf(self.similarity, self.index.doc_count, df_count)
         weight = scoring.term_weight(self.similarity, boost, idf)
@@ -258,27 +283,28 @@ class Searcher:
                     self.similarity,
                     F.col("tf"),
                     F.col("length"),
-                    idf,
+                    F.lit(idf),
                     boost,
                     qn,
                     avg_len,
                 ).alias("score"),
             )
 
-        return _Plan(weight, build)
+        def explain(qn, docid, doc_id):
+            rows = (
+                self.index.decoded(fld, [term])
+                .where(F.col("docid") == docid)
+                .select("tf", "length")
+                .collect()
+            )
+            if not rows:
+                return None
+            tf, length = rows[0]
+            return self._term_expl(
+                fld, term, doc_id, tf, length, idf, df_count, boost, qn
+            )
 
-    def _idf_col(self, df_col: Column) -> Column:
-        """Per-term idf as a column over the dictionary `df` column —
-        the vectorized form of scoring.idf for DataFrame-native
-        multi-term expansions."""
-        n = float(self.index.doc_count)
-        dfd = df_col.cast("double")
-        if self.similarity == scoring.TFIDF:
-            # ref: scorer_term.go:71
-            return F.lit(1.0) + F.log(F.lit(n) / (dfd + F.lit(1.0)))
-        return F.log(
-            F.lit(1.0) + (F.lit(n) - dfd + F.lit(0.5)) / (dfd + F.lit(0.5))
-        )
+        return _Plan(weight, build, explain)
 
     def _plan_multi_term(
         self,
@@ -305,7 +331,9 @@ class Searcher:
         TooManyClausesError exactly like the reference (whose default is
         also 0 = unlimited, search_disjunction.go:28)."""
         slice_df = self.index.expansion(fld, predicate)
-        idf_c = self._idf_col(F.col("df"))
+        idf_c = scoring.idf_col(
+            self.similarity, self.index.doc_count, F.col("df")
+        )
         if self.similarity == scoring.TFIDF:
             w = F.lit(boost) * idf_c
             weight_col = w * w
@@ -318,36 +346,40 @@ class Searcher:
         if DisjunctionMaxClauseCount and n_terms > DisjunctionMaxClauseCount:
             raise TooManyClausesError(fld, n_terms, DisjunctionMaxClauseCount)
         if n_terms == 0:
-            return _Plan(0.0, lambda qn: self._empty())
+            return self._empty_plan()
         weight = float(row["w"]) if row["w"] is not None else 0.0
         avg_len = self.index.avg_len(fld)
-        total = n_terms
+        # known expansion cardinality picks the join strategy: small
+        # slices broadcast; huge ones shuffle (AQE re-plans at runtime)
+        exp = F.broadcast(slice_df) if n_terms <= 65536 else slice_df
 
-        def build(qn):
+        def expansion_postings(filtered=None):
             blocks = self.index.postings.where(
                 (F.col("field") == fld) & predicate
             )
-            if block_filter is not None:
-                if isinstance(block_filter, list):
-                    blocks = blocks.where(F.col("block").isin(block_filter))
+            if filtered is not None:
+                if isinstance(filtered, list):
+                    blocks = blocks.where(F.col("block").isin(filtered))
                 else:
-                    blocks = blocks.join(F.broadcast(block_filter), "block")
-            decoded = self.index.decoded(fld, [], blocks=blocks)
-            # known expansion cardinality picks the join strategy: small
-            # slices broadcast; huge ones shuffle (AQE re-plans at runtime)
-            exp = (
-                F.broadcast(slice_df) if n_terms <= 65536 else slice_df
-            )
-            per_term = decoded.join(exp, "term").select(
-                "docid",
-                self._score_col_dynamic_idf(
-                    F.col("tf"),
-                    F.col("length"),
-                    self._idf_col(F.col("df")),
-                    boost,
-                    qn,
-                    avg_len,
-                ).alias("score"),
+                    blocks = blocks.join(F.broadcast(filtered), "block")
+            return self.index.decoded(fld, [], blocks=blocks)
+
+        def build(qn):
+            per_term = (
+                expansion_postings(block_filter)
+                .join(exp, "term")
+                .select(
+                    "docid",
+                    scoring.term_score_col(
+                        self.similarity,
+                        F.col("tf"),
+                        F.col("length"),
+                        idf_c,
+                        boost,
+                        qn,
+                        avg_len,
+                    ).alias("score"),
+                )
             )
             agg = per_term.groupBy("docid").agg(
                 F.sum("score").alias("sum_score"),
@@ -356,52 +388,54 @@ class Searcher:
             score = F.col("sum_score")
             if self.similarity == scoring.TFIDF:
                 # disjunction coord (ref: scorer/scorer_disjunction.go:65-66)
-                score = score * F.col("nmatch") / F.lit(total)
+                score = score * F.col("nmatch") / F.lit(n_terms)
             return agg.select("docid", score.alias("score"))
 
-        return _Plan(weight, build, n_leaves=n_terms)
-
-    def _score_col_dynamic_idf(
-        self, tf_col, len_col, idf_col: Column, boost, qn, avg_len
-    ) -> Column:
-        """term_score_col variant where idf is a per-row column (multi-term
-        expansions score each expanded term with its own idf)."""
-        if self.similarity == scoring.TFIDF:
-            norm = (
-                (F.lit(1.0) / F.sqrt(F.greatest(len_col, F.lit(1))))
-                .cast("float")
-                .cast("double")
+        def explain(qn, docid, doc_id):
+            rows = (
+                expansion_postings()
+                .where(F.col("docid") == docid)
+                .join(exp, "term")
+                .select("term", "tf", "length", "df")
+                .collect()
             )
-            score = F.sqrt(tf_col.cast("double")) * norm * idf_col
-            if qn is not None:
-                score = score * F.lit(boost) * idf_col * F.lit(qn)
-            return score
-        tf_d = tf_col.cast("double")
-        denom = tf_d + F.lit(scoring.BM25_K1) * (
-            F.lit(1.0 - scoring.BM25_B)
-            + F.lit(scoring.BM25_B)
-            * len_col.cast("double")
-            / F.lit(max(avg_len, 1e-9))
-        )
-        return (
-            F.lit(boost) * idf_col * tf_d * F.lit(scoring.BM25_K1 + 1.0) / denom
-        )
+            if not rows:
+                return None
+            n = self.index.doc_count
+            kids = [
+                self._term_expl(
+                    fld, t, doc_id, tf, length,
+                    scoring.idf(self.similarity, n, df), df, boost, qn,
+                )
+                for t, tf, length, df in sorted(rows)
+            ]
+            if self.similarity == scoring.TFIDF:
+                return E.coord_explanation(doc_id, kids, len(kids), n_terms)
+            return E.sum_explanation(doc_id, kids)
+
+        return _Plan(weight, build, explain)
 
     def _plan_const(self, docids_df: DataFrame, boost: float) -> _Plan:
         """Constant scorer (ref: scorer/scorer_constant.go)."""
 
+        def score(qn):
+            return float(boost) * (qn if qn is not None else 1.0)
+
         def build(qn):
-            score = float(boost) * (qn if qn is not None else 1.0)
-            return docids_df.select("docid", F.lit(score).alias("score"))
+            return docids_df.select("docid", F.lit(score(qn)).alias("score"))
+
+        def explain(qn, docid, doc_id):
+            if not _has_docid(docids_df, docid):
+                return None
+            return E.constant_explanation(score(qn), boost)
 
         # constant scorer weight = boost^2 (ref: scorer_constant.go)
         w = boost * boost if self.similarity == scoring.TFIDF else 0.0
-        return _Plan(w, build)
+        return _Plan(w, build, explain)
 
     # -- composite planners ---------------------------------------------
 
     def _plan_conjunction(self, children: List[_Plan]) -> _Plan:
-        children = [c for c in children]
         weight = sum(c.weight for c in children)
 
         def build(qn):
@@ -414,7 +448,16 @@ class Searcher:
             total = sum(F.col(f"s{i}") for i in range(len(dfs)))
             return out.select("docid", total.alias("score"))
 
-        return _Plan(weight, build, sum(c.n_leaves for c in children))
+        def explain(qn, docid, doc_id):
+            kids = []
+            for c in children:
+                e = c.explain(qn, docid, doc_id)
+                if e is None:
+                    return None
+                kids.append(e)
+            return E.sum_explanation(doc_id, kids)
+
+        return _Plan(weight, build, explain)
 
     def _plan_disjunction(self, children: List[_Plan], min_match: int) -> _Plan:
         weight = sum(c.weight for c in children)
@@ -437,7 +480,16 @@ class Searcher:
                 out = out.where(F.col("nmatch") >= min_match)
             return out.select("docid", score.alias("score"))
 
-        return _Plan(weight, build, sum(c.n_leaves for c in children))
+        def explain(qn, docid, doc_id):
+            kids = [c.explain(qn, docid, doc_id) for c in children]
+            kids = [e for e in kids if e is not None]
+            if len(kids) < min_match:
+                return None
+            if self.similarity == scoring.TFIDF:
+                return E.coord_explanation(doc_id, kids, len(kids), total)
+            return E.sum_explanation(doc_id, kids)
+
+        return _Plan(weight, build, explain)
 
     def _plan_boolean(
         self,
@@ -448,14 +500,20 @@ class Searcher:
     ) -> _Plan:
         """ref: searcher/search_boolean.go:37-330."""
         weight = sum(c.weight for c in must) + sum(c.weight for c in should)
+        must_plan = self._plan_conjunction(must) if must else None
+        should_plan = (
+            self._plan_disjunction(should, min_should) if should else None
+        )
+        # min_should == 0: should is an optional score bonus. min_should
+        # > 0: should becomes REQUIRED — the reference only lets a
+        # must-only doc through "when shouldSearcher.Min() == 0"
+        # (search_boolean.go:282-290), so a doc failing the
+        # min-disjunction is excluded even if every must clause matches.
+        should_required = min_should > 0 or must_plan is None
 
         def build(qn):
-            base = None
-            if must:
-                base = self._plan_conjunction(must).df(qn)
-            should_df = None
-            if should:
-                should_df = self._plan_disjunction(should, min_should).df(qn)
+            base = must_plan.df(qn) if must_plan is not None else None
+            should_df = should_plan.df(qn) if should_plan is not None else None
             if base is None:
                 base = should_df
                 should_df = None
@@ -470,13 +528,7 @@ class Searcher:
                 else:
                     return self._empty()
             if should_df is not None:
-                # min_should == 0: should is an optional score bonus
-                # (left join). min_should > 0: should becomes REQUIRED —
-                # the reference only lets a must-only doc through "when
-                # shouldSearcher.Min() == 0" (search_boolean.go:282-290),
-                # so a doc failing the min-disjunction is excluded even
-                # if every must clause matches.
-                how = "inner" if min_should > 0 else "left"
+                how = "inner" if should_required else "left"
                 base = (
                     base.join(
                         should_df.select(
@@ -498,11 +550,28 @@ class Searcher:
                 )
             return base
 
-        return _Plan(
-            weight,
-            build,
-            sum(c.n_leaves for c in must) + sum(c.n_leaves for c in should),
-        )
+        def explain(qn, docid, doc_id):
+            kids = []
+            if must_plan is not None:
+                e = must_plan.explain(qn, docid, doc_id)
+                if e is None:
+                    return None
+                kids.append(e)
+            if should_plan is not None:
+                e = should_plan.explain(qn, docid, doc_id)
+                if e is not None:
+                    kids.append(e)
+                elif should_required:
+                    return None
+            if not kids:
+                if not must_not:
+                    return None
+                kids.append(E.constant_explanation(1.0, 1.0))
+            if any(_has_docid(mn.df(None), docid) for mn in must_not):
+                return None
+            return kids[0] if len(kids) == 1 else E.sum_explanation(doc_id, kids)
+
+        return _Plan(weight, build, explain)
 
     def _plan_phrase(
         self,
@@ -530,7 +599,7 @@ class Searcher:
         if any(
             not any(t in stats for t in alts) for alts, _ in slots
         ):
-            return _Plan(0.0, lambda qn: self._empty())
+            return self._empty_plan()
         present = [t for t in all_terms if t in stats]
         n = self.index.doc_count
         avg_len = self.index.avg_len(fld)
@@ -603,7 +672,8 @@ class Searcher:
                 "slot",
                 "nalts",
                 "positions",
-                self._score_col_dynamic_idf(
+                scoring.term_score_col(
+                    self.similarity,
                     F.col("tf"),
                     F.col("length"),
                     idf_map[F.col("term")],
@@ -710,7 +780,51 @@ class Searcher:
                 .where(F.col("score").isNotNull())
             )
 
-        return _Plan(weight, build, n_leaves=len(present))
+        def explain(qn, docid, doc_id):
+            rows = (
+                self.index.decoded(fld, present, need_positions=True)
+                .where(F.col("docid") == docid)
+                .select("term", "tf", "length", "positions")
+                .collect()
+            )
+            by_term = {r["term"]: r for r in rows}
+            pos_by_slot = {
+                i: {
+                    p
+                    for t in alts
+                    if t in by_term
+                    for p in by_term[t]["positions"]
+                }
+                for i, (alts, _p) in enumerate(slots)
+            }
+            if not all(pos_by_slot.values()) or not _phrase_path_exists(
+                pos_by_slot, deltas, nslots, slop
+            ):
+                return None
+            slot_kids = []
+            for alts, _p in slots:
+                kids = [
+                    self._term_expl(
+                        fld, t, doc_id, by_term[t]["tf"],
+                        by_term[t]["length"], term_idf[t], stats[t][0],
+                        boost, qn,
+                    )
+                    for t in alts
+                    if t in by_term
+                ]
+                if len(alts) == 1:
+                    slot_kids.append(kids[0])
+                elif self.similarity == scoring.TFIDF:
+                    slot_kids.append(
+                        E.coord_explanation(doc_id, kids, len(kids), len(alts))
+                    )
+                else:
+                    slot_kids.append(E.sum_explanation(doc_id, kids))
+            if len(slot_kids) == 1:
+                return slot_kids[0]
+            return E.sum_explanation(doc_id, slot_kids)
+
+        return _Plan(weight, build, explain)
 
     # -- query dispatch --------------------------------------------------
 
@@ -723,7 +837,7 @@ class Searcher:
             analyzer = get_analyzer(self._analyzer_for(fld, q.analyzer))
             tokens = analyzer.analyze(q.text)
             if not tokens:
-                return _Plan(0.0, lambda qn: self._empty())
+                return self._empty_plan()
             # one dictionary lookup for all terms; per-term planners then
             # hit the memo instead of issuing N sequential driver jobs
             self.index.term_stats(fld, [t[0] for t in tokens])
@@ -743,7 +857,7 @@ class Searcher:
             analyzer = get_analyzer(self._analyzer_for(fld, q.analyzer))
             tokens = analyzer.analyze(q.text)
             if not tokens:
-                return _Plan(0.0, lambda qn: self._empty())
+                return self._empty_plan()
             slot_terms = [((t[0],), t[1]) for t in tokens]
             return self._plan_phrase(fld, slot_terms, b, q.slop)
         if isinstance(q, Q.PhraseQuery):
@@ -834,12 +948,18 @@ class Searcher:
             # — the declarative form: semi-join the child's hits with
             # the predicate-filtered doc set
             child = self.plan(q.child)
+            keep = self.index.docs.where(F.expr(q.predicate)).select("docid")
 
-            def build_filtered(qn, _child=child, _pred=q.predicate):
-                keep = self.index.docs.where(F.expr(_pred)).select("docid")
-                return _child.df(qn).join(keep, "docid", "left_semi")
+            def explain_filtered(qn, docid, doc_id):
+                if not _has_docid(keep, docid):
+                    return None
+                return child.explain(qn, docid, doc_id)
 
-            return _Plan(child.weight, build_filtered, child.n_leaves)
+            return _Plan(
+                child.weight,
+                lambda qn: child.df(qn).join(keep, "docid", "left_semi"),
+                explain_filtered,
+            )
         if isinstance(q, Q.IPRangeQuery):
             # CIDR containment over the 16-byte packed form of the
             # stored address — the columnar replacement for the
@@ -959,7 +1079,7 @@ class Searcher:
         if isinstance(q, Q.MatchAllQuery):
             return self._plan_const(self.index.docs.select("docid"), b)
         if isinstance(q, Q.MatchNoneQuery):
-            return _Plan(0.0, lambda qn: self._empty())
+            return self._empty_plan()
         if isinstance(q, Q.ConjunctionQuery):
             self._prefetch_term_stats(q.conjuncts)
             return self._plan_conjunction([self.plan(c) for c in q.conjuncts])
@@ -1004,7 +1124,8 @@ class Searcher:
 
     def _expansion_predicate(self, q: Q.Query):
         """Dictionary-slice predicate for an expansion query — shared by
-        the planner and explain() so both see the identical term set."""
+        the planner and highlighting so both see the identical term
+        set."""
         if isinstance(q, Q.PrefixQuery):
             return F.col("term").startswith(q.prefix)
         if isinstance(q, Q.WildcardQuery):
@@ -1041,16 +1162,20 @@ class Searcher:
     # -- execution -------------------------------------------------------
 
     def matches(self, q: Q.Query) -> DataFrame:
-        """DataFrame(docid, score) for a query. Composites push queryNorm
-        to leaves (ref: search_conjunction.go:108-120); a bare TERM leaf
-        scores without queryNorm, exactly like the reference — but
-        multi-term EXPANSIONS (prefix/wildcard/regexp/fuzzy/term_range)
-        compile to a disjunction whose constructor computes its own
-        queryNorm (search_disjunction_slice.go:75,104-116), so they norm
-        even at the top level (reference regexp table: "co.*" scores
-        0.33875..., which includes 1/sqrt(sum of idf^2))."""
+        """DataFrame(docid, score) for a query."""
         plan = self.plan(q)
-        qn = None
+        return plan.df(self._query_norm(q, plan))
+
+    def _query_norm(self, q: Q.Query, plan: _Plan) -> Optional[float]:
+        """The queryNorm a top-level query pushes to its leaves.
+        Composites push queryNorm to leaves (ref:
+        search_conjunction.go:108-120); a bare TERM leaf scores without
+        queryNorm, exactly like the reference — but multi-term
+        EXPANSIONS (prefix/wildcard/regexp/fuzzy/term_range) compile to
+        a disjunction whose constructor computes its own queryNorm
+        (search_disjunction_slice.go:75,104-116), so they norm even at
+        the top level (reference regexp table: "co.*" scores 0.33875...,
+        which includes 1/sqrt(sum of idf^2))."""
         if (
             self.similarity == scoring.TFIDF
             and isinstance(
@@ -1071,8 +1196,8 @@ class Searcher:
             )
             and plan.weight > 0
         ):
-            qn = 1.0 / math.sqrt(plan.weight)
-        return plan.df(qn)
+            return 1.0 / math.sqrt(plan.weight)
+        return None
 
     # -- block-max WAND top-k (north rule; bleve_spark/wand.py) ----------
 
@@ -1415,323 +1540,30 @@ class Searcher:
         )
         return page, ["locations"]
 
-    def _term_expl(self, E, fld, t, doc_id, tf, length, idf, df, n, b, qn):
-        if self.similarity == scoring.TFIDF:
-            return E.term_explanation(
-                fld, t, str(doc_id), tf, length, idf, df, n, b, qn
-            )
-        return E.bm25_term_explanation(
-            fld, t, str(doc_id), tf, length, idf, df, n, b,
-            self.index.avg_len(fld),
-        )
-
-    # query types scored by the constant scorer — explained like the
-    # reference's ConstantScorer (scorer_constant.go:74-126)
-    _CONSTANT_EXPLAIN_TYPES = (
-        Q.NumericRangeQuery,
-        Q.DateRangeQuery,
-        Q.BoolFieldQuery,
-        Q.DocIDQuery,
-        Q.IPRangeQuery,
-        Q.GeoShapeQuery,
-        Q.GeoDistanceQuery,
-        Q.GeoBoundingBoxQuery,
-        Q.GeoPolygonQuery,
-        Q.MatchAllQuery,
-    )
-
     def explain(self, q: Q.Query, doc_id: str) -> Optional[dict]:
         """Per-hit score explanation tree (ref: SearchRequest.Explain ->
         DocumentMatch.Expl, scorer_term.go:117-170,
-        scorer_constant.go:74-126). Covers term-leaf queries (term /
-        match / conjunction / disjunction of terms) in TF-IDF and BM25
-        modes, (match_)phrase / multi_phrase, dictionary-expansion
-        queries (prefix / wildcard / regexp / fuzzy / term_range), and
-        every constant-scored type (numeric/date range, bool_field,
-        docid, ip_range, geo, geoshape, match_all) — the same universal
-        coverage as the reference's scorers. Driver-side: one tiny
-        posting fetch for one doc, like the reference's
-        per-DocumentMatch computation."""
-        from . import explain as E
-
-        if isinstance(q, (Q.MatchPhraseQuery, Q.PhraseQuery)):
-            return self._explain_phrase(q, doc_id)
-        if isinstance(
-            q,
-            (
-                Q.PrefixQuery,
-                Q.WildcardQuery,
-                Q.RegexpQuery,
-                Q.FuzzyQuery,
-                Q.TermRangeQuery,
-            ),
-        ):
-            return self._explain_multi_term(q, doc_id)
-        if isinstance(q, Q.FilterQuery):
-            # doc must pass the filter predicate; the score (and thus
-            # the explanation) is entirely the child's
-            # (ref: searcher/search_filter.go — filter never scores)
-            keep = (
-                self.index.docs.where(F.expr(q.predicate))
-                .where(F.col("_id") == str(doc_id))
-                .select("docid")
-                .collect()
-            )
-            if not keep:
-                return None
-            return self.explain(q.child, doc_id)
-        if isinstance(q, self._CONSTANT_EXPLAIN_TYPES):
-            return self._explain_constant(q, doc_id)
-        cand = self._wand_candidate(q)
-        if cand is None:
-            raise NotImplementedError(
-                f"explain not supported for {type(q).__name__}"
-            )
-        fld, term_boosts, conjunctive, apply_qn = cand
+        scorer_constant.go:74-126), or None when the doc does not exist
+        or does not match. Like the reference, which explains with the
+        scorer tree that produced the score, this walks the plan that
+        search() runs: it resolves the doc's docid, plans `q` with
+        plan(), and calls the plan's explain closure with the same
+        queryNorm matches() uses. Each node reuses what its planner
+        computed (term sets, idf, weights, phrase slots, the expansion
+        size), so every query type search() plans is explained in both
+        similarities, and the tree has the plan's shape. Driver-side:
+        small collects of this one doc's postings, one per scored
+        leaf."""
+        doc_id = str(doc_id)
         doc = (
-            self.index.docs.where(F.col("_id") == str(doc_id))
+            self.index.docs.where(F.col("_id") == doc_id)
             .select("docid")
             .collect()
         )
         if not doc:
             return None
-        docid = doc[0]["docid"]
-        stats = self.index.term_stats(fld, [t for t, _ in term_boosts])
-        present = [(t, b) for t, b in term_boosts if t in stats]
-        if not present:
-            return None
-        n = self.index.doc_count
-        term_idf = {
-            t: scoring.idf(self.similarity, n, stats[t][0])
-            for t, _ in present
-        }
-        weight = sum(
-            scoring.term_weight(self.similarity, b, term_idf[t])
-            for t, b in present
-        )
-        qn = None
-        if (
-            apply_qn
-            and self.similarity == scoring.TFIDF
-            and weight > 0
-        ):
-            qn = 1.0 / math.sqrt(weight)
-        rows = (
-            self.index.decoded(fld, [t for t, _ in present])
-            .where(F.col("docid") == docid)
-            .select("term", "tf", "length")
-            .collect()
-        )
-        by_term = {r["term"]: (int(r["tf"]), int(r["length"])) for r in rows}
-        children = []
-        for t, b in present:
-            if t not in by_term:
-                continue
-            tf, length = by_term[t]
-            children.append(
-                self._term_expl(
-                    E, fld, t, doc_id, tf, length, term_idf[t],
-                    stats[t][0], n, b, qn,
-                )
-            )
-        if not children or (conjunctive and len(children) < len(term_boosts)):
-            return None  # doc does not match the (conjunctive) query
-        if len(term_boosts) == 1 and isinstance(q, Q.TermQuery):
-            return children[0]
-        if conjunctive:
-            return E.sum_explanation(str(doc_id), children)
-        if self.similarity != scoring.TFIDF:
-            return E.sum_explanation(str(doc_id), children)  # bm25: no coord
-        return E.coord_explanation(
-            str(doc_id), children, len(children), len(term_boosts)
-        )
-
-    def _explain_phrase(self, q, doc_id: str) -> Optional[dict]:
-        """Phrase explanation: the conjunction-of-slots score tree,
-        emitted only when a position path exists (shares
-        _phrase_path_exists with the scorer, so explain == score)."""
-        from . import explain as E
-
-        fld = q.field or self.default_field()
-        b = q.boost
-        if isinstance(q, Q.MatchPhraseQuery):
-            analyzer = get_analyzer(self._analyzer_for(fld, q.analyzer))
-            tokens = analyzer.analyze(q.text)
-            slots = [((t[0],), t[1]) for t in tokens]
-        else:
-            slots = [
-                (
-                    tuple(t) if isinstance(t, (list, tuple)) else (t,),
-                    i + 1,
-                )
-                for i, t in enumerate(q.terms)
-            ]
-        if not slots:
-            return None
-        slots = [(tuple(dict.fromkeys(a)), p) for a, p in slots]
-        all_terms = list(dict.fromkeys(t for a, _ in slots for t in a))
-        stats = self.index.term_stats(fld, all_terms)
-        if any(not any(t in stats for t in a) for a, _ in slots):
-            return None
-        present = [t for t in all_terms if t in stats]
-        n = self.index.doc_count
-        term_idf = {
-            t: scoring.idf(self.similarity, n, stats[t][0]) for t in present
-        }
-        weight = sum(
-            scoring.term_weight(self.similarity, b, i)
-            for i in term_idf.values()
-        )
-        qn = None
-        if self.similarity == scoring.TFIDF and weight > 0:
-            qn = 1.0 / math.sqrt(weight)
-        doc = (
-            self.index.docs.where(F.col("_id") == str(doc_id))
-            .select("docid")
-            .collect()
-        )
-        if not doc:
-            return None
-        docid = doc[0]["docid"]
-        rows = (
-            self.index.decoded(fld, present, need_positions=True)
-            .where(F.col("docid") == docid)
-            .select("term", "tf", "length", "positions")
-            .collect()
-        )
-        by_term = {
-            r["term"]: (int(r["tf"]), int(r["length"]), list(r["positions"]))
-            for r in rows
-        }
-        deltas = [slots[i][1] - slots[i - 1][1] for i in range(1, len(slots))]
-        pos_by_slot = {}
-        for i, (alts, _p) in enumerate(slots):
-            s = set()
-            for t in alts:
-                if t in by_term:
-                    s.update(by_term[t][2])
-            if not s:
-                return None
-            pos_by_slot[i] = s
-        if not _phrase_path_exists(
-            pos_by_slot, deltas, len(slots), q.slop
-        ):
-            return None
-        slot_children = []
-        for alts, _p in slots:
-            alt_children = [
-                self._term_expl(
-                    E, fld, t, doc_id, by_term[t][0], by_term[t][1],
-                    term_idf[t], stats[t][0], n, b, qn,
-                )
-                for t in alts
-                if t in by_term
-            ]
-            if len(alts) == 1:
-                slot_children.append(alt_children[0])
-            elif self.similarity == scoring.TFIDF:
-                slot_children.append(
-                    E.coord_explanation(
-                        str(doc_id), alt_children,
-                        len(alt_children), len(alts),
-                    )
-                )
-            else:
-                slot_children.append(
-                    E.sum_explanation(str(doc_id), alt_children)
-                )
-        if len(slot_children) == 1:
-            return slot_children[0]
-        return E.sum_explanation(str(doc_id), slot_children)
-
-    def _explain_multi_term(self, q, doc_id: str) -> Optional[dict]:
-        """Expansion-query explanation (prefix / wildcard / regexp /
-        fuzzy / term_range): one full term explanation per expanded term
-        present in the doc, combined exactly like _plan_multi_term
-        scores — TF-IDF applies the disjunction coord over the FULL
-        expansion size (scorer_disjunction.go:65-66), BM25 sums. Shares
-        _expansion_predicate with the planner, so explanation == score
-        by construction."""
-        from . import explain as E
-
-        fld = q.field or self.default_field()
-        pred = self._expansion_predicate(q)
-        slice_df = self.index.expansion(fld, pred)
-        n_terms = int(slice_df.count())
-        if n_terms == 0:
-            return None
-        doc = (
-            self.index.docs.where(F.col("_id") == str(doc_id))
-            .select("docid")
-            .collect()
-        )
-        if not doc:
-            return None
-        docid = doc[0]["docid"]
-        blocks = self.index.postings.where(
-            (F.col("field") == fld) & pred
-        )
-        rows = (
-            self.index.decoded(fld, [], blocks=blocks)
-            .where(F.col("docid") == docid)
-            .join(F.broadcast(slice_df), "term")
-            .select("term", "tf", "length", "df")
-            .collect()
-        )
-        if not rows:
-            return None
-        n = self.index.doc_count
-        # the expansion disjunction computes its own queryNorm over the
-        # FULL term slice (search_disjunction_slice.go:104-116) — must
-        # mirror matches()/_plan_multi_term so explanation == score
-        qn = None
-        if self.similarity == scoring.TFIDF:
-            wc = F.lit(q.boost) * self._idf_col(F.col("df"))
-            w = slice_df.agg(F.sum(wc * wc).alias("w")).collect()[0]["w"]
-            if w and w > 0:
-                qn = 1.0 / math.sqrt(float(w))
-        children = []
-        for r in sorted(rows, key=lambda r: r["term"]):
-            idf = scoring.idf(self.similarity, n, int(r["df"]))
-            children.append(
-                self._term_expl(
-                    E, fld, r["term"], doc_id, int(r["tf"]),
-                    int(r["length"]), idf, int(r["df"]), n, q.boost,
-                    qn,
-                )
-            )
-        if self.similarity == scoring.TFIDF:
-            return E.coord_explanation(
-                str(doc_id), children, len(children), n_terms
-            )
-        return E.sum_explanation(str(doc_id), children)
-
-    def _explain_constant(self, q, doc_id: str) -> Optional[dict]:
-        """Constant-scorer explanation (ref: scorer_constant.go:74-126):
-        the reference explains constant = 1.0 times the query weight
-        (boost x queryNorm; 1 for a bare leaf). Matching runs the real
-        plan restricted to this doc, so presence/absence agrees with
-        search() for every constant-scored type (ranges, docid,
-        ip_range, geo, geoshape, match_all)."""
-        from . import explain as E
-
-        doc = (
-            self.index.docs.where(F.col("_id") == str(doc_id))
-            .select("docid")
-            .collect()
-        )
-        if not doc:
-            return None
-        docid = doc[0]["docid"]
-        hit = (
-            self.matches(q)
-            .where(F.col("docid") == docid)
-            .select("score")
-            .collect()
-        )
-        if not hit:
-            return None
-        return E.constant_explanation(float(hit[0]["score"]), q.boost)
+        plan = self.plan(q)
+        return plan.explain(self._query_norm(q, plan), doc[0]["docid"], doc_id)
 
     def search(self, req: SearchRequest) -> SearchResult:
         if req.similarity != self.similarity:

@@ -222,7 +222,12 @@ def segment_metas(index_path: str) -> List[dict]:
 
 class IndexWriter:
     """ref: index.go:45-89 (Index/Delete/Batch) + scorch introducer.
-    Every call writes its new files, then publishes one commit."""
+    Every call writes its new files, then publishes one commit.
+
+    One writer per index is supported. Of two writers that race, the
+    loser raises when it publishes; but the winner's cleanup of
+    unreferenced files may delete the loser's half-built segment before
+    that."""
 
     def __init__(
         self, spark: SparkSession, mapping: IndexMapping, index_path: str

@@ -45,6 +45,14 @@ def test_positions_roundtrip():
     assert [list(map(int, x)) for x in dec] == pls
 
 
+def _positions(docids):
+    """Ascending position lists, 0-3 per doc, for one block's docs."""
+    return [
+        list(range(int(d) % 5, int(d) % 5 + 3 * (i % 4), 3))
+        for i, d in enumerate(docids)
+    ]
+
+
 def _blocks_frame(blocks):
     """Build the postings-scan pandas frame for a list of
     (docids, tfs, lens) uint64-array triples."""
@@ -57,14 +65,17 @@ def _blocks_frame(blocks):
             "docids_enc": [codec.delta_encode(d) for d, _, _ in blocks],
             "tfs_enc": [codec.varint_encode(t) for _, t, _ in blocks],
             "lens_enc": [codec.varint_encode(le) for _, _, le in blocks],
+            "pos_enc": [
+                codec.encode_positions(_positions(d)) for d, _, _ in blocks
+            ],
         }
     )
 
 
 def _assert_batched_matches_loop(blocks):
-    from bleve_spark.index import _decode_batch_scoring
+    from bleve_spark.index import _decode_batch
 
-    out = _decode_batch_scoring(_blocks_frame(blocks))
+    frame = _blocks_frame(blocks)
     exp_docid = np.concatenate(
         [d.astype(np.int64) for d, _, _ in blocks]
     )
@@ -73,10 +84,19 @@ def _assert_batched_matches_loop(blocks):
     exp_term = np.concatenate(
         [np.repeat(f"t{i}", len(d)) for i, (d, _, _) in enumerate(blocks)]
     )
-    assert (out["docid"].to_numpy() == exp_docid).all()
-    assert (out["tf"].to_numpy() == exp_tf).all()
-    assert (out["length"].to_numpy() == exp_len).all()
-    assert (out["term"].to_numpy() == exp_term).all()
+    for need_positions in (False, True):
+        out = _decode_batch(frame, need_positions)
+        assert (out["docid"].to_numpy() == exp_docid).all()
+        assert (out["tf"].to_numpy() == exp_tf).all()
+        assert (out["length"].to_numpy() == exp_len).all()
+        assert (out["term"].to_numpy() == exp_term).all()
+    # the batch's positions equal a per-block decode of each pos_enc
+    exp_pos = [
+        list(p)
+        for (d, _, _), enc in zip(blocks, frame["pos_enc"])
+        for p in codec.decode_positions(enc, len(d))
+    ]
+    assert [list(p) for p in out["positions"]] == exp_pos
 
 
 @settings(max_examples=50, deadline=None)

@@ -257,3 +257,108 @@ def test_filter_query_explanation_delegates(typed_index):
     expl = s.explain(q, "d1")
     assert expl is not None and expl["value"] == 1.0
     assert s.explain(q, "d2") is None  # filtered out
+
+
+# -- explain walks the plan search() runs: one case per planner shape -------
+
+
+def _t(term):
+    return Q.TermQuery(field="content", term=term)
+
+
+def _match(text, **kw):
+    return Q.MatchQuery(field="content", text=text, **kw)
+
+
+PHRASE = Q.MatchPhraseQuery(field="content", text="apache license")
+
+# name -> (query, expansion: scored through a dictionary expansion, whose
+# idf column and Python idf may differ in the last bit)
+PLAN_SHAPES = {
+    "term": (_t("apache"), False),
+    "match_or": (_match("apache commit"), False),
+    "match_and": (_match("apache commit", operator="and"), False),
+    "match_repeated_token": (_match("apache commit apache"), False),
+    "match_fuzzy": (_match("apachi licenze", fuzziness=1), True),
+    "prefix": (Q.PrefixQuery(field="content", prefix="lic"), True),
+    "phrase": (PHRASE, False),
+    "multi_phrase": (
+        Q.PhraseQuery(field="content", terms=[["apache", "the"], "license"]),
+        False,
+    ),
+    "conjunction_with_phrase": (
+        Q.ConjunctionQuery(conjuncts=[_t("commit"), PHRASE]),
+        False,
+    ),
+    "conjunction_with_constant": (
+        Q.ConjunctionQuery(conjuncts=[Q.MatchAllQuery(boost=2.0), _t("apache")]),
+        False,
+    ),
+    "disjunction_min2": (
+        Q.DisjunctionQuery(
+            disjuncts=[_t("apache"), _t("commit"), _t("hash")], min=2
+        ),
+        False,
+    ),
+    "boolean": (
+        Q.BooleanQuery(
+            must=[_t("commit")], should=[_t("apache")], must_not=[_t("hash")]
+        ),
+        False,
+    ),
+    "boolean_min_should": (
+        Q.BooleanQuery(
+            must=[_t("commit")],
+            should=[_t("apache"), _t("license")],
+            min_should=1,
+        ),
+        False,
+    ),
+    "boolean_only_must_not": (Q.BooleanQuery(must_not=[_t("apache")]), False),
+    "filter_match": (
+        Q.FilterQuery(child=_match("apache commit"), predicate="lang = 'go'"),
+        False,
+    ),
+}
+
+
+def _matching_ids(s, q):
+    return {
+        r["_id"]
+        for r in s.matches(q).join(s.index.docs, "docid").select("_id").collect()
+    }
+
+
+@pytest.mark.parametrize("similarity", ["tfidf", "bm25"])
+@pytest.mark.parametrize("name", list(PLAN_SHAPES))
+def test_explain_follows_plan(built_index, name, similarity):
+    q, expansion = PLAN_SHAPES[name]
+    s = Searcher(built_index, similarity)
+    hits = s.search(
+        SearchRequest(query=q, size=3, similarity=similarity)
+    ).hits.collect()
+    assert hits, f"{name} must match the fixture"
+    for hit in hits:
+        expl = s.explain(q, hit["_id"])
+        assert expl is not None
+        assert expl["value"] == pytest.approx(
+            hit["score"], rel=1e-9 if expansion else 1e-12
+        )
+    all_ids = {r["_id"] for r in s.index.docs.select("_id").collect()}
+    missing = sorted(all_ids - _matching_ids(s, q))
+    assert missing, f"{name} must leave some fixture doc unmatched"
+    assert s.explain(q, missing[0]) is None
+    for mn in getattr(q, "must_not", []):
+        excluded = sorted(_matching_ids(s, mn))
+        assert excluded
+        assert s.explain(q, excluded[0]) is None
+
+
+def test_one_token_match_explains_as_its_term(built_index):
+    s = Searcher(built_index)
+    hit = s.search(
+        SearchRequest(query=_match("apache"), size=1)
+    ).hits.collect()[0]
+    expl = s.explain(_match("apache"), hit["_id"])
+    assert expl["value"] == pytest.approx(hit["score"], rel=1e-12)
+    assert expl["message"].startswith("weight(content:apache^")

@@ -136,3 +136,14 @@ def test_segment_without_field_stats_is_rebuilt(spark, tmp_path):
     assert report.stages
     assert len(os.listdir(log)) == 2
     assert SearchIndex(spark, path, _mapping()).field_stats["body"]["doc_count"] == 30
+
+
+def test_rebuild_with_another_id_expr_is_not_skipped(spark, tmp_path):
+    path = str(tmp_path / "idx")
+    builder = IndexBuilder(spark, _mapping(), path)
+    corpus = _df(spark, BATCH_A)
+    builder.build(corpus, id_expr=F.col("id"))
+    report = builder.build(corpus, id_expr=F.concat(F.lit("x-"), F.col("id")))
+    assert report.stages
+    ids = {r["_id"] for r in SearchIndex(spark, path, _mapping()).docs.collect()}
+    assert ids == {f"x-{k}" for k in BATCH_A}
