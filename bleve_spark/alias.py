@@ -16,11 +16,10 @@ index_alias_impl.go:506-525)."""
 from __future__ import annotations
 
 from dataclasses import replace
-from typing import List, Sequence
+from typing import Sequence
 
 from pyspark.sql import functions as F
 
-from . import scoring
 from .search import (
     SearchRequest,
     SearchResult,
@@ -34,27 +33,14 @@ from .search import (
 class IndexAlias:
     """ref: index.go IndexAlias interface + index_alias_impl.go.
 
-    With concurrent=True every child's whole from_+size page is collected
-    to the driver before the merge: driver memory grows with
-    children x (from_ + size) rows, so deep pages over many children
-    belong on the default lazy union."""
+    The children share one SparkSession, so their pages merge as one
+    lazy union that a single Spark action evaluates, in place of the
+    reference's goroutine per child (index_alias_impl.go:152-169)."""
 
-    def __init__(
-        self, searchers: Sequence[Searcher], concurrent: bool = False
-    ):
+    def __init__(self, searchers: Sequence[Searcher]):
         if not searchers:
             raise ValueError("alias needs at least one child index")
         self.searchers = list(searchers)
-        # concurrent=True collects each child page in its own thread —
-        # one Spark job per child, the reference's goroutine fan-out
-        # (index_alias_impl.go:152-169). Right when children live on
-        # DISJOINT resources (separate clusters/sessions at 100 TB):
-        # wall = slowest child. On a single shared-core session the
-        # one-action lazy union wins instead (interleaved local[32]
-        # A/B: union 1.9 s vs threads 2.4 s for 4 shards — concurrent
-        # actions contend on the same cores and pay 4x py4j/action
-        # overhead), so False is the local default.
-        self.concurrent = concurrent
 
     def add(self, s: Searcher) -> "IndexAlias":
         self.searchers.append(s)
@@ -78,34 +64,10 @@ class IndexAlias:
         child_req = replace(
             req, from_=0, size=req.from_ + req.size, fields=child_fields
         )
-        if self.concurrent:
-            from concurrent.futures import ThreadPoolExecutor
-
-            def _run(s: Searcher):
-                r = s.search(child_req)
-                return r, r.hits.collect(), r.hits.schema
-
-            with ThreadPoolExecutor(
-                max_workers=len(self.searchers)
-            ) as pool:
-                mats = list(pool.map(_run, self.searchers))
-            results: List[SearchResult] = [m[0] for m in mats]
-            spark = self.searchers[0].index.spark
-            merged = None
-            for _r, rows, schema in mats:
-                df = spark.createDataFrame(rows, schema)
-                merged = (
-                    df
-                    if merged is None
-                    else merged.unionByName(df, allowMissingColumns=True)
-                )
-        else:
-            results = [s.search(child_req) for s in self.searchers]
-            merged = results[0].hits
-            for r in results[1:]:
-                merged = merged.unionByName(
-                    r.hits, allowMissingColumns=True
-                )
+        results = [s.search(child_req) for s in self.searchers]
+        merged = results[0].hits
+        for r in results[1:]:
+            merged = merged.unionByName(r.hits, allowMissingColumns=True)
 
         specs = _parse_sort_specs(req.sort)
         key_cols = [

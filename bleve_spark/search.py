@@ -20,6 +20,7 @@ Iterator -> DataFrame mapping (SURVEY.md §2.4):
 
 from __future__ import annotations
 
+import copy
 import math
 from dataclasses import dataclass, field as dc_field
 from typing import Dict, List, Optional, Sequence, Tuple
@@ -157,20 +158,62 @@ def _phrase_path_exists(pos_by_slot, deltas, nslots, slop) -> bool:
 
 class _Plan:
     """A planned sub-searcher: carries the leaf-weight sum (for queryNorm),
-    a builder closure df(query_norm) -> DataFrame(docid, score), and an
-    explainer explain(query_norm, docid, doc_id) -> the explanation tree
-    of that one doc's score, or None when the doc does not match. Both
-    closures read the same plan-time state (term sets, idf, weights,
-    phrase slots), so an explanation's value is the score search()
-    gives."""
+    a builder closure build(query_norm, blocks) -> DataFrame(docid,
+    score), an explainer explain(query_norm, docid, doc_id) -> the
+    explanation tree of that one doc's score, or None when the doc does
+    not match, and a terms closure -> {field: index terms the plan
+    matches}, which highlighting and include_locations mark. All of them
+    read the same plan-time state (term sets, idf, weights, phrase
+    slots), so an explanation's value is the score search() gives and a
+    highlight marks the terms that scored.
 
-    def __init__(self, weight: float, build, explain):
+    `wand` is (field, leaves, conjunctive) with leaves [(term, boost,
+    idf, df)] when the plan is a term leaf, or a conjunction/disjunction
+    of term leaves on one field, that block-max WAND can prune; such a
+    plan's build honours `blocks`, a survivor block set its term leaves
+    restrict their decode to. Every other plan ignores `blocks`."""
+
+    empty = False  # set on the plan of a query that matches nothing
+
+    def __init__(self, weight: float, build, explain, terms=dict, wand=None):
         self.weight = weight
         self._build = build
         self.explain = explain
+        self._terms = terms
+        self.wand = wand
 
-    def df(self, query_norm: Optional[float]) -> DataFrame:
-        return self._build(query_norm)
+    def df(self, query_norm: Optional[float], blocks=None) -> DataFrame:
+        return self._build(query_norm, blocks)
+
+    def terms(self) -> Dict[str, set]:
+        """{field: index terms}, fields in first-seen order; computed on
+        the first call (an expansion's term list costs a Spark job)."""
+        if callable(self._terms):
+            self._terms = self._terms()
+        return self._terms
+
+
+def _union_terms(plans: Sequence[_Plan]) -> Dict[str, set]:
+    out: Dict[str, set] = {}
+    for p in plans:
+        for fld, ts in p.terms().items():
+            out.setdefault(fld, set()).update(ts)
+    return out
+
+
+def _composite_wand(children: Sequence[_Plan], conjunctive: bool):
+    """The WAND shape of a conjunction/disjunction: set only when every
+    child is a term leaf on one field and the terms are distinct. A
+    disjunction's empty children (terms absent from the dictionary) add
+    no leaf and keep their share of the coord."""
+    kids = [c for c in children if conjunctive or not c.empty]
+    if not kids or any(c.wand is None or len(c.wand[1]) != 1 for c in kids):
+        return None
+    fields = {c.wand[0] for c in kids}
+    leaves = [c.wand[1][0] for c in kids]
+    if len(fields) != 1 or len({leaf[0] for leaf in leaves}) != len(leaves):
+        return None
+    return fields.pop(), leaves, conjunctive
 
 
 def _has_docid(df: DataFrame, docid: int) -> bool:
@@ -234,7 +277,9 @@ class Searcher:
         ).limit(0)
 
     def _empty_plan(self) -> _Plan:
-        return _Plan(0.0, lambda qn: self._empty(), lambda *_: None)
+        plan = _Plan(0.0, lambda qn, blocks: self._empty(), lambda *_: None)
+        plan.empty = True
+        return plan
 
     def _term_expl(self, fld, term, doc_id, tf, length, idf, df, boost, qn):
         if self.similarity == scoring.TFIDF:
@@ -249,20 +294,18 @@ class Searcher:
 
     # -- leaf planners --------------------------------------------------
 
-    def _restricted_blocks(self, fld, terms, block_filter):
+    def _restricted_blocks(self, fld, terms, blocks):
         """Posting blocks for (fld, terms), optionally cut down to a WAND
         survivor set — a literal id list (tiny phase-1 sets) or a
         broadcast-joined DataFrame(block) (phase-2 survivors)."""
-        if block_filter is None:
+        if blocks is None:
             return None
         src = self.index.blocks(fld, terms)
-        if isinstance(block_filter, list):
-            return src.where(F.col("block").isin(block_filter))
-        return src.join(F.broadcast(block_filter), "block")
+        if isinstance(blocks, list):
+            return src.where(F.col("block").isin(blocks))
+        return src.join(F.broadcast(blocks), "block")
 
-    def _plan_term(
-        self, fld: str, term: str, boost: float, block_filter=None
-    ) -> _Plan:
+    def _plan_term(self, fld: str, term: str, boost: float) -> _Plan:
         stats = self.index.term_stats(fld, [term])
         if term not in stats:
             return self._empty_plan()
@@ -271,11 +314,11 @@ class Searcher:
         weight = scoring.term_weight(self.similarity, boost, idf)
         avg_len = self.index.avg_len(fld)
 
-        def build(qn):
+        def build(qn, blocks):
             decoded = self.index.decoded(
                 fld,
                 [term],
-                blocks=self._restricted_blocks(fld, [term], block_filter),
+                blocks=self._restricted_blocks(fld, [term], blocks),
             )
             return decoded.select(
                 "docid",
@@ -304,14 +347,16 @@ class Searcher:
                 fld, term, doc_id, tf, length, idf, df_count, boost, qn
             )
 
-        return _Plan(weight, build, explain)
+        return _Plan(
+            weight,
+            build,
+            explain,
+            lambda: {fld: {term}},
+            (fld, [(term, boost, idf, df_count)], False),
+        )
 
     def _plan_multi_term(
-        self,
-        fld: str,
-        predicate: Column,
-        boost: float,
-        block_filter=None,
+        self, fld: str, predicate: Column, boost: float
     ) -> _Plan:
         """Dictionary-expansion queries (prefix/wildcard/regexp/fuzzy/
         term_range) -> disjunction of term searchers (ref:
@@ -353,20 +398,15 @@ class Searcher:
         # slices broadcast; huge ones shuffle (AQE re-plans at runtime)
         exp = F.broadcast(slice_df) if n_terms <= 65536 else slice_df
 
-        def expansion_postings(filtered=None):
+        def expansion_postings():
             blocks = self.index.postings.where(
                 (F.col("field") == fld) & predicate
             )
-            if filtered is not None:
-                if isinstance(filtered, list):
-                    blocks = blocks.where(F.col("block").isin(filtered))
-                else:
-                    blocks = blocks.join(F.broadcast(filtered), "block")
             return self.index.decoded(fld, [], blocks=blocks)
 
-        def build(qn):
+        def build(qn, _blocks):
             per_term = (
-                expansion_postings(block_filter)
+                expansion_postings()
                 .join(exp, "term")
                 .select(
                     "docid",
@@ -413,7 +453,12 @@ class Searcher:
                 return E.coord_explanation(doc_id, kids, len(kids), n_terms)
             return E.sum_explanation(doc_id, kids)
 
-        return _Plan(weight, build, explain)
+        def terms():
+            # driver-side and capped: only highlight/locations ask
+            expanded = self.index.expand_terms(fld, predicate)
+            return {fld: {t for t, _df in expanded}}
+
+        return _Plan(weight, build, explain, terms)
 
     def _plan_const(self, docids_df: DataFrame, boost: float) -> _Plan:
         """Constant scorer (ref: scorer/scorer_constant.go)."""
@@ -421,7 +466,7 @@ class Searcher:
         def score(qn):
             return float(boost) * (qn if qn is not None else 1.0)
 
-        def build(qn):
+        def build(qn, _blocks):
             return docids_df.select("docid", F.lit(score(qn)).alias("score"))
 
         def explain(qn, docid, doc_id):
@@ -438,8 +483,8 @@ class Searcher:
     def _plan_conjunction(self, children: List[_Plan]) -> _Plan:
         weight = sum(c.weight for c in children)
 
-        def build(qn):
-            dfs = [c.df(qn) for c in children]
+        def build(qn, blocks):
+            dfs = [c.df(qn, blocks) for c in children]
             out = dfs[0].select("docid", F.col("score").alias("s0"))
             for i, d in enumerate(dfs[1:], 1):
                 out = out.join(
@@ -457,15 +502,22 @@ class Searcher:
                 kids.append(e)
             return E.sum_explanation(doc_id, kids)
 
-        return _Plan(weight, build, explain)
+        return _Plan(
+            weight,
+            build,
+            explain,
+            lambda: _union_terms(children),
+            _composite_wand(children, True),
+        )
 
     def _plan_disjunction(self, children: List[_Plan], min_match: int) -> _Plan:
         weight = sum(c.weight for c in children)
         total = len(children)
         min_match = max(min_match, 1)
 
-        def build(qn):
-            parts = [c.df(qn) for c in children]
+        def build(qn, blocks):
+            # only a WAND-shaped (min_match 1) disjunction gets blocks
+            parts = [c.df(qn, blocks) for c in children]
             u = parts[0]
             for p in parts[1:]:
                 u = u.unionByName(p)
@@ -489,7 +541,13 @@ class Searcher:
                 return E.coord_explanation(doc_id, kids, len(kids), total)
             return E.sum_explanation(doc_id, kids)
 
-        return _Plan(weight, build, explain)
+        return _Plan(
+            weight,
+            build,
+            explain,
+            lambda: _union_terms(children),
+            _composite_wand(children, False) if min_match == 1 else None,
+        )
 
     def _plan_boolean(
         self,
@@ -511,7 +569,7 @@ class Searcher:
         # min-disjunction is excluded even if every must clause matches.
         should_required = min_should > 0 or must_plan is None
 
-        def build(qn):
+        def build(qn, _blocks):
             base = must_plan.df(qn) if must_plan is not None else None
             should_df = should_plan.df(qn) if should_plan is not None else None
             if base is None:
@@ -571,7 +629,10 @@ class Searcher:
                 return None
             return kids[0] if len(kids) == 1 else E.sum_explanation(doc_id, kids)
 
-        return _Plan(weight, build, explain)
+        # must_not terms are left out: they never match a hit
+        return _Plan(
+            weight, build, explain, lambda: _union_terms(must + should)
+        )
 
     def _plan_phrase(
         self,
@@ -615,7 +676,7 @@ class Searcher:
         ]
         nslots = len(slots)
 
-        def build(qn):
+        def build(qn, _blocks):
             # block-intersection prefilter — the conjunction-bitmap
             # analogue (ref: index/scorch/optimize.go:25-92
             # OptimizeTFRConjunction): posting blocks are docid-range
@@ -824,7 +885,7 @@ class Searcher:
                 return slot_kids[0]
             return E.sum_explanation(doc_id, slot_kids)
 
-        return _Plan(weight, build, explain)
+        return _Plan(weight, build, explain, lambda: {fld: set(present)})
 
     # -- query dispatch --------------------------------------------------
 
@@ -843,7 +904,11 @@ class Searcher:
             self.index.term_stats(fld, [t[0] for t in tokens])
             if q.fuzziness > 0:
                 children = [
-                    self._plan_fuzzy(fld, t[0], q.fuzziness, q.prefix_length, b)
+                    self._plan_multi_term(
+                        fld,
+                        _fuzzy_predicate(t[0], q.fuzziness, q.prefix_length),
+                        b,
+                    )
                     for t in tokens
                 ]
             else:
@@ -877,14 +942,13 @@ class Searcher:
                 Q.PrefixQuery,
                 Q.WildcardQuery,
                 Q.RegexpQuery,
+                Q.FuzzyQuery,
                 Q.TermRangeQuery,
             ),
         ):
             return self._plan_multi_term(
                 fld, self._expansion_predicate(q), b
             )
-        if isinstance(q, Q.FuzzyQuery):
-            return self._plan_fuzzy(fld, q.term, q.fuzziness, q.prefix_length, b)
         if isinstance(q, Q.NumericRangeQuery):
             col = F.col(fld).cast("double")
             pred = F.lit(True)
@@ -957,8 +1021,11 @@ class Searcher:
 
             return _Plan(
                 child.weight,
-                lambda qn: child.df(qn).join(keep, "docid", "left_semi"),
+                lambda qn, _blocks: child.df(qn).join(
+                    keep, "docid", "left_semi"
+                ),
                 explain_filtered,
+                child.terms,
             )
         if isinstance(q, Q.IPRangeQuery):
             # CIDR containment over the 16-byte packed form of the
@@ -1110,22 +1177,8 @@ class Searcher:
         for f, ts in by_field.items():
             self.index.term_stats(f, ts)
 
-    def _plan_fuzzy(
-        self, fld: str, term: str, fuzziness: int, prefix_len: int, boost: float
-    ) -> _Plan:
-        """Dictionary scan with bounded edit distance
-        (ref: searcher/search_fuzzy.go:25-140); F.levenshtein is the
-        built-in DP."""
-        _check_fuzziness(fuzziness)
-        pred = F.levenshtein(F.col("term"), F.lit(term)) <= fuzziness
-        if prefix_len > 0:
-            pred = pred & F.col("term").startswith(term[:prefix_len])
-        return self._plan_multi_term(fld, pred, boost)
-
     def _expansion_predicate(self, q: Q.Query):
-        """Dictionary-slice predicate for an expansion query — shared by
-        the planner and highlighting so both see the identical term
-        set."""
+        """Dictionary-slice predicate for an expansion query."""
         if isinstance(q, Q.PrefixQuery):
             return F.col("term").startswith(q.prefix)
         if isinstance(q, Q.WildcardQuery):
@@ -1133,15 +1186,7 @@ class Searcher:
         if isinstance(q, Q.RegexpQuery):
             return F.col("term").rlike(f"^(?:{q.regexp})$")
         if isinstance(q, Q.FuzzyQuery):
-            _check_fuzziness(q.fuzziness)
-            pred = (
-                F.levenshtein(F.col("term"), F.lit(q.term)) <= q.fuzziness
-            )
-            if q.prefix_length > 0:
-                pred = pred & F.col("term").startswith(
-                    q.term[: q.prefix_length]
-                )
-            return pred
+            return _fuzzy_predicate(q.term, q.fuzziness, q.prefix_length)
         if isinstance(q, Q.TermRangeQuery):
             pred = F.lit(True)
             if q.min is not None:
@@ -1175,7 +1220,11 @@ class Searcher:
         a disjunction whose constructor computes its own queryNorm
         (search_disjunction_slice.go:75,104-116), so they norm even at
         the top level (reference regexp table: "co.*" scores 0.33875...,
-        which includes 1/sqrt(sum of idf^2))."""
+        which includes 1/sqrt(sum of idf^2)). A filter never scores
+        (ref: searcher/search_filter.go), so its child norms as if
+        searched alone."""
+        while isinstance(q, Q.FilterQuery):
+            q = q.child
         if (
             self.similarity == scoring.TFIDF
             and isinstance(
@@ -1201,86 +1250,27 @@ class Searcher:
 
     # -- block-max WAND top-k (north rule; bleve_spark/wand.py) ----------
 
-    def _wand_candidate(self, q: Q.Query):
-        """(field, [(term, boost)], conjunctive, apply_qn) when q is a
-        pure term-leaf query WAND can accelerate, else None. Duplicate
-        terms bail out so the restricted plan stays shape-identical to
-        the plain one."""
-        if isinstance(q, Q.TermQuery):
-            fld = q.field or self.default_field()
-            return fld, [(q.term, q.boost)], False, False
-        if isinstance(q, Q.MatchQuery) and q.fuzziness == 0:
-            fld = q.field or self.default_field()
-            analyzer = get_analyzer(self._analyzer_for(fld, q.analyzer))
-            tokens = analyzer.analyze(q.text)
-            terms = [t[0] for t in tokens]
-            if not terms or len(set(terms)) != len(terms):
-                return None
-            return (
-                fld,
-                [(t, q.boost) for t in terms],
-                q.operator == "and",
-                True,
-            )
-        if isinstance(q, (Q.ConjunctionQuery, Q.DisjunctionQuery)):
-            children = (
-                q.conjuncts
-                if isinstance(q, Q.ConjunctionQuery)
-                else q.disjuncts
-            )
-            if isinstance(q, Q.DisjunctionQuery) and q.min > 1:
-                return None
-            if not children or not all(
-                isinstance(c, Q.TermQuery) for c in children
-            ):
-                return None
-            flds = {c.field or self.default_field() for c in children}
-            terms = [c.term for c in children]
-            if len(flds) != 1 or len(set(terms)) != len(terms):
-                return None
-            return (
-                flds.pop(),
-                [(c.term, c.boost) for c in children],
-                isinstance(q, Q.ConjunctionQuery),
-                True,
-            )
-        return None
-
-    def _wand_scored(self, q: Q.Query, k: int) -> Optional[DataFrame]:
+    def _wand_scored(
+        self, plan: _Plan, qn: Optional[float], k: int
+    ) -> Optional[DataFrame]:
         """Exact top-k scoring over WAND-surviving posting blocks, or
-        None to fall back to the plain path. The restricted plan reuses
-        the exact same planner builders, so scores are identical by
-        construction — only blocks provably below the kth score are
-        skipped."""
-        cand = self._wand_candidate(q)
-        if cand is None or k <= 0:
+        None to fall back to the plain path. Both phases run `plan`
+        itself with its term leaves restricted to a block set, so scores
+        are identical by construction — only blocks provably below the
+        kth score are skipped."""
+        if plan.wand is None or k <= 0:
             return None
-        fld, term_boosts, conjunctive, apply_qn = cand
-        stats = self.index.term_stats(fld, [t for t, _ in term_boosts])
-        present = [(t, b) for t, b in term_boosts if t in stats]
-        if not present or (conjunctive and len(present) < len(term_boosts)):
-            return None  # plain path is already trivial/empty here
-        if sum(stats[t][0] for t, _ in present) < self.wand_min_postings:
+        fld, leaves, conjunctive = plan.wand
+        if sum(df for _t, _b, _idf, df in leaves) < self.wand_min_postings:
             return None
-        n = self.index.doc_count
-        term_idf = {
-            t: scoring.idf(self.similarity, n, stats[t][0])
-            for t, _ in present
-        }
-        weight = sum(
-            scoring.term_weight(self.similarity, b, term_idf[t])
-            for t, b in present
-        )
-        qn = None
-        if apply_qn and self.similarity == scoring.TFIDF and weight > 0:
-            qn = 1.0 / math.sqrt(weight)
+        term_idf = {t: idf for t, _b, idf, _df in leaves}
         if self.similarity == scoring.TFIDF:
             term_mult = {
-                t: (b * term_idf[t] * qn if qn is not None else 1.0)
-                for t, b in present
+                t: (b * idf * qn if qn is not None else 1.0)
+                for t, b, idf, _df in leaves
             }
         else:
-            term_mult = {t: b * term_idf[t] for t, b in present}
+            term_mult = {t: b * idf for t, b, idf, _df in leaves}
 
         pot = wand.block_potentials(
             self.index, self.similarity, fld, term_idf, term_mult, conjunctive
@@ -1288,108 +1278,29 @@ class Searcher:
         p1 = wand.phase1_blocks(pot, k)
         if not p1:
             return None
-
-        def build_plan(block_filter):
-            # full term_boosts (not just present): the disjunction coord
-            # divides by the total clause count including zero-match
-            # clauses, exactly like the plain path
-            children = [
-                self._plan_term(fld, t, b, block_filter=block_filter)
-                for t, b in term_boosts
-            ]
-            if len(children) == 1:
-                return children[0]
-            if conjunctive:
-                return self._plan_conjunction(children)
-            return self._plan_disjunction(children, 1)
-
-        rows = (
-            build_plan(p1)
-            .df(qn)
-            .orderBy(F.desc("score"))
-            .limit(k)
-            .collect()
-        )
+        rows = plan.df(qn, p1).orderBy(F.desc("score")).limit(k).collect()
         if len(rows) < k:
             return None  # too few candidates to bound theta — no pruning
         theta = min(r["score"] for r in rows)
         if not (theta > 0):
             return None
-        survivors = wand.survivor_blocks(pot, theta)
-        return build_plan(survivors).df(qn)
+        return plan.df(qn, wand.survivor_blocks(pot, theta))
 
     # -- highlighting -----------------------------------------------------
 
-    def _query_terms(self, q: Q.Query, fld: str) -> set:
-        """Analyzed terms the query contributes on `fld` — the reference
-        derives these from term vectors; we re-derive from the query tree
-        (dictionary-expanded for prefix/wildcard/regexp/fuzzy)."""
-        out: set = set()
-        expanding = (Q.PrefixQuery, Q.WildcardQuery, Q.RegexpQuery, Q.FuzzyQuery)
-
-        def walk(node):
-            qf = getattr(node, "field", None) or self.default_field()
-            if isinstance(node, Q.TermQuery):
-                if qf == fld:
-                    out.add(node.term)
-            elif isinstance(node, (Q.MatchQuery, Q.MatchPhraseQuery)):
-                if qf == fld:
-                    analyzer = get_analyzer(
-                        self._analyzer_for(fld, node.analyzer)
-                    )
-                    out.update(t[0] for t in analyzer.analyze(node.text))
-            elif isinstance(node, Q.PhraseQuery):
-                if qf == fld:
-                    for t in node.terms:
-                        if isinstance(t, (list, tuple)):
-                            out.update(t)
-                        else:
-                            out.add(t)
-            elif isinstance(node, expanding) and qf == fld:
-                pred = self._expansion_predicate(node)
-                out.update(t for t, _ in self.index.expand_terms(fld, pred))
-            elif isinstance(node, Q.ConjunctionQuery):
-                for c in node.conjuncts:
-                    walk(c)
-            elif isinstance(node, Q.DisjunctionQuery):
-                for c in node.disjuncts:
-                    walk(c)
-            elif isinstance(node, Q.BooleanQuery):
-                # must_not terms are excluded — they never match a hit
-                for c in list(node.must) + list(node.should):
-                    walk(c)
-
-        walk(q)
-        return out
-
-    def _query_fields(self, q: Q.Query) -> List[str]:
-        """Fields the query explicitly targets, in first-seen order —
-        the default highlight field set when the request names none
-        (the reference highlights fields with match locations)."""
-        out: List[str] = []
-
-        def walk(node):
-            f = getattr(node, "field", None)
-            if f and f not in out:
-                out.append(f)
-            for attr in ("conjuncts", "disjuncts", "must", "should"):
-                for c in getattr(node, attr, []) or []:
-                    walk(c)
-
-        walk(q)
-        return out
-
-    def _apply_highlight(self, page: DataFrame, req: SearchRequest):
+    def _apply_highlight(
+        self, page: DataFrame, req: SearchRequest, plan: _Plan
+    ):
         """Add <field>_fragments array columns to the (tiny) page — the
-        LoadAndHighlightFields analogue (ref: index_impl.go:659-714)."""
+        LoadAndHighlightFields analogue (ref: index_impl.go:659-714).
+        Marks the index terms the plan matches; with no fields named,
+        highlights the fields those terms are on, as the reference
+        highlights the fields that have locations."""
         hl = req.highlight
         if hl is None:
             return page, []
-        fields = (
-            list(hl.fields)
-            or self._query_fields(req.query)
-            or [self.default_field()]
-        )
+        terms = plan.terms()
+        fields = list(hl.fields) or list(terms) or [self.default_field()]
         fields = [f for f in fields if f in page.columns]
         pre, post = hl.tags()
         escape = hl.escape_content()
@@ -1414,11 +1325,10 @@ class Searcher:
 
         extra = []
         for fld in fields:
-            terms = self._query_terms(req.query, fld)
             analyzer = get_analyzer(self._analyzer_for(fld, None))
             col = f"{fld}_fragments"
             page = page.withColumn(
-                col, make_udf(analyzer, terms)(F.col(fld))
+                col, make_udf(analyzer, terms.get(fld, set()))(F.col(fld))
             )
             extra.append(col)
         return page, extra
@@ -1472,22 +1382,21 @@ class Searcher:
         ),
     )
 
-    def _apply_locations(self, page: DataFrame, req: SearchRequest):
+    def _apply_locations(self, page: DataFrame, plan: _Plan):
         """Add a `locations` column: field -> term -> [{pos, start, end,
         array_positions}] (ref: search/search.go:146-176 Locations,
-        employee suite expectations). Like the reference, offsets are
-        BYTE offsets into the field value; positions restart per array
-        element with array_positions identifying the element. Re-derived
-        by analyzing only the k page rows (term vectors stay columnar)."""
+        employee suite expectations) for the index terms the plan
+        matches. Like the reference, offsets are BYTE offsets into the
+        field value; positions restart per array element with
+        array_positions identifying the element. Re-derived by analyzing
+        only the k page rows (term vectors stay columnar)."""
+        terms_by_field = plan.terms()
         fields = [
-            f for f in self._query_fields(req.query) or [self.default_field()]
+            f for f in list(terms_by_field) or [self.default_field()]
             if f in page.columns
         ]
         if not fields:
             return page, []
-        terms_by_field = {
-            f: self._query_terms(req.query, f) for f in fields
-        }
         analyzers = {
             f: get_analyzer(self._analyzer_for(f, None)) for f in fields
         }
@@ -1529,7 +1438,9 @@ class Searcher:
             for row in zip(*cols):
                 by_field = {}
                 for f, v in zip(fields, row):
-                    got = locate_value(analyzers[f], terms_by_field[f], v)
+                    got = locate_value(
+                        analyzers[f], terms_by_field.get(f, set()), v
+                    )
                     if got:
                         by_field[f] = got
                 out.append(by_field or None)
@@ -1570,15 +1481,11 @@ class Searcher:
             # never mutate shared planner state — two concurrent requests
             # with different similarities must not race; plan through a
             # per-request clone instead
-            return Searcher(
-                self.index,
-                req.similarity,
-                self.wand_min_postings,
-                self.knn_lsh_min_docs,
-                self.knn_lsh_planes,
-                self.knn_lsh_probe,
-                self.knn_lsh_tables,
-            ).search(req)
+            clone = copy.copy(self)
+            clone.similarity = req.similarity
+            return clone.search(req)
+        plan = self.plan(req.query)
+        qn = self._query_norm(req.query, plan)
         scored = None
         score_first_sort = (
             len(req.sort) > 0
@@ -1592,9 +1499,9 @@ class Searcher:
             and req.search_after is None
             and score_first_sort
         ):
-            scored = self._wand_scored(req.query, req.from_ + req.size)
+            scored = self._wand_scored(plan, qn, req.from_ + req.size)
         if scored is None:
-            scored = self.matches(req.query)
+            scored = plan.df(qn)
         for kr in req.knn:
             # top-k by the field's similarity metric over the stored
             # vector column, then disjunction-merge with the query hits
@@ -1754,9 +1661,9 @@ class Searcher:
             else:
                 pred = _keyset_pred(specs, key_cols, req.search_after)
                 page = hits.where(pred).orderBy(*sort_cols).limit(req.size)
-            page, hl_cols = self._apply_highlight(page, req)
+            page, hl_cols = self._apply_highlight(page, req, plan)
             if req.include_locations:
-                page, loc_cols = self._apply_locations(page, req)
+                page, loc_cols = self._apply_locations(page, plan)
                 hl_cols = hl_cols + loc_cols
             page = page.select(*out_cols, *hl_cols)
             page, facets = self._finish_faceted(hits, page, req)
@@ -1775,9 +1682,9 @@ class Searcher:
                 .where(F.col("_rn") > req.from_)
                 .drop("_rn")
             )
-        page, hl_cols = self._apply_highlight(page, req)
+        page, hl_cols = self._apply_highlight(page, req, plan)
         if req.include_locations:
-            page, loc_cols = self._apply_locations(page, req)
+            page, loc_cols = self._apply_locations(page, plan)
             hl_cols = hl_cols + loc_cols
         page = page.select(*out_cols, *hl_cols)
 
@@ -1950,6 +1857,17 @@ def _keyset_pred(specs, key_cols, values, flip: bool = False) -> Column:
         pred = clause if pred is None else pred | clause
         eq_here = col == lit
         eq_prefix = eq_here if eq_prefix is None else eq_prefix & eq_here
+    return pred
+
+
+def _fuzzy_predicate(term: str, fuzziness: int, prefix_len: int) -> Column:
+    """Dictionary terms within `fuzziness` edits of `term` that share its
+    first `prefix_len` chars (ref: searcher/search_fuzzy.go:25-140);
+    F.levenshtein is the built-in DP."""
+    _check_fuzziness(fuzziness)
+    pred = F.levenshtein(F.col("term"), F.lit(term)) <= fuzziness
+    if prefix_len > 0:
+        pred = pred & F.col("term").startswith(term[:prefix_len])
     return pred
 
 

@@ -96,23 +96,3 @@ def test_per_shard_idf(alias):
     # child shard0 has N=2 docs, df("a")=1 -> idf = 1 + ln(2/2)
     exp = scoring.tfidf_score_py(1, 1, scoring.idf(scoring.TFIDF, 2, 1))
     assert rows[0]["score"] == pytest.approx(exp, rel=1e-12)
-
-
-def test_concurrent_mode_matches_lazy_union(spark, alias):
-    """concurrent=True (one Spark job per child, the reference's
-    goroutine fan-out) must return exactly what the lazy-union mode
-    returns — same hits, same per-shard-IDF scores, same order."""
-    conc = IndexAlias(alias.searchers, concurrent=True)
-    req = SearchRequest(
-        query=parse_query({"match_all": {}}), size=10, fields=("name",)
-    )
-    lazy_rows = [
-        (r["_id"], r["name"], round(r["score"], 10))
-        for r in alias.search(req).hits.collect()
-    ]
-    conc_rows = [
-        (r["_id"], r["name"], round(r["score"], 10))
-        for r in conc.search(req).hits.collect()
-    ]
-    assert lazy_rows == conc_rows
-    assert {r[0] for r in lazy_rows} == {"a", "b", "c", "d"}

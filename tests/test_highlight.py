@@ -2,6 +2,10 @@
 fragmenter/formatter tests (/root/reference/search/highlight/fragmenter/
 simple/simple_test.go, format/html/html_test.go patterns)."""
 
+import re
+
+import pytest
+
 from bleve_spark import HighlightRequest, Searcher, SearchRequest
 from bleve_spark import query as Q
 from bleve_spark.analysis import get_analyzer
@@ -75,3 +79,65 @@ def test_search_with_highlight(built_index):
     for r in rows:
         frags = r["content_fragments"]
         assert frags and any("<mark>" in f for f in frags)
+
+
+# -- highlight and include_locations mark the terms the plan matched --------
+
+_MARK = re.compile(r"<mark>(.*?)</mark>")
+
+# name -> (query, predicate every marked index term satisfies); each shape
+# matches and scores, so its hits must carry marks
+PLAN_MARKED = {
+    "filter_match": (
+        Q.FilterQuery(
+            child=Q.MatchQuery(field="content", text="apache commit"),
+            predicate="lang = 'go'",
+        ),
+        lambda t: t in {"apache", "commit"},
+    ),
+    "fuzzy_match": (
+        Q.MatchQuery(field="content", text="retun", fuzziness=1),
+        lambda t: t == "return",
+    ),
+    "term_range": (
+        Q.TermRangeQuery(
+            field="content", min="retura", max="returz", inclusive_max=True
+        ),
+        lambda t: "retura" <= t <= "returz",
+    ),
+}
+
+
+@pytest.mark.parametrize("name", list(PLAN_MARKED))
+def test_highlight_marks_plan_terms(built_index, name):
+    q, ok = PLAN_MARKED[name]
+    res = Searcher(built_index).search(
+        SearchRequest(query=q, size=3, highlight=HighlightRequest())
+    )
+    rows = res.hits.collect()
+    assert rows and "content_fragments" in res.hits.columns
+    for r in rows:
+        marked = {
+            m.lower() for f in r["content_fragments"] for m in _MARK.findall(f)
+        }
+        assert marked and all(ok(t) for t in marked), (r["_id"], marked)
+
+
+@pytest.mark.parametrize("name", list(PLAN_MARKED))
+def test_locations_mark_plan_terms(built_index, name):
+    q, ok = PLAN_MARKED[name]
+    res = Searcher(built_index).search(
+        SearchRequest(
+            query=q, size=3, fields=("content",), include_locations=True
+        )
+    )
+    rows = res.hits.collect()
+    assert rows
+    for r in rows:
+        locs = (r["locations"] or {}).get("content") or {}
+        assert locs and all(ok(t) for t in locs), (r["_id"], locs.keys())
+        assert all(
+            r["content"][l["start"] : l["end"]].lower() == t
+            for t, ls in locs.items()
+            for l in ls
+        )

@@ -265,6 +265,25 @@ def test_filter_query(fixture_index):
     assert [g[0] for g in got2] == ["a"]
 
 
+@pytest.mark.parametrize("similarity", [scoring.TFIDF, scoring.BM25])
+def test_filter_keeps_child_query_norm(built_index, similarity):
+    """A filter never scores (ref: searcher/search_filter.go), so a
+    filtered doc scores what the child alone gives it — queryNorm
+    included."""
+    s = Searcher(built_index)
+    child = Q.MatchQuery(field="content", text="apache commit")
+
+    def scores(q):
+        req = SearchRequest(query=q, size=300, similarity=similarity)
+        return {r["_id"]: r["score"] for r in s.search(req).hits.collect()}
+
+    alone = scores(child)
+    got = scores(Q.FilterQuery(child=child, predicate="lang = 'go'"))
+    assert got and set(got) < set(alone)
+    for _id, score in got.items():
+        assert score == pytest.approx(alone[_id], rel=1e-12), _id
+
+
 def test_ipv6_range_query(spark):
     """IPv6 (and v4-mapped) CIDR containment via 16-byte binary compare
     (ref stores 16-byte IP terms, query/ip_range.go)."""

@@ -20,10 +20,10 @@ def _run(index, q, similarity, wand_min):
 QUERIES = [
     Q.TermQuery(field="content", term="the"),
     Q.MatchQuery(field="content", text="return value"),
-    Q.MatchQuery(field="content", text="return value", operator="and"),
+    Q.MatchQuery(field="content", text="return license", operator="and"),
     Q.ConjunctionQuery(
         conjuncts=[
-            Q.TermQuery(field="content", term="def"),
+            Q.TermQuery(field="content", term="the"),
             Q.TermQuery(field="content", term="return"),
         ]
     ),
@@ -47,24 +47,36 @@ def test_wand_matches_plain(built_index, similarity, qi):
 
 
 def test_wand_engages(built_index):
-    """Sanity: with the floor at 0 the candidate detector actually fires
-    for a hot term (otherwise the parametrized test proves nothing)."""
+    """Sanity: with the floor at 0 WAND actually prunes the plan
+    search() runs for every candidate shape (otherwise the parametrized
+    test proves nothing)."""
     s = Searcher(built_index, wand_min_postings=0)
-    scored = s._wand_scored(Q.TermQuery(field="content", term="the"), 10)
-    assert scored is not None
-    assert scored.count() > 0
+    for q in QUERIES + [Q.MatchQuery(field="content", text="return")]:
+        plan = s.plan(q)
+        # k=1: phase 1 must find k hits, and the conjunctions are rare
+        scored = s._wand_scored(plan, s._query_norm(q, plan), 1)
+        assert scored is not None, q
+        assert scored.count() > 0, q
 
 
 def test_wand_skips_unsupported_shapes(built_index):
     s = Searcher(built_index, wand_min_postings=0)
-    assert s._wand_candidate(Q.MatchPhraseQuery(field="content", text="a b")) is None
-    assert s._wand_candidate(Q.PrefixQuery(field="content", prefix="re")) is None
-    assert (
-        s._wand_candidate(
-            Q.MatchQuery(field="content", text="return", fuzziness=1)
-        )
-        is None
-    )
+    for q in [
+        Q.MatchPhraseQuery(field="content", text="return value"),
+        Q.PrefixQuery(field="content", prefix="re"),
+        Q.MatchQuery(field="content", text="return", fuzziness=1),
+        # a conjunction with a term absent from the dictionary is empty
+        Q.MatchQuery(field="content", text="return value", operator="and"),
+        Q.DisjunctionQuery(
+            disjuncts=[
+                Q.TermQuery(field="content", term="return"),
+                Q.TermQuery(field="content", term="value"),
+            ],
+            min=2,
+        ),
+        Q.BooleanQuery(must=[Q.TermQuery(field="content", term="return")]),
+    ]:
+        assert s.plan(q).wand is None, q
 
 
 def test_search_after_keyset(built_index):
