@@ -5,16 +5,24 @@ The reference's IndexSnapshot/TermFieldReader analogue
 parquet tables plus tiny driver-side caches (doc count, per-field stats,
 per-term df lookups — the same two lookups bleve does per term at searcher
 construction, /root/reference/search/searcher/search_term.go:57-70).
+
+Driver-side pyarrow readers over the same files serve the search route
+that starts no Spark job.
 """
 
 from __future__ import annotations
 
+import json
 import os
 from functools import cached_property
-from typing import Dict, Iterable, List, Optional, Tuple
+from typing import Dict, Iterable, List, Optional, Sequence, Tuple
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
+import pyarrow.dataset as ds
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
 
 from . import codec
@@ -35,6 +43,17 @@ DECODED_SCHEMA = T.StructType(
 
 
 _U64_ZERO = np.uint64(0)
+
+def _successor(prefix: str) -> Optional[str]:
+    """The least string above every string that starts with `prefix`,
+    or None when there is none (an empty or all-U+10FFFF prefix)."""
+    p = prefix.rstrip("\U0010ffff")
+    if not p:
+        return None
+    nxt = ord(p[-1]) + 1
+    if 0xD800 <= nxt <= 0xDFFF:  # surrogates are not valid in UTF-8
+        nxt = 0xE000
+    return p[:-1] + chr(nxt)
 
 
 def _decode_batch(pdf: "pd.DataFrame", need_positions: bool) -> "pd.DataFrame":
@@ -117,7 +136,16 @@ class SearchIndex:
     (ref: index/scorch/snapshot_index.go:81, README.md:108-133). Doc
     count, field stats and the tbucket fanout come from the segments'
     add_segment actions, with no Spark job. A new SearchIndex instance
-    = a new MVCC snapshot."""
+    = a new MVCC snapshot.
+
+    The driver-side readers read the snapshot's parquet files with
+    pyarrow filter pushdown and start no Spark job: `term_stats` and
+    `prefix_terms` (dictionary slices summed over segments),
+    `read_postings` (the terms' tbucket= dirs, decoded, dead docids
+    dropped), `read_docs` (a docid-pruned page of stored fields),
+    `live_docids`, `dead_docids` and `docs_schema`. The search route
+    with no Spark job runs on them; the Spark route's term lookups use
+    `term_stats` too."""
 
     def __init__(
         self,
@@ -136,6 +164,8 @@ class SearchIndex:
         self.mapping = mapping
         self._snap = read_snapshot(index_path, version)
         self._seg_metas = self._snap.metas()
+        self._datasets: Dict[str, ds.Dataset] = {}
+        self._term_stats_cache: Dict[Tuple[str, str], Optional[Tuple[int, int]]] = {}
 
     def _table(self, name: str) -> DataFrame:
         paths = [os.path.join(m["dir"], name) for m in self._seg_metas]
@@ -162,7 +192,9 @@ class SearchIndex:
     @cached_property
     def deleted_docids(self) -> Optional[DataFrame]:
         """Docids the snapshot's dead files name: older versions of
-        upserted ids and deleted docs, resolved at commit time."""
+        upserted ids and deleted docs, resolved at commit time. The
+        DataFrame the Spark route anti-joins; `dead_docids` is the same
+        set as a driver-side array."""
         files = self._snap.dead_files()
         return self.spark.read.parquet(*files) if files else None
 
@@ -232,33 +264,168 @@ class SearchIndex:
         st = self.field_stats.get(field)
         return float(st["avg_len"]) if st else 1.0
 
-    # -- dictionary lookups (driver-side, tiny) ---------------------------
+    # -- driver-side readers (pyarrow over the snapshot's files) --------
+
+    def _dirs(self, name: str) -> List[Tuple[dict, str]]:
+        """(segment meta, table dir) per segment of the snapshot."""
+        if not self._seg_metas:
+            raise ValueError(
+                f"{self.index_path} has no committed segment to read {name!r} from"
+            )
+        return [(m, os.path.join(m["dir"], name)) for m in self._seg_metas]
+
+    def _dataset(self, path: str) -> "ds.Dataset":
+        """One parquet dataset per directory, listed once: the snapshot's
+        files never change."""
+        if path not in self._datasets:
+            self._datasets[path] = ds.dataset(path, format="parquet")
+        return self._datasets[path]
+
+    @cached_property
+    def dead_docids(self) -> np.ndarray:
+        """Sorted docids the snapshot's dead files name, read once."""
+        files = self._snap.dead_files()
+        if not files:
+            return np.empty(0, dtype=np.int64)
+        return np.unique(pq.read_table(files, columns=["docid"])["docid"].to_numpy())
+
+    def _dictionary_slice(self, field: str, cond) -> Tuple[List[str], np.ndarray, np.ndarray]:
+        """(terms, df, cf) of the dictionary rows of `field` matching the
+        pyarrow expression `cond` over `term`, summed over segments as
+        `dictionary`'s groupBy sums them."""
+        filt = (pc.field("field") == field) & cond
+        table = pa.concat_tables(
+            self._dataset(d).to_table(columns=["term", "df", "cf"], filter=filt)
+            for _m, d in self._dirs("dictionary")
+        )
+        if len(self._seg_metas) > 1:
+            table = table.group_by("term").aggregate(
+                [("df", "sum"), ("cf", "sum")]
+            ).rename_columns(["term", "df", "cf"])
+        return (
+            table["term"].to_pylist(),
+            table["df"].to_numpy().astype(np.int64),
+            table["cf"].to_numpy().astype(np.int64),
+        )
 
     def term_stats(self, field: str, terms: Iterable[str]) -> Dict[str, Tuple[int, int]]:
-        """term -> (df, cf). Equivalent of TermFieldReader.Count()
-        (ref: search/searcher/search_term.go:57-64). Memoized per
-        (field, term) — planner phases re-resolve the same terms and each
-        lookup is a driver-side Spark job."""
-        if not hasattr(self, "_term_stats_cache"):
-            self._term_stats_cache: Dict[Tuple[str, str], Optional[Tuple[int, int]]] = {}
+        """term -> (df, cf); absent terms are left out. Equivalent of
+        TermFieldReader.Count() (ref: search/searcher/search_term.go:57-64).
+        Reads the segments' dictionary files with pyarrow, no Spark job,
+        and memoizes per (field, term): planner phases re-resolve the
+        same terms."""
+        cache = self._term_stats_cache
         terms = list(dict.fromkeys(terms))
-        missing = [t for t in terms if (field, t) not in self._term_stats_cache]
+        missing = [t for t in terms if (field, t) not in cache]
         if missing:
-            rows = (
-                self.dictionary.where(
-                    (F.col("field") == field) & F.col("term").isin(missing)
-                )
-                .select("term", "df", "cf")
-                .collect()
+            got, df, cf = self._dictionary_slice(
+                field, pc.field("term").isin(missing)
             )
-            found = {r["term"]: (int(r["df"]), int(r["cf"])) for r in rows}
+            found = {t: (int(a), int(b)) for t, a, b in zip(got, df, cf)}
             for t in missing:
-                self._term_stats_cache[(field, t)] = found.get(t)
-        return {
-            t: self._term_stats_cache[(field, t)]
-            for t in terms
-            if self._term_stats_cache[(field, t)] is not None
-        }
+                cache[(field, t)] = found.get(t)
+        return {t: cache[(field, t)] for t in terms if cache[(field, t)] is not None}
+
+    def prefix_terms(
+        self, field: str, prefix: str, max_rows: int
+    ) -> Optional[Tuple[List[str], np.ndarray]]:
+        """(terms, df) of the dictionary slice `term` starting with
+        `prefix`, read as the range prefix <= term < successor(prefix) so
+        parquet row-group statistics prune it. None, with the slice left
+        unread, when the segments hold `max_rows` or more of its rows: a
+        count over the same filter bounds what the driver loads."""
+        cond = pc.field("term") >= prefix
+        upper = _successor(prefix)
+        if upper is not None:
+            cond = cond & (pc.field("term") < upper)
+        filt = (pc.field("field") == field) & cond
+        rows = sum(
+            self._dataset(d).count_rows(filter=filt)
+            for _m, d in self._dirs("dictionary")
+        )
+        if rows >= max_rows:
+            return None
+        terms, df, _cf = self._dictionary_slice(field, cond)
+        return terms, df
+
+    def read_postings(
+        self, field: str, terms: Iterable[str], need_positions: bool = False
+    ) -> "pd.DataFrame":
+        """Decoded live postings (term, docid, tf, length, positions) of
+        (field, term in terms): lists only the terms' tbucket= dirs of
+        each segment (a segment that logs no fanout is read whole),
+        decodes with `_decode_batch` and drops the snapshot's dead
+        docids."""
+        from .build import tbucket_of
+
+        terms = list(dict.fromkeys(terms))
+        cols = ["field", "term", "docids_enc", "tfs_enc", "lens_enc"]
+        if need_positions:
+            cols.append("pos_enc")
+        filt = (pc.field("field") == field) & pc.field("term").isin(terms)
+        parts = []
+        for m, pdir in self._dirs("postings") if terms else ():
+            n = m.get("tbuckets")
+            dirs = [pdir]
+            if n:
+                dirs = [
+                    os.path.join(pdir, f"tbucket={b}")
+                    for b in sorted({tbucket_of(field, t, n) for t in terms})
+                ]
+            parts.extend(
+                self._dataset(d).to_table(columns=cols, filter=filt)
+                for d in dirs
+                if os.path.isdir(d)
+            )
+        if parts:
+            blocks = pa.concat_tables(parts).to_pandas()
+        else:
+            blocks = pd.DataFrame({c: [] for c in cols}, dtype=object)
+        out = _decode_batch(blocks, need_positions)
+        if self.dead_docids.size:
+            out = out[~np.isin(out["docid"].to_numpy(), self.dead_docids)]
+        return out.drop(columns="field").reset_index(drop=True)
+
+    def live_docids(self) -> np.ndarray:
+        """Every live docid: each segment's [docid_start, docid_end)
+        minus the dead ones."""
+        ranges = [
+            np.arange(m["docid_start"], m["docid_end"], dtype=np.int64)
+            for m in self._seg_metas
+        ]
+        live = np.concatenate(ranges) if ranges else np.empty(0, np.int64)
+        return np.setdiff1d(live, self.dead_docids, assume_unique=True)
+
+    def read_docs(self, docids: np.ndarray, columns: Sequence[str]) -> "pa.Table":
+        """`docid` plus `columns` of the docs rows of `docids` (sorted,
+        unique), in docid order. Docs are written docid-sorted, so the
+        docid range prunes files and row groups before the set filter."""
+        # the first segment's schema types every column (the docs_schema
+        # the local route checks `columns` against); a segment written
+        # without one of them gives nulls, as Spark's read of `docs` does
+        dirs = self._dirs("docs")
+        first = self._dataset(dirs[0][1]).schema
+        parts = [first.empty_table().select(["docid", *columns])]
+        for m, d in dirs:
+            lo, hi = np.searchsorted(docids, [m["docid_start"], m["docid_end"]])
+            if hi <= lo:
+                continue
+            sub = docids[lo:hi]
+            docid = pc.field("docid")
+            filt = (docid >= int(sub[0])) & (docid <= int(sub[-1])) & docid.isin(sub)
+            dset = self._dataset(d)
+            have = [c for c in columns if c in dset.schema.names]
+            parts.append(dset.to_table(columns=["docid", *have], filter=filt))
+        table = pa.concat_tables(parts, promote_options="default")
+        return table.take(pc.sort_indices(table["docid"]))
+
+    @cached_property
+    def docs_schema(self) -> T.StructType:
+        """The Spark schema of `docs`, from the schema Spark wrote into
+        the first segment's parquet footers; no Spark job."""
+        arrow = self._dataset(self._dirs("docs")[0][1]).schema
+        meta = arrow.metadata[b"org.apache.spark.sql.parquet.row.metadata"]
+        return T.StructType.fromJson(json.loads(meta))
 
     def expansion(self, field: str, predicate) -> DataFrame:
         """Lazy dictionary slice (term, df) matching a Column predicate

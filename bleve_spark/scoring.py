@@ -23,6 +23,7 @@ from __future__ import annotations
 
 import math
 
+import numpy as np
 from pyspark.sql import Column, functions as F
 
 BM25_K1 = 1.2
@@ -87,18 +88,27 @@ def term_score_col(
     return F.lit(boost) * idf * tf_d * F.lit(BM25_K1 + 1.0) / denom
 
 
-def tfidf_score_py(
-    tf: float, length: float, idf_val: float, query_weight: float = 1.0
-) -> float:
-    """Driver-side scalar version (for golden tests)."""
-    import numpy as np
-
-    norm = float(np.float32(1.0 / math.sqrt(max(length, 1))))
-    return math.sqrt(tf) * norm * idf_val * query_weight
-
-
-def bm25_score_py(
-    tf: float, length: float, idf_val: float, avg_len: float, boost: float = 1.0
-) -> float:
-    denom = tf + BM25_K1 * (1.0 - BM25_B + BM25_B * length / max(avg_len, 1e-9))
-    return boost * idf_val * tf * (BM25_K1 + 1.0) / denom
+def term_scores(
+    similarity: str,
+    tf,
+    length,
+    idf,
+    boost: float,
+    query_norm: float | None,
+    avg_len: float,
+) -> np.ndarray:
+    """`term_score_col` over numpy arrays, bit for bit: the same
+    operation order and the same float32 norm. `idf` is a scalar or one
+    value per posting."""
+    tf_d = np.asarray(tf, dtype=np.float64)
+    len_d = np.asarray(length, dtype=np.float64)
+    if similarity == TFIDF:
+        norm = (1.0 / np.sqrt(np.maximum(len_d, 1.0))).astype(np.float32)
+        score = np.sqrt(tf_d) * norm.astype(np.float64) * idf
+        if query_norm is not None:
+            score = score * (boost * idf * query_norm)
+        return score
+    denom = tf_d + BM25_K1 * (
+        (1.0 - BM25_B) + BM25_B * len_d / max(avg_len, 1e-9)
+    )
+    return boost * idf * tf_d * (BM25_K1 + 1.0) / denom

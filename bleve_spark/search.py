@@ -16,6 +16,10 @@ Iterator -> DataFrame mapping (SURVEY.md §2.4):
   boolean must/not     -> left-semi/left-anti joins
   phrase positions     -> slot-union + groupBy(docid) + position-chain check
   dictionary automaton -> predicates on the dictionary table
+
+The same plan also runs on the driver when its posting set is small
+(the Searcher docstring): numpy over pyarrow reads of the index files,
+closest to the reference's in-process iterators, with no Spark job.
 """
 
 from __future__ import annotations
@@ -25,7 +29,9 @@ import math
 from dataclasses import dataclass, field as dc_field
 from typing import Dict, List, Optional, Sequence, Tuple
 
+import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import Column, DataFrame, functions as F, types as T
 
 from . import explain as E
@@ -41,6 +47,24 @@ from .index import SearchIndex
 # 0 = unlimited, matching the reference default
 # (ref: search/searcher/search_disjunction.go:25-28).
 DisjunctionMaxClauseCount = 0
+
+# Gate of the driver-local route: a plan with a local form runs on the
+# driver while it decodes fewer postings than this; 0 sends every plan
+# to Spark. search() end to end (search + collect, median of 3 warm
+# runs, 1 for a Spark run past 20 s) on a 4-core host, over generated code corpora of 20,000 and
+# 100,000 docs, local route vs Spark route: terms of 6k-100k postings
+# 0.05-0.24 s vs 0.75-1.74 s; OR matches of 0.26, 0.51, 1.09, 2.03 and
+# 4.05 M postings 0.32, 0.41, 0.99, 1.40 and 3.79 s vs 7.7, 16.9, 9.9,
+# 23.9 and 36.4 s. The local route won at every size measured, so the
+# gate is the largest size measured, not a crossover: above it (and
+# for one term above 100k postings) the split is unmeasured, and the
+# gate also bounds the postings the driver holds in memory.
+LOCAL_MAX_POSTINGS = 4_000_000
+# a posting decoded with its positions, in plain postings: phrases of
+# 40k-90k postings took 0.81-1.91 s locally vs 1.25-2.30 s on Spark,
+# 120k 2.47 vs 2.56 s, and 150k-200k 2.1-5.6 s vs 2.0-5.0 s, so the
+# crossover is near 125k = LOCAL_MAX_POSTINGS / 32
+POSITIONS_COST = 32
 
 # ref: search/searcher/search_fuzzy.go:25 (var MaxFuzziness = 2) — the
 # reference caps the Levenshtein automaton at distance 2 and rejects
@@ -171,16 +195,29 @@ class _Plan:
     idf, df)] when the plan is a term leaf, or a conjunction/disjunction
     of term leaves on one field, that block-max WAND can prune; such a
     plan's build honours `blocks`, a survivor block set its term leaves
-    restrict their decode to. Every other plan ignores `blocks`."""
+    restrict their decode to. Every other plan ignores `blocks`.
+
+    `local(query_norm) -> (docids, scores)` runs the plan on the driver
+    over the index's pyarrow readers, with no Spark job: docids sorted
+    and unique (int64), scores float64. It is None for shapes with no
+    local form (expansions other than prefix, constant scorers, filters
+    and composites over any of them). `postings` is the number of
+    postings the local form decodes (one decoded with positions counts
+    POSITIONS_COST), which the search() cost gate reads."""
 
     empty = False  # set on the plan of a query that matches nothing
 
-    def __init__(self, weight: float, build, explain, terms=dict, wand=None):
+    def __init__(
+        self, weight: float, build, explain, terms=dict, wand=None,
+        local=None, postings=0,
+    ):
         self.weight = weight
         self._build = build
         self.explain = explain
         self._terms = terms
         self.wand = wand
+        self.local = local
+        self.postings = postings
 
     def df(self, query_norm: Optional[float], blocks=None) -> DataFrame:
         return self._build(query_norm, blocks)
@@ -216,12 +253,50 @@ def _composite_wand(children: Sequence[_Plan], conjunctive: bool):
     return fields.pop(), leaves, conjunctive
 
 
+def _no_hits():
+    return np.empty(0, dtype=np.int64), np.empty(0, dtype=np.float64)
+
+
+def _by_docid(docids: np.ndarray, scores: np.ndarray):
+    """Per-doc (docids, score sums, match counts) of (docid, score)
+    rows, summed in row order."""
+    uniq, inv = np.unique(docids, return_inverse=True)
+    return (
+        uniq,
+        np.bincount(inv, weights=scores, minlength=len(uniq)),
+        np.bincount(inv, minlength=len(uniq)),
+    )
+
+
+def _locals(plans: Sequence[_Plan]):
+    """The plans' local closures, or None unless every plan has one."""
+    if any(p.local is None for p in plans):
+        return None
+    return [p.local for p in plans]
+
+
 def _has_docid(df: DataFrame, docid: int) -> bool:
     """Whether a DataFrame with a docid column holds `docid`."""
     return bool(df.where(F.col("docid") == docid).limit(1).collect())
 
 
 class Searcher:
+    """Plans a query once and runs the plan on one of two routes.
+
+    The driver-local route runs `plan.local` with numpy over the index's
+    pyarrow readers and wraps the page as a local DataFrame: no Spark
+    job, `hits.collect()` included. search() takes it when the plan has
+    a local form (term, match, phrase, conjunction, disjunction, boolean
+    and prefix plans), the request needs nothing Spark-only (facets,
+    kNN, highlight, include_locations, search_after/before, a sort that
+    is not score-first) and the plan decodes fewer postings than the
+    module's LOCAL_MAX_POSTINGS (4 M; a posting read with its positions
+    counts POSITIONS_COST = 32). Both figures are measured end to end,
+    in their comment. Otherwise the Spark route runs `plan.df`; setting
+    LOCAL_MAX_POSTINGS to 0 forces it. Both routes read the same
+    plan-time state, so they return the same ids in the same order and
+    the same scores."""
+
     def __init__(
         self,
         index: SearchIndex,
@@ -277,7 +352,10 @@ class Searcher:
         ).limit(0)
 
     def _empty_plan(self) -> _Plan:
-        plan = _Plan(0.0, lambda qn, blocks: self._empty(), lambda *_: None)
+        plan = _Plan(
+            0.0, lambda qn, blocks: self._empty(), lambda *_: None,
+            local=lambda qn: _no_hits(),
+        )
         plan.empty = True
         return plan
 
@@ -347,16 +425,35 @@ class Searcher:
                 fld, term, doc_id, tf, length, idf, df_count, boost, qn
             )
 
+        def local(qn):
+            p = self.index.read_postings(fld, [term])
+            order = np.argsort(p["docid"].to_numpy(), kind="stable")
+            return p["docid"].to_numpy()[order], scoring.term_scores(
+                self.similarity,
+                p["tf"].to_numpy()[order],
+                p["length"].to_numpy()[order],
+                idf,
+                boost,
+                qn,
+                avg_len,
+            )
+
         return _Plan(
             weight,
             build,
             explain,
             lambda: {fld: {term}},
             (fld, [(term, boost, idf, df_count)], False),
+            local,
+            df_count,
         )
 
     def _plan_multi_term(
-        self, fld: str, predicate: Column, boost: float
+        self,
+        fld: str,
+        predicate: Column,
+        boost: float,
+        prefix: Optional[str] = None,
     ) -> _Plan:
         """Dictionary-expansion queries (prefix/wildcard/regexp/fuzzy/
         term_range) -> disjunction of term searchers (ref:
@@ -374,29 +471,55 @@ class Searcher:
         search_disjunction.go:105-115): when DisjunctionMaxClauseCount
         is nonzero and the expansion exceeds it, raises
         TooManyClausesError exactly like the reference (whose default is
-        also 0 = unlimited, search_disjunction.go:28)."""
-        slice_df = self.index.expansion(fld, predicate)
-        idf_c = scoring.idf_col(
-            self.similarity, self.index.doc_count, F.col("df")
-        )
-        if self.similarity == scoring.TFIDF:
-            w = F.lit(boost) * idf_c
-            weight_col = w * w
+        also 0 = unlimited, search_disjunction.go:28).
+
+        A prefix (the `prefix` argument) whose slice holds fewer than
+        LOCAL_MAX_POSTINGS rows reads it on the driver instead, as a
+        row-group-pruned range read: the slice gives (clause count,
+        weight) with no Spark job, and the plan gets a local form over
+        the slice's terms. Every slice term has a posting, so a larger
+        slice could never run locally; it is not read, and the plan is
+        the Spark agg's as for any other expansion."""
+        n_docs = self.index.doc_count
+        idf_c = scoring.idf_col(self.similarity, n_docs, F.col("df"))
+        got = None
+        if prefix is not None:
+            got = self.index.prefix_terms(fld, prefix, LOCAL_MAX_POSTINGS)
+        if got is not None:
+            slice_terms, dfs = got
+            term_idf = {
+                t: scoring.idf(self.similarity, n_docs, int(d))
+                for t, d in zip(slice_terms, dfs)
+            }
+            n_terms = len(slice_terms)
+            weight = sum(
+                scoring.term_weight(self.similarity, boost, i)
+                for i in term_idf.values()
+            )
         else:
-            weight_col = F.lit(0.0)
-        row = slice_df.agg(
-            F.count("*").alias("n"), F.sum(weight_col).alias("w")
-        ).collect()[0]
-        n_terms = int(row["n"])
+            if self.similarity == scoring.TFIDF:
+                w = F.lit(boost) * idf_c
+                weight_col = w * w
+            else:
+                weight_col = F.lit(0.0)
+            row = (
+                self.index.expansion(fld, predicate)
+                .agg(F.count("*").alias("n"), F.sum(weight_col).alias("w"))
+                .collect()[0]
+            )
+            n_terms = int(row["n"])
+            weight = float(row["w"]) if row["w"] is not None else 0.0
         if DisjunctionMaxClauseCount and n_terms > DisjunctionMaxClauseCount:
             raise TooManyClausesError(fld, n_terms, DisjunctionMaxClauseCount)
         if n_terms == 0:
             return self._empty_plan()
-        weight = float(row["w"]) if row["w"] is not None else 0.0
         avg_len = self.index.avg_len(fld)
-        # known expansion cardinality picks the join strategy: small
-        # slices broadcast; huge ones shuffle (AQE re-plans at runtime)
-        exp = F.broadcast(slice_df) if n_terms <= 65536 else slice_df
+
+        def exp():
+            # known expansion cardinality picks the join strategy: small
+            # slices broadcast; huge ones shuffle (AQE re-plans at runtime)
+            slice_df = self.index.expansion(fld, predicate)
+            return F.broadcast(slice_df) if n_terms <= 65536 else slice_df
 
         def expansion_postings():
             blocks = self.index.postings.where(
@@ -407,7 +530,7 @@ class Searcher:
         def build(qn, _blocks):
             per_term = (
                 expansion_postings()
-                .join(exp, "term")
+                .join(exp(), "term")
                 .select(
                     "docid",
                     scoring.term_score_col(
@@ -435,7 +558,7 @@ class Searcher:
             rows = (
                 expansion_postings()
                 .where(F.col("docid") == docid)
-                .join(exp, "term")
+                .join(exp(), "term")
                 .select("term", "tf", "length", "df")
                 .collect()
             )
@@ -458,7 +581,30 @@ class Searcher:
             expanded = self.index.expand_terms(fld, predicate)
             return {fld: {t for t, _df in expanded}}
 
-        return _Plan(weight, build, explain, terms)
+        def local(qn):
+            p = self.index.read_postings(fld, slice_terms)
+            docids, score, nmatch = _by_docid(
+                p["docid"].to_numpy(),
+                scoring.term_scores(
+                    self.similarity,
+                    p["tf"].to_numpy(),
+                    p["length"].to_numpy(),
+                    p["term"].map(term_idf).to_numpy(np.float64),
+                    boost,
+                    qn,
+                    avg_len,
+                ),
+            )
+            if self.similarity == scoring.TFIDF:
+                score = score * nmatch / n_terms
+            return docids, score
+
+        if got is None:
+            return _Plan(weight, build, explain, terms)
+        return _Plan(
+            weight, build, explain, terms, local=local,
+            postings=int(dfs.sum()),
+        )
 
     def _plan_const(self, docids_df: DataFrame, boost: float) -> _Plan:
         """Constant scorer (ref: scorer/scorer_constant.go)."""
@@ -502,12 +648,28 @@ class Searcher:
                 kids.append(e)
             return E.sum_explanation(doc_id, kids)
 
+        kids = _locals(children)
+
+        def local(qn):
+            docids, score = kids[0](qn)
+            for kid in kids[1:]:
+                if not len(docids):
+                    break
+                d, s = kid(qn)
+                docids, i, j = np.intersect1d(
+                    docids, d, assume_unique=True, return_indices=True
+                )
+                score = score[i] + s[j]
+            return docids, score
+
         return _Plan(
             weight,
             build,
             explain,
             lambda: _union_terms(children),
             _composite_wand(children, True),
+            local if kids else None,
+            sum(c.postings for c in children),
         )
 
     def _plan_disjunction(self, children: List[_Plan], min_match: int) -> _Plan:
@@ -541,12 +703,29 @@ class Searcher:
                 return E.coord_explanation(doc_id, kids, len(kids), total)
             return E.sum_explanation(doc_id, kids)
 
+        kids = _locals(children)
+
+        def local(qn):
+            parts = [kid(qn) for kid in kids]
+            docids, score, nmatch = _by_docid(
+                np.concatenate([d for d, _s in parts]),
+                np.concatenate([s for _d, s in parts]),
+            )
+            if self.similarity == scoring.TFIDF:
+                score = score * nmatch / total
+            if min_match > 1:
+                keep = nmatch >= min_match
+                docids, score = docids[keep], score[keep]
+            return docids, score
+
         return _Plan(
             weight,
             build,
             explain,
             lambda: _union_terms(children),
             _composite_wand(children, False) if min_match == 1 else None,
+            local if kids else None,
+            sum(c.postings for c in children),
         )
 
     def _plan_boolean(
@@ -629,9 +808,49 @@ class Searcher:
                 return None
             return kids[0] if len(kids) == 1 else E.sum_explanation(doc_id, kids)
 
+        parts = [p for p in (must_plan, should_plan) if p is not None]
+        kids = _locals(parts + must_not)
+        postings = sum(p.postings for p in parts + must_not)
+        if not parts and must_not:
+            postings += self.index.doc_count  # the match-all base
+
+        def local(qn):
+            base = must_plan.local(qn) if must_plan is not None else None
+            should_hits = (
+                should_plan.local(qn) if should_plan is not None else None
+            )
+            if base is None:
+                base, should_hits = should_hits, None
+            if base is None:
+                if not must_not:
+                    return _no_hits()
+                live = self.index.live_docids()
+                base = live, np.ones(len(live))
+            docids, score = base
+            if should_hits is not None:
+                sd, ss = should_hits
+                _, i, j = np.intersect1d(
+                    docids, sd, assume_unique=True, return_indices=True
+                )
+                if should_required:
+                    docids, score = docids[i], score[i] + ss[j]
+                else:
+                    bonus = np.zeros(len(docids))
+                    bonus[i] = ss[j]
+                    score = score + bonus
+            for mn in must_not:
+                keep = ~np.isin(docids, mn.local(None)[0])
+                docids, score = docids[keep], score[keep]
+            return docids, score
+
         # must_not terms are left out: they never match a hit
         return _Plan(
-            weight, build, explain, lambda: _union_terms(must + should)
+            weight,
+            build,
+            explain,
+            lambda: _union_terms(must + should),
+            local=local if kids is not None else None,
+            postings=postings,
         )
 
     def _plan_phrase(
@@ -885,7 +1104,64 @@ class Searcher:
                 return slot_kids[0]
             return E.sum_explanation(doc_id, slot_kids)
 
-        return _Plan(weight, build, explain, lambda: {fld: set(present)})
+        def local(qn):
+            p = self.index.read_postings(fld, present, need_positions=True)
+            docids = p["docid"].to_numpy()
+            terms = p["term"].to_numpy()
+            scores = scoring.term_scores(
+                self.similarity,
+                p["tf"].to_numpy(),
+                p["length"].to_numpy(),
+                p["term"].map(term_idf).to_numpy(np.float64),
+                boost,
+                qn,
+                avg_len,
+            )
+            # candidates: docs where every slot has an alternative
+            cand = None
+            for alts, _p in slots:
+                d = np.unique(docids[np.isin(terms, alts)])
+                cand = d if cand is None else np.intersect1d(cand, d)
+            by_doc: Dict[int, dict] = {}
+            for i in np.flatnonzero(np.isin(docids, cand)):
+                by_doc.setdefault(int(docids[i]), {})[terms[i]] = i
+            out = []
+            for docid in cand.tolist():
+                rows = by_doc[docid]
+                pos_by_slot = {
+                    sl: {
+                        x
+                        for t in alts
+                        if t in rows
+                        for x in p["positions"].iat[rows[t]].tolist()
+                    }
+                    for sl, (alts, _p) in enumerate(slots)
+                }
+                if not _phrase_path_exists(pos_by_slot, deltas, nslots, slop):
+                    continue
+                # conjunction of per-slot scores; a multi-alternative
+                # slot scores like a disjunction, as in build()
+                score = 0.0
+                for alts, _p in slots:
+                    hit = [scores[rows[t]] for t in alts if t in rows]
+                    slot_score = sum(hit)
+                    if self.similarity == scoring.TFIDF:
+                        slot_score = slot_score * len(hit) / len(alts)
+                    score = score + slot_score
+                out.append((docid, score))
+            if not out:
+                return _no_hits()
+            d, s = zip(*out)
+            return np.array(d, dtype=np.int64), np.array(s, dtype=np.float64)
+
+        return _Plan(
+            weight,
+            build,
+            explain,
+            lambda: {fld: set(present)},
+            local=local,
+            postings=POSITIONS_COST * sum(stats[t][0] for t in present),
+        )
 
     # -- query dispatch --------------------------------------------------
 
@@ -899,8 +1175,8 @@ class Searcher:
             tokens = analyzer.analyze(q.text)
             if not tokens:
                 return self._empty_plan()
-            # one dictionary lookup for all terms; per-term planners then
-            # hit the memo instead of issuing N sequential driver jobs
+            # one dictionary read for all terms; per-term planners then
+            # hit the memo instead of reading it N times
             self.index.term_stats(fld, [t[0] for t in tokens])
             if q.fuzziness > 0:
                 children = [
@@ -936,10 +1212,13 @@ class Searcher:
                 for i, t in enumerate(q.terms)
             ]
             return self._plan_phrase(fld, slot_terms, b, q.slop)
+        if isinstance(q, Q.PrefixQuery):
+            return self._plan_multi_term(
+                fld, self._expansion_predicate(q), b, q.prefix
+            )
         if isinstance(
             q,
             (
-                Q.PrefixQuery,
                 Q.WildcardQuery,
                 Q.RegexpQuery,
                 Q.FuzzyQuery,
@@ -1493,6 +1772,19 @@ class Searcher:
             and all(s in ("-_score", "_id", "+_id") for s in req.sort)
         )
         if (
+            plan.local is not None
+            and plan.postings < LOCAL_MAX_POSTINGS
+            and score_first_sort
+            and not req.facets
+            and not req.knn
+            and req.highlight is None
+            and not req.include_locations
+            and req.search_after is None
+            and req.search_before is None
+            and self._local_fields(req.fields)
+        ):
+            return self._search_local(req, plan, qn)
+        if (
             not req.facets
             and not req.with_total
             and not req.knn
@@ -1690,6 +1982,54 @@ class Searcher:
 
         page, facets = self._finish_faceted(hits, page, req)
         return SearchResult(hits=page, facets=facets, total=total)
+
+    def _local_fields(self, fields: Sequence[str]) -> bool:
+        """Whether the local route can fetch `fields`: distinct top-level
+        docs columns other than the ones a hit always carries."""
+        if not fields:
+            return True
+        names = set(self.index.docs_schema.fieldNames())
+        return len(set(fields)) == len(fields) and set(fields) <= (
+            names - {"docid", "_id", "score"}
+        )
+
+    def _search_local(
+        self, req: SearchRequest, plan: _Plan, qn: Optional[float]
+    ) -> SearchResult:
+        """Run `plan` on the driver and wrap its page as a local
+        DataFrame, whose collect() starts no Spark job. Top-k under the
+        default sort: keep every doc scoring at least the k-th score, so
+        ties at the page boundary are all kept, then order by (score
+        desc, _id asc) and cut."""
+        docids, scores = plan.local(qn)
+        total = len(docids) if req.with_total else None
+        k = req.from_ + req.size
+        if k <= 0:
+            docids, scores = _no_hits()
+        elif k < len(scores):
+            kth = np.partition(scores, len(scores) - k)[len(scores) - k]
+            keep = scores >= kth
+            docids, scores = docids[keep], scores[keep]
+        got = self.index.read_docs(docids, ["_id"])
+        ids = np.array(got["_id"].to_pylist(), dtype=str)
+        page = np.lexsort((ids, -scores))[req.from_ : k]
+        schema = self.index.docs_schema
+        cols = {
+            "docid": pa.array(docids[page], pa.int64()),
+            "_id": pa.array(ids[page], pa.string()),
+            "score": pa.array(scores[page], pa.float64()),
+        }
+        fields = [schema["docid"], schema["_id"], T.StructField("score", T.DoubleType())]
+        if req.fields:
+            stored = self.index.read_docs(np.sort(docids[page]), list(req.fields))
+            at = np.searchsorted(stored["docid"].to_numpy(), docids[page])
+            for f in req.fields:
+                cols[f] = stored[f].take(pa.array(at, pa.int64()))
+                fields.append(schema[f])
+        hits = self.index.spark.createDataFrame(
+            pa.table(cols), T.StructType(fields)
+        )
+        return SearchResult(hits=hits, total=total)
 
     def _finish_faceted(self, hits, page, req):
         """Run the facet jobs (if any) and release the persisted match

@@ -94,5 +94,6 @@ def test_per_shard_idf(alias):
     from bleve_spark import scoring
 
     # child shard0 has N=2 docs, df("a")=1 -> idf = 1 + ln(2/2)
-    exp = scoring.tfidf_score_py(1, 1, scoring.idf(scoring.TFIDF, 2, 1))
+    idf = scoring.idf(scoring.TFIDF, 2, 1)
+    exp = scoring.term_scores(scoring.TFIDF, [1], [1], idf, 1.0, None, 1.0)[0]
     assert rows[0]["score"] == pytest.approx(exp, rel=1e-12)

@@ -90,6 +90,8 @@ def test_cli_check_clean_and_corrupt(cli_index, capsys):
         "--count", "5",
     )
     assert json.loads(out.splitlines()[-1])["problems"] == 0
+    # check 1 ran each sampled term on the local and the Spark route
+    assert "checked field 'body': 5 terms on both routes" in out
 
     def corrupt(name, edit):
         path = f"{BASE}/{name}"

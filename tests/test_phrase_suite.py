@@ -18,9 +18,22 @@ from bleve_spark import (
     Searcher,
     SearchRequest,
     parse_query,
+    search,
 )
 
 SUITE_DIR = "/tmp/bleve_spark_phrase_suite_index"
+
+# every case runs on both search routes: the driver-local one (the
+# default gate) and the Spark one, forced with a zero gate
+ROUTES = {"local": search.LOCAL_MAX_POSTINGS, "spark": 0}
+
+
+def _search(idx, req, route):
+    """(hit ids, total) of `req` on `route`, whose gate ROUTES sets."""
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(search, "LOCAL_MAX_POSTINGS", ROUTES[route])
+        res = Searcher(idx).search(req)
+        return [r["_id"] for r in res.hits.collect()], res.total
 
 BOOKS = [
     ("a", ["Twenty Thousand Leagues Under The Sea"]),
@@ -79,9 +92,10 @@ def test_phrase_case(phrase_index, text, exp):
         query=parse_query({"field": "body", "match_phrase": text}),
         with_total=True,
     )
-    res = Searcher(phrase_index).search(req)
-    assert [r["_id"] for r in res.hits.collect()] == exp
-    assert res.total == len(exp)
+    for route in ROUTES:
+        ids, total = _search(phrase_index, req, route)
+        assert ids == exp, route
+        assert total == len(exp), route
 
 
 def test_multi_phrase_alternatives(phrase_index):
@@ -92,9 +106,10 @@ def test_multi_phrase_alternatives(phrase_index):
         ),
         with_total=True,
     )
-    res = Searcher(phrase_index).search(req)
-    assert [r["_id"] for r in res.hits.collect()] == ["a"]
-    assert res.total == 1
+    for route in ROUTES:
+        ids, total = _search(phrase_index, req, route)
+        assert ids == ["a"], route
+        assert total == 1, route
 
 
 def test_multi_phrase_all_alternatives_missing(phrase_index):
@@ -104,5 +119,5 @@ def test_multi_phrase_all_alternatives_missing(phrase_index):
         ),
         with_total=True,
     )
-    res = Searcher(phrase_index).search(req)
-    assert res.total == 0
+    for route in ROUTES:
+        assert _search(phrase_index, req, route)[1] == 0, route

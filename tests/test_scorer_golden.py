@@ -4,28 +4,42 @@ FIXTURES.md) plus hand-computed BM25(k1=1.2,b=0.75) values."""
 
 import math
 
+import numpy as np
+import pandas as pd
+import pytest
+from pyspark.sql import functions as F
+
 from bleve_spark import scoring
 
 
 IDF = 1.0 + math.log(100.0 / (9 + 1.0))  # docTotal=100, docFreq=9
 
 
+def score(similarity, tf, length, idf, boost=1.0, qn=None, avg_len=1.0):
+    """One posting's score from the scoring kernel."""
+    return float(
+        scoring.term_scores(
+            similarity, np.array([tf]), np.array([length]), idf, boost, qn,
+            avg_len,
+        )[0]
+    )
+
+
 def test_term_scorer_simple():
     # freq=1, norm=1 -> sqrt(1)*idf (scorer_term_test.go:40-88)
-    assert scoring.tfidf_score_py(1, 1, IDF) == math.sqrt(1.0) * IDF
+    assert score(scoring.TFIDF, 1, 1, IDF) == math.sqrt(1.0) * IDF
 
 
 def test_term_scorer_freq65():
     # freq=65, norm=1 -> sqrt(65)*idf (scorer_term_test.go:121-150)
-    assert scoring.tfidf_score_py(65, 1, IDF) == math.sqrt(65) * IDF
+    assert score(scoring.TFIDF, 65, 1, IDF) == math.sqrt(65) * IDF
 
 
 def test_term_scorer_with_query_norm():
     # boost=3, queryNorm=2/(3*idf):
     # score = sqrt(1)*idf * 3*idf*queryNorm (scorer_term_test.go:171+)
     qnorm = 2.0 / (3.0 * IDF)
-    qw = 3.0 * IDF * qnorm
-    got = scoring.tfidf_score_py(1, 1, IDF, qw)
+    got = score(scoring.TFIDF, 1, 1, IDF, boost=3.0, qn=qnorm)
     expected = math.sqrt(1.0) * IDF * 3.0 * IDF * qnorm
     assert abs(got - expected) < 1e-12
 
@@ -38,11 +52,9 @@ def test_idf_formula():
 
 
 def test_field_norm_is_float32():
-    import numpy as np
-
     # fieldNorm = float32(1/sqrt(len)) (upsidedown.go:608-609); float64 of
     # the float32 differs from the pure float64 value for len=10
-    got = scoring.tfidf_score_py(1, 10, 1.0)
+    got = score(scoring.TFIDF, 1, 10, 1.0)
     assert got == float(np.float32(1.0 / math.sqrt(10)))
     assert got != 1.0 / math.sqrt(10)
 
@@ -54,15 +66,44 @@ def test_bm25_hand_computed():
     # tf=2, len=10, avg_len=8:
     # tf_part = 2*2.2/(2 + 1.2*(0.25 + 0.75*10/8))
     expected = idf * 2 * 2.2 / (2 + 1.2 * (0.25 + 0.75 * 10.0 / 8.0))
-    assert abs(scoring.bm25_score_py(2, 10, idf, 8.0) - expected) < 1e-12
+    assert abs(score(scoring.BM25, 2, 10, idf, avg_len=8.0) - expected) < 1e-12
 
 
 def test_conjunction_sum_and_disjunction_coord():
     # conjunction score = sum of children (scorer_conjunction.go:44-71);
     # disjunction applies coord = matching/total
     # (scorer_disjunction.go:65-66)
-    s1 = scoring.tfidf_score_py(1, 1, IDF)
-    s2 = scoring.tfidf_score_py(4, 1, IDF)
+    s1 = score(scoring.TFIDF, 1, 1, IDF)
+    s2 = score(scoring.TFIDF, 4, 1, IDF)
     assert s1 + s2 == math.sqrt(1) * IDF + math.sqrt(4) * IDF
     coord = 1 / 2
     assert (s1 * coord) == s1 / 2
+
+
+@pytest.mark.parametrize("with_qn", [False, True])
+@pytest.mark.parametrize("similarity", [scoring.TFIDF, scoring.BM25])
+def test_kernel_equals_the_spark_column_bit_for_bit(spark, similarity, with_qn):
+    """term_scores (the driver-local route's kernel) and term_score_col
+    (the Spark route's column) give the same float64 bits, for idf as a
+    per-posting column and as one literal."""
+    rng = np.random.default_rng([11, with_qn, similarity == scoring.BM25])
+    n = 2000
+    tf = rng.integers(1, 80, n)
+    length = rng.integers(0, 6000, n)
+    idf = rng.uniform(0.01, 12.0, n)
+    boost = float(rng.uniform(0.1, 5.0))
+    qn = float(rng.uniform(0.01, 2.0)) if with_qn else None
+    avg_len = float(rng.uniform(1.0, 900.0))
+    rows = spark.createDataFrame(
+        pd.DataFrame(
+            {"tf": tf.astype(np.int32), "length": length.astype(np.int32), "idf": idf}
+        )
+    )
+    for idf_col, idf_arg in ((F.col("idf"), idf), (F.lit(idf[0]), idf[0])):
+        col = scoring.term_score_col(
+            similarity, F.col("tf"), F.col("length"), idf_col, boost, qn, avg_len
+        )
+        want = np.array([r[0] for r in rows.select(col).collect()])
+        got = scoring.term_scores(similarity, tf, length, idf_arg, boost, qn, avg_len)
+        assert got.dtype == np.float64
+        assert got.tobytes() == want.tobytes()

@@ -60,7 +60,9 @@ def expected_term_score(text, term, df, n_docs=5):
     terms = get_analyzer("standard").terms(text)
     tf = terms.count(term)
     idf = scoring.idf(scoring.TFIDF, n_docs, df)
-    return scoring.tfidf_score_py(tf, len(terms), idf)
+    return float(
+        scoring.term_scores(scoring.TFIDF, [tf], [len(terms)], idf, 1.0, None, 1.0)[0]
+    )
 
 
 def rows(df):
@@ -408,7 +410,10 @@ def test_bm25_mode(fixture_index):
         from bleve_spark.analysis import get_analyzer
 
         terms = get_analyzer("standard").terms(text)
-        e = scoring.bm25_score_py(terms.count("quick"), len(terms), idf, avg_len)
+        e = scoring.term_scores(
+            scoring.BM25, [terms.count("quick")], [len(terms)], idf, 1.0, None,
+            avg_len,
+        )[0]
         assert got[_id] == pytest.approx(e, rel=1e-9)
     # b has tf=3 and is shorter -> must outrank a
     assert got["b"] > got["a"]

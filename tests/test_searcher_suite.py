@@ -10,6 +10,11 @@ Expected doc sets AND scores are the reference's literals (its own
 tolerance, scoresCloseEnough = 1e-3); nested queryNorm composition
 (each conjunction/disjunction/boolean normalizes its own subtree)
 must reproduce them.
+
+Every check runs on both search routes and must hold on each: the
+driver-local route (the default gate) and the Spark route, forced with
+a zero gate (search.LOCAL_MAX_POSTINGS = 0). Shapes without a local form (regexp, term
+range) take the Spark route on both.
 """
 
 import pytest
@@ -23,7 +28,7 @@ from bleve_spark import (
     Searcher,
     SearchRequest,
 )
-from bleve_spark import query as Q
+from bleve_spark import query as Q, search
 
 _DOCS = [
     # _id, name, desc, street, title  (base_test.go twoDocIndexDocs)
@@ -48,21 +53,34 @@ def two_doc_full(spark, tmp_path_factory):
     return SearchIndex(spark, path, m)
 
 
-def _scores(idx, q):
-    res = Searcher(idx).search(SearchRequest(query=q, size=10))
-    return {r["_id"]: r["score"] for r in res.hits.collect()}
+ROUTES = {"local": search.LOCAL_MAX_POSTINGS, "spark": 0}
+
+
+def _search(idx, req, route):
+    """(hits, total) of `req` on `route`, whose gate ROUTES sets."""
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(search, "LOCAL_MAX_POSTINGS", ROUTES[route])
+        res = Searcher(idx).search(req)
+        return res.hits.collect(), res.total
+
+
+def _scores(idx, q, route):
+    hits, _ = _search(idx, SearchRequest(query=q, size=10), route)
+    return {r["_id"]: r["score"] for r in hits}
 
 
 def _check(idx, q, expected):
-    got = _scores(idx, q)
-    assert set(got) == set(expected), (sorted(got), sorted(expected))
-    for doc, want in expected.items():
-        # the reference's own tolerance (scoresCloseEnough, 1e-3)
-        assert got[doc] == pytest.approx(want, abs=1e-3), (
-            doc,
-            got[doc],
-            want,
-        )
+    for route in ROUTES:
+        got = _scores(idx, q, route)
+        assert set(got) == set(expected), (route, sorted(got), sorted(expected))
+        for doc, want in expected.items():
+            # the reference's own tolerance (scoresCloseEnough, 1e-3)
+            assert got[doc] == pytest.approx(want, abs=1e-3), (
+                route,
+                doc,
+                got[doc],
+                want,
+            )
 
 
 T = Q.TermQuery
@@ -132,7 +150,8 @@ def test_conjunction_beer_and_missing_term(spark, two_doc_full):
             T(field="name", term="jack", boost=5.0),
         ]
     )
-    assert _scores(two_doc_full, q) == {}
+    for route in ROUTES:
+        assert _scores(two_doc_full, q, route) == {}, route
 
 
 def test_conjunction_beer_and_mister(spark, two_doc_full):
@@ -213,10 +232,11 @@ def test_boolean_mustnot_only_is_matchall_complement(spark, two_doc_full):
     # (query/boolean.go:161-168, the bug-#193 fix) — the engine
     # implements query semantics, so the result is the complement.
     q = Q.BooleanQuery(must_not=[T(field="name", term="steve")])
-    got = _scores(two_doc_full, q)
-    assert set(got) == {"1", "3", "4", "5"}
-    for v in got.values():
-        assert v == pytest.approx(1.0, abs=1e-9)
+    for route in ROUTES:
+        got = _scores(two_doc_full, q, route)
+        assert set(got) == {"1", "3", "4", "5"}, route
+        for v in got.values():
+            assert v == pytest.approx(1.0, abs=1e-9)
 
 
 def test_boolean_must_mustnot(spark, two_doc_full):
@@ -245,7 +265,8 @@ def test_boolean_min_should_unreachable(spark, two_doc_full):
         should=[T(field="name", term="marty"), T(field="name", term="dustin")],
         min_should=2,
     )
-    assert _scores(two_doc_full, q) == {}
+    for route in ROUTES:
+        assert _scores(two_doc_full, q, route) == {}, route
 
 
 def test_conjunction_with_nested_boolean(spark, two_doc_full):
@@ -320,7 +341,8 @@ def test_term_range_table(spark, two_doc_full, mn, mx, imn, imx, want):
         inclusive_min=imn,
         inclusive_max=imx,
     )
-    assert set(_scores(two_doc_full, q)) == want
+    for route in ROUTES:
+        assert set(_scores(two_doc_full, q, route)) == want, route
 
 
 # -- collector/topn_test.go invariants ----------------------------------------
@@ -340,34 +362,38 @@ def tie_index(spark, tmp_path_factory):
     return SearchIndex(spark, path, m)
 
 
-def _page(idx, from_, size, with_total=False):
-    res = Searcher(idx).search(
+def _page(idx, route, from_, size, with_total=False):
+    hits, total = _search(
+        idx,
         SearchRequest(
             query=T(field="body", term="same"),
             from_=from_,
             size=size,
             with_total=with_total,
-        )
+        ),
+        route,
     )
-    return [r["_id"] for r in res.hits.collect()], res.total
+    return [r["_id"] for r in hits], total
 
 
 def test_pagination_same_scores_disjoint_and_total(spark, tie_index):
     # collector/topn_test.go TestPaginationSameScores: equal-score pages
     # must be disjoint and cover everything; total counts all matches
-    p1, total = _page(tie_index, 0, 5, with_total=True)
-    assert total == 14
-    p2, _ = _page(tie_index, 5, 5)
-    p3, _ = _page(tie_index, 10, 5)
-    assert len(p1) == 5 and len(p2) == 5 and len(p3) == 4
-    assert len(set(p1) | set(p2) | set(p3)) == 14
-    assert not (set(p1) & set(p2)) and not (set(p2) & set(p3))
-    # deterministic: the same page re-fetched is identical
-    assert p1 == _page(tie_index, 0, 5)[0]
+    for route in ROUTES:
+        p1, total = _page(tie_index, route, 0, 5, with_total=True)
+        assert total == 14
+        p2, _ = _page(tie_index, route, 5, 5)
+        p3, _ = _page(tie_index, route, 10, 5)
+        assert len(p1) == 5 and len(p2) == 5 and len(p3) == 4
+        assert len(set(p1) | set(p2) | set(p3)) == 14
+        assert not (set(p1) & set(p2)) and not (set(p2) & set(p3))
+        # deterministic: the same page re-fetched is identical
+        assert p1 == _page(tie_index, route, 0, 5)[0]
 
 
 def test_skip_past_all_hits_returns_empty(spark, tie_index):
     # TestTop10ScoresSkip10Only9Hits analogue: from_ beyond the match
     # count yields an empty page, not an error
-    page, total = _page(tie_index, 20, 10, with_total=True)
-    assert page == [] and total == 14
+    for route in ROUTES:
+        page, total = _page(tie_index, route, 20, 10, with_total=True)
+        assert page == [] and total == 14

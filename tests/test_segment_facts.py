@@ -89,6 +89,36 @@ def test_open_and_stats_run_no_spark_job(spark, tmp_path):
     assert list(sc.statusTracker().getJobIdsForGroup("open-index")) == []
 
 
+def test_term_stats_read_the_dictionaries_with_no_spark_job(spark, tmp_path):
+    path = str(tmp_path / "idx")
+    w = IndexWriter(spark, _mapping(), path)
+    w.batch_index(_df(spark, BATCH_A), id_expr=F.col("id"))
+    w.batch_index(_df(spark, BATCH_B), id_expr=F.col("id"))
+    w.delete(["a10", "b03"])
+    idx = SearchIndex(spark, path, _mapping())
+    assert len(idx._seg_metas) == 2
+    asked = {
+        "body": ["fox", "cow", "wolf", "upserted", "red", "3", "absent"],
+        "title": ["Quick Title", "T3 of the day", "quick title"],
+    }
+    sc = spark.sparkContext
+    sc.setJobGroup("term-stats", "uncached dictionary lookups")
+    try:
+        got = {fld: idx.term_stats(fld, ts) for fld, ts in asked.items()}
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert list(sc.statusTracker().getJobIdsForGroup("term-stats")) == []
+    for fld, ts in asked.items():
+        rows = (
+            idx.dictionary.where((F.col("field") == fld) & F.col("term").isin(ts))
+            .collect()
+        )
+        # the dictionary DataFrame sums df/cf over the two segments
+        assert got[fld] == {r["term"]: (r["df"], r["cf"]) for r in rows}
+    assert got["body"]["fox"][0] == 30  # dead docs count until compaction
+    assert "absent" not in got["body"] and "quick title" not in got["title"]
+
+
 class Injected(Exception):
     pass
 

@@ -8,13 +8,17 @@ import pytest
 
 from bleve_spark import Searcher, SearchRequest
 from bleve_spark import query as Q
-from bleve_spark import scoring
+from bleve_spark import scoring, search
 
 
 def _run(index, q, similarity, wand_min):
+    # WAND prunes the Spark route, so force it with a zero local gate:
+    # the driver-local route would answer these small queries first
     s = Searcher(index, wand_min_postings=wand_min)
-    res = s.search(SearchRequest(query=q, size=10, similarity=similarity))
-    return [(r["_id"], round(r["score"], 10)) for r in res.hits.collect()]
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(search, "LOCAL_MAX_POSTINGS", 0)
+        res = s.search(SearchRequest(query=q, size=10, similarity=similarity))
+        return [(r["_id"], round(r["score"], 10)) for r in res.hits.collect()]
 
 
 QUERIES = [

@@ -280,7 +280,9 @@ def cmd_check(args):
     with segment/dead-docid/meta invariants:
 
     1. per-term: dictionary df == term-query hit total (the reference's
-       check), over --count sampled terms per field
+       check), over --count sampled terms per field; the query runs on
+       the driver-local route and on the forced Spark route, which must
+       agree on the total and the top hit's _id
     2. segment metas: docid ranges disjoint, doc counts match the
        stored table, seqs unique
     3. each segment's dead docids exist in it and match its logged count
@@ -295,6 +297,7 @@ def cmd_check(args):
         SearchIndex,
         SearchRequest,
         query as Q,
+        search as search_mod,
     )
     from bleve_spark.writer import segment_metas
 
@@ -308,6 +311,9 @@ def cmd_check(args):
     has_dead = idx.deleted_docids is not None
     fields = [args.field] if args.field else sorted(idx.field_stats)
     searcher = Searcher(idx)
+    # each term query runs on both routes: the default local gate, then
+    # a zero gate, which forces the Spark route
+    routes = {"local": search_mod.LOCAL_MAX_POSTINGS, "spark": 0}
     for fld in fields:
         rows = (
             idx.dictionary.where(F.col("field") == fld)
@@ -318,19 +324,29 @@ def cmd_check(args):
         )
         for r in rows:
             t, df = r["term"], r["df"]
+            req = SearchRequest(
+                query=Q.TermQuery(field=fld, term=t), size=1, with_total=True
+            )
+            got, top = {}, {}
             try:
-                res = searcher.search(
-                    SearchRequest(
-                        query=Q.TermQuery(field=fld, term=t),
-                        size=1,
-                        with_total=True,
-                    )
-                )
+                for name, gate in routes.items():
+                    search_mod.LOCAL_MAX_POSTINGS = gate
+                    got[name] = searcher.search(req)
+                    top[name] = [h["_id"] for h in got[name].hits.collect()]
             except Exception as exc:  # a broken index must not abort
                 problems.append(
                     f"field {fld!r} term {t!r}: search failed: {exc}"
                 )
                 break
+            finally:
+                search_mod.LOCAL_MAX_POSTINGS = routes["local"]
+            res = got["spark"]
+            if (got["local"].total, top["local"]) != (res.total, top["spark"]):
+                problems.append(
+                    f"field {fld!r} term {t!r}: local route total "
+                    f"{got['local'].total} top {top['local']} vs Spark route "
+                    f"total {res.total} top {top['spark']}"
+                )
             bad = (
                 res.total > df if has_dead else res.total != df
             )
@@ -339,7 +355,7 @@ def cmd_check(args):
                     f"field {fld!r} term {t!r}: dictionary df {df} "
                     f"vs search total {res.total}"
                 )
-        print(f"checked field {fld!r}: {len(rows)} terms")
+        print(f"checked field {fld!r}: {len(rows)} terms on both routes")
 
     # 2. segment metas
     metas = segment_metas(args.index)
