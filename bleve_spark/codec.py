@@ -103,11 +103,34 @@ def encode_positions(pos_lists: list) -> bytes:
 def decode_positions(buf: bytes, ndocs: int) -> list:
     """Inverse of encode_positions -> list of int64 numpy arrays."""
     flat = varint_decode(buf)
-    out = []
+    npos = np.empty(ndocs, dtype=np.int64)
     i = 0
-    for _ in range(ndocs):
-        npos = int(flat[i])
-        i += 1
-        out.append(np.cumsum(flat[i : i + npos], dtype=np.uint64).astype(np.int64))
-        i += npos
-    return out
+    for k in range(ndocs):
+        npos[k] = n = int(flat[i])
+        i += n + 1
+    return positions_by_doc(flat, npos)
+
+
+def positions_by_doc(flat: np.ndarray, npos: np.ndarray) -> list:
+    """Split decoded position streams [npos, p0, gaps...] laid back to
+    back into one int64 array per stream, given each stream's `npos`
+    (a posting's tf): with the headers known, one segmented cumsum over
+    the rest gives every position (exact even if the global uint64 sum
+    wraps: the wrap cancels in the subtraction of each stream's base).
+    Raises ValueError when the headers disagree with `npos`."""
+    npos = np.asarray(npos, dtype=np.int64)
+    ends = np.cumsum(npos)
+    starts = ends - npos
+    heads = starts + np.arange(len(npos))
+    if len(flat) != int(npos.sum()) + len(npos) or not np.array_equal(
+        flat[heads], npos.astype(np.uint64)
+    ):
+        raise ValueError(
+            "corrupt posting batch: position headers disagree with tfs"
+        )
+    body = np.ones(len(flat), dtype=bool)
+    body[heads] = False
+    cs = np.cumsum(flat[body], dtype=np.uint64)
+    base = np.concatenate((np.zeros(1, np.uint64), cs))[starts]
+    pos = (cs - np.repeat(base, npos)).astype(np.int64)
+    return [pos[a:b] for a, b in zip(starts.tolist(), ends.tolist())]

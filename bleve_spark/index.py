@@ -76,7 +76,8 @@ def _decode_batch(pdf: "pd.DataFrame", need_positions: bool) -> "pd.DataFrame":
 
     A block's pos_enc is its docs' position streams back to back, so
     the batch's concatenated pos_enc is every posting's stream in
-    docid-row order and decodes in one call too.
+    docid-row order and decodes in one call too; each stream's npos
+    header must equal its posting's tf.
     """
     d_bufs = pdf["docids_enc"].tolist()
     B = len(d_bufs)
@@ -121,7 +122,9 @@ def _decode_batch(pdf: "pd.DataFrame", need_positions: bool) -> "pd.DataFrame":
     )
     if need_positions:
         out["positions"] = pd.Series(
-            codec.decode_positions(b"".join(pdf["pos_enc"]), len(docids)),
+            codec.positions_by_doc(
+                codec.varint_decode(b"".join(pdf["pos_enc"])), tfs
+            ),
             dtype=object,
         )
     else:

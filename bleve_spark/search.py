@@ -14,7 +14,7 @@ Iterator -> DataFrame mapping (SURVEY.md §2.4):
   conjunction zipper   -> inner join on docid, score sum
   disjunction heap     -> unionByName + groupBy(docid), coord factor
   boolean must/not     -> left-semi/left-anti joins
-  phrase positions     -> slot-union + groupBy(docid) + position-chain check
+  phrase positions     -> groupBy(docid block) + the numpy phrase kernel
   dictionary automaton -> predicates on the dictionary table
 
 The same plan also runs on the driver when its posting set is small
@@ -39,6 +39,7 @@ from . import query as Q
 from . import scoring
 from . import wand
 from .analysis import get_analyzer
+from .build import BLOCK_SHIFT
 from .highlight import HighlightRequest, highlight_value
 from .index import SearchIndex
 
@@ -60,11 +61,15 @@ DisjunctionMaxClauseCount = 0
 # for one term above 100k postings) the split is unmeasured, and the
 # gate also bounds the postings the driver holds in memory.
 LOCAL_MAX_POSTINGS = 4_000_000
-# a posting decoded with its positions, in plain postings: phrases of
-# 40k-90k postings took 0.81-1.91 s locally vs 1.25-2.30 s on Spark,
-# 120k 2.47 vs 2.56 s, and 150k-200k 2.1-5.6 s vs 2.0-5.0 s, so the
-# crossover is near 125k = LOCAL_MAX_POSTINGS / 32
-POSITIONS_COST = 32
+# a posting decoded with its positions, in plain postings. Exact
+# phrases on a generated 100,000-doc corpus, measured as above: 60k,
+# 90k, 154k, 197k-200k, 299k, 499k and 991k postings took 0.21, 0.27,
+# 0.38, 0.79-1.76, 1.38, 3.40 and 4.44 s locally vs 1.93, 2.55, 2.01,
+# 2.26-3.04, 2.48, 4.58 and 6.33 s on Spark. The local route won at
+# every size, so phrases run locally up to the largest size measured,
+# 1M = LOCAL_MAX_POSTINGS / 4; the 991k phrase peaked at 1.5 GB of
+# driver RSS there.
+POSITIONS_COST = 4
 
 # ref: search/searcher/search_fuzzy.go:25 (var MaxFuzziness = 2) — the
 # reference caps the Levenshtein automaton at distance 2 and rejects
@@ -150,10 +155,11 @@ class SearchResult:
 
 
 def _phrase_path_exists(pos_by_slot, deltas, nslots, slop) -> bool:
-    """Position-chain check shared by the phrase scorer UDF and
-    explain(). ref findPhrasePaths (search_phrase.go:381-440): exact
-    chains intersect shifted position sets; sloppy chains DFS with
-    |prevPos+1 - pos| charged to the budget, out-of-order allowed,
+    """Position-chain check of one doc: the phrase kernel's per-doc test
+    of sloppy chains, and the reference its vectorized exact match is
+    tested against. ref findPhrasePaths (search_phrase.go:381-440):
+    exact chains intersect shifted position sets; sloppy chains DFS
+    with |prevPos+1 - pos| charged to the budget, out-of-order allowed,
     no location reuse."""
     if len(pos_by_slot) < nslots:
         return False
@@ -180,6 +186,119 @@ def _phrase_path_exists(pos_by_slot, deltas, nslots, slop) -> bool:
     return any(dfs(1, p0, slop, frozenset((p0,))) for p0 in pos_by_slot[0])
 
 
+def _phrase_hits(
+    rows, slots, deltas, slop, term_idf, boost, qn, avg_len, similarity
+):
+    """The one phrase matcher and scorer: the local route, the Spark
+    route (per docid block) and explain() all call it. `rows` is a
+    docid-closed frame of decoded postings with positions (term, docid,
+    tf, length, positions; one row per doc and term), `slots`
+    [(alternative terms, position)], `deltas` the position steps
+    between consecutive slots and `term_idf` {term: idf}. Returns the
+    docs with a phrase path, (docids, scores): docids sorted and unique
+    (int64), scores float64.
+
+    Exact phrases match vectorized: each slot's (doc, position - slot
+    offset) keys, unique per slot, are counted across slots, and a key
+    every slot holds is a phrase start. A key packs the doc's rank among
+    the candidates with the shifted position, less the batch's least;
+    when that could overflow int64 it packs the position's rank among
+    the batch's distinct shifted positions, which keeps it below n^2
+    for n positions held in memory. Sloppy phrases run
+    `_phrase_path_exists` per candidate doc. A doc scores the sum of
+    its slot scores in slot order (ref: the conjunction scorer); a slot
+    with alternatives sums them in alternative order and, in tfidf
+    mode, takes the disjunction coord matched/len(alts) (ref:
+    scorer_disjunction.go:65-66)."""
+    nslots = len(slots)
+    docids = rows["docid"].to_numpy(np.int64)
+    in_slot = [rows["term"].isin(alts).to_numpy() for alts, _p in slots]
+    # candidates: docs where every slot has an alternative
+    cand = np.unique(docids[in_slot[0]])
+    for m in in_slot[1:]:
+        cand = np.intersect1d(cand, docids[m])
+    if not len(cand):
+        return _no_hits()
+    # the candidates' rows, in doc order
+    keep = np.flatnonzero(np.isin(docids, cand))
+    keep = keep[np.argsort(docids[keep], kind="stable")]
+    rows = rows.iloc[keep]
+    docids = docids[keep]
+    in_slot = [m[keep] for m in in_slot]
+    rank = np.searchsorted(cand, docids)
+    pos = rows["positions"].to_numpy()
+    npos = np.fromiter(map(len, pos), np.int64, len(pos))
+    flat = np.concatenate(pos).astype(np.int64, copy=False)
+    row_of = np.repeat(np.arange(len(pos)), npos)
+    if slop == 0:
+        shift = np.concatenate(([0], np.cumsum(deltas, dtype=np.int64)))
+        at = [np.flatnonzero(m[row_of]) for m in in_slot]
+        shifted = np.concatenate([flat[a] - shift[i] for i, a in enumerate(at)])
+        shifted -= shifted.min()
+        span = int(shifted.max()) + 1
+        if len(cand) * span >= 2**63:
+            # positions too far apart to pack: pack their ranks instead
+            shifted = np.unique(shifted, return_inverse=True)[1]
+            span = int(shifted.max()) + 1
+        ends = np.cumsum([len(a) for a in at])
+        keys = [
+            np.unique(rank[row_of[a]] * span + k)
+            for a, k in zip(at, np.split(shifted, ends[:-1]))
+        ]
+        key, count = np.unique(np.concatenate(keys), return_counts=True)
+        matched = cand[np.unique(key[count == nslots] // span)]
+    else:
+        # each slot's positions, with every candidate's [lo, hi) slice
+        by_slot = []
+        for m in in_slot:
+            a = np.flatnonzero(m[row_of])
+            r = rank[row_of[a]]
+            by_slot.append(
+                (
+                    flat[a],
+                    np.searchsorted(r, np.arange(len(cand))),
+                    np.searchsorted(r, np.arange(len(cand)), "right"),
+                )
+            )
+        ok = [
+            _phrase_path_exists(
+                [set(p[lo[k]:hi[k]].tolist()) for p, lo, hi in by_slot],
+                deltas, nslots, slop,
+            )
+            for k in range(len(cand))
+        ]
+        matched = cand[np.array(ok, dtype=bool)]
+    if not len(matched):
+        return _no_hits()
+    keep = np.isin(docids, matched)
+    rows = rows[keep]
+    at = np.searchsorted(matched, docids[keep])
+    terms = rows["term"].to_numpy()
+    scores = scoring.term_scores(
+        similarity,
+        rows["tf"].to_numpy(),
+        rows["length"].to_numpy(),
+        rows["term"].map(term_idf).to_numpy(np.float64),
+        boost,
+        qn,
+        avg_len,
+    )
+    total = np.zeros(len(matched))
+    for alts, _p in slots:
+        slot_sum = np.zeros(len(matched))
+        hit = np.zeros(len(matched), dtype=np.int64)
+        for t in alts:
+            m = terms == t
+            s = np.zeros(len(matched))
+            s[at[m]] = scores[m]
+            slot_sum = slot_sum + s
+            hit[at[m]] += 1
+        if similarity == scoring.TFIDF:
+            slot_sum = slot_sum * hit / len(alts)
+        total = total + slot_sum
+    return matched, total
+
+
 class _Plan:
     """A planned sub-searcher: carries the leaf-weight sum (for queryNorm),
     a builder closure build(query_norm, blocks) -> DataFrame(docid,
@@ -189,7 +308,8 @@ class _Plan:
     matches}, which highlighting and include_locations mark. All of them
     read the same plan-time state (term sets, idf, weights, phrase
     slots), so an explanation's value is the score search() gives and a
-    highlight marks the terms that scored.
+    highlight marks the terms that scored. A phrase plan's build,
+    explain and local all match and score with `_phrase_hits`.
 
     `wand` is (field, leaves, conjunctive) with leaves [(term, boost,
     idf, df)] when the plan is a term leaf, or a conjunction/disjunction
@@ -291,11 +411,12 @@ class Searcher:
     kNN, highlight, include_locations, search_after/before, a sort that
     is not score-first) and the plan decodes fewer postings than the
     module's LOCAL_MAX_POSTINGS (4 M; a posting read with its positions
-    counts POSITIONS_COST = 32). Both figures are measured end to end,
+    counts POSITIONS_COST = 4). Both figures are measured end to end,
     in their comment. Otherwise the Spark route runs `plan.df`; setting
     LOCAL_MAX_POSTINGS to 0 forces it. Both routes read the same
     plan-time state, so they return the same ids in the same order and
-    the same scores."""
+    the same scores; a phrase matches and scores with one kernel,
+    `_phrase_hits`, on the driver and in each Spark task."""
 
     def __init__(
         self,
@@ -893,7 +1014,14 @@ class Searcher:
         deltas = [
             slots[i][1] - slots[i - 1][1] for i in range(1, len(slots))
         ]
-        nslots = len(slots)
+        # hits() runs in Spark tasks too, so it must not hold self
+        similarity = self.similarity
+
+        def hits(rows, qn):
+            return _phrase_hits(
+                rows, slots, deltas, slop, term_idf, boost, qn, avg_len,
+                similarity,
+            )
 
         def build(qn, _blocks):
             # block-intersection prefilter — the conjunction-bitmap
@@ -913,7 +1041,7 @@ class Searcher:
             ]
             selective = min(slot_dfs) * 4 < max(slot_dfs)
             blocks_src = self.index.blocks(fld, present)
-            if nslots > 1 and selective:
+            if len(slots) > 1 and selective:
                 common = None
                 for alts, _p in slots:
                     ts = [t for t in alts if t in stats]
@@ -924,163 +1052,31 @@ class Searcher:
                     )
                     common = bi if common is None else common.join(bi, "block")
                 blocks_src = blocks_src.join(common, "block")
-            decoded = self.index.decoded(
-                fld, present, need_positions=True, blocks=blocks_src
-            )
-            # fan decoded term rows out to their phrase slots (a term may
-            # serve several slots; the join duplicates it per slot)
-            slot_entries = [
-                (t, i, len(alts))
-                for i, (alts, _p) in enumerate(slots)
-                for t in alts
-                if t in stats
-            ]
-            slot_df = self.index.spark.createDataFrame(
-                pd.DataFrame(
-                    slot_entries, columns=["term", "slot", "nalts"]
-                )
-            )
-            # score each (doc, slot, term) row JVM-side, then ONE
-            # aggregation + ONE Arrow UDF evaluates the position chain
-            # and the per-slot score fold together (score NULL = no
-            # phrase path) — no second shuffle, no re-join
-            idf_map = F.create_map(
-                *[x for t, i in term_idf.items() for x in (F.lit(t), F.lit(i))]
-            )
-            parts = decoded.join(F.broadcast(slot_df), "term").select(
-                "docid",
-                "slot",
-                "nalts",
-                "positions",
-                scoring.term_score_col(
-                    self.similarity,
-                    F.col("tf"),
-                    F.col("length"),
-                    idf_map[F.col("term")],
-                    boost,
-                    qn,
-                    avg_len,
-                ).alias("s"),
-            )
-            # exact single-alternative phrases (the hot path: slop=0,
-            # one term per slot) evaluate the position chain entirely
-            # JVM-side: conditional aggregation pivots each slot's
-            # positions/score into columns, then a
-            # transform+array_intersect chain replaces the Arrow UDF —
-            # whole-stage codegen end to end, no Python, no
-            # struct-collect shuffle payload. Hot+hot phrases
-            # ("apache license"-class) are dominated by this stage.
-            if slop == 0 and all(len(alts) == 1 for alts, _p in slots):
-                aggs = []
-                for i in range(nslots):
-                    aggs.append(
-                        F.first(
-                            F.when(F.col("slot") == i, F.col("positions")),
-                            ignorenulls=True,
-                        ).alias(f"p{i}")
-                    )
-                    aggs.append(
-                        F.sum(
-                            F.when(F.col("slot") == i, F.col("s"))
-                        ).alias(f"s{i}")
-                    )
-                g = parts.groupBy("docid").agg(*aggs)
-                present_pred = None
-                for i in range(nslots):
-                    c = F.col(f"p{i}").isNotNull()
-                    present_pred = c if present_pred is None else (
-                        present_pred & c
-                    )
-                g = g.where(present_pred)
-                def _shift(col, d):
-                    # NB: a 2-parameter lambda would be treated as the
-                    # (element, index) form by F.transform
-                    return F.transform(col, lambda x: x + F.lit(d))
 
-                reach = F.col("p0")
-                for i in range(1, nslots):
-                    reach = F.array_intersect(
-                        _shift(reach, deltas[i - 1]), F.col(f"p{i}")
-                    )
-                score = None
-                for i in range(nslots):
-                    score = F.col(f"s{i}") if score is None else (
-                        score + F.col(f"s{i}")
-                    )
-                return (
-                    g.where(F.size(reach) > 0)
-                    .select("docid", score.alias("score"))
-                )
-            g = parts.groupBy("docid").agg(
-                F.collect_list(
-                    F.struct("slot", "nalts", "positions", "s")
-                ).alias("rows"),
-                F.count_distinct(F.col("slot")).alias("nslots_present"),
-            ).where(F.col("nslots_present") >= nslots)
+            def kernel(rows):
+                d, sc = hits(rows, qn)
+                return pd.DataFrame({"docid": d, "score": sc})
 
-            tfidf_mode = self.similarity == scoring.TFIDF
-
-            @F.pandas_udf(T.DoubleType())
-            def phrase_score(rows_col: pd.Series) -> pd.Series:
-                def eval_doc(rows):
-                    pos_by_slot: dict = {}
-                    slot_sum: dict = {}
-                    slot_cnt: dict = {}
-                    slot_nalts: dict = {}
-                    for r in rows:
-                        sl = r["slot"]
-                        pos_by_slot.setdefault(sl, set()).update(
-                            r["positions"]
-                        )
-                        # rows are distinct terms per (doc, slot):
-                        # decoded is unique per (doc, term)
-                        slot_sum[sl] = slot_sum.get(sl, 0.0) + r["s"]
-                        slot_cnt[sl] = slot_cnt.get(sl, 0) + 1
-                        slot_nalts[sl] = r["nalts"]
-                    if not _phrase_path_exists(
-                        pos_by_slot, deltas, nslots, slop
-                    ):
-                        return None
-                    # conjunction of per-slot scores; a multi-alternative
-                    # slot scores like a disjunction (sum x matched/total
-                    # coord in tfidf mode, ref: scorer_disjunction.go:65)
-                    if tfidf_mode:
-                        return sum(
-                            slot_sum[sl] * slot_cnt[sl] / slot_nalts[sl]
-                            for sl in slot_sum
-                        )
-                    return sum(slot_sum.values())
-
-                return rows_col.map(eval_doc)
-
+            # a docid block holds every posting of its docs
             return (
-                g.select(
-                    "docid", phrase_score(F.col("rows")).alias("score")
+                self.index.decoded(
+                    fld, present, need_positions=True, blocks=blocks_src
                 )
-                .where(F.col("score").isNotNull())
+                .groupBy(F.shiftright("docid", BLOCK_SHIFT))
+                .applyInPandas(kernel, "docid long, score double")
             )
 
         def explain(qn, docid, doc_id):
+            cols = ["term", "docid", "tf", "length", "positions"]
             rows = (
                 self.index.decoded(fld, present, need_positions=True)
                 .where(F.col("docid") == docid)
-                .select("term", "tf", "length", "positions")
+                .select(*cols)
                 .collect()
             )
-            by_term = {r["term"]: r for r in rows}
-            pos_by_slot = {
-                i: {
-                    p
-                    for t in alts
-                    if t in by_term
-                    for p in by_term[t]["positions"]
-                }
-                for i, (alts, _p) in enumerate(slots)
-            }
-            if not all(pos_by_slot.values()) or not _phrase_path_exists(
-                pos_by_slot, deltas, nslots, slop
-            ):
+            if not len(hits(pd.DataFrame(rows, columns=cols), qn)[0]):
                 return None
+            by_term = {r["term"]: r for r in rows}
             slot_kids = []
             for alts, _p in slots:
                 kids = [
@@ -1105,54 +1101,9 @@ class Searcher:
             return E.sum_explanation(doc_id, slot_kids)
 
         def local(qn):
-            p = self.index.read_postings(fld, present, need_positions=True)
-            docids = p["docid"].to_numpy()
-            terms = p["term"].to_numpy()
-            scores = scoring.term_scores(
-                self.similarity,
-                p["tf"].to_numpy(),
-                p["length"].to_numpy(),
-                p["term"].map(term_idf).to_numpy(np.float64),
-                boost,
-                qn,
-                avg_len,
+            return hits(
+                self.index.read_postings(fld, present, need_positions=True), qn
             )
-            # candidates: docs where every slot has an alternative
-            cand = None
-            for alts, _p in slots:
-                d = np.unique(docids[np.isin(terms, alts)])
-                cand = d if cand is None else np.intersect1d(cand, d)
-            by_doc: Dict[int, dict] = {}
-            for i in np.flatnonzero(np.isin(docids, cand)):
-                by_doc.setdefault(int(docids[i]), {})[terms[i]] = i
-            out = []
-            for docid in cand.tolist():
-                rows = by_doc[docid]
-                pos_by_slot = {
-                    sl: {
-                        x
-                        for t in alts
-                        if t in rows
-                        for x in p["positions"].iat[rows[t]].tolist()
-                    }
-                    for sl, (alts, _p) in enumerate(slots)
-                }
-                if not _phrase_path_exists(pos_by_slot, deltas, nslots, slop):
-                    continue
-                # conjunction of per-slot scores; a multi-alternative
-                # slot scores like a disjunction, as in build()
-                score = 0.0
-                for alts, _p in slots:
-                    hit = [scores[rows[t]] for t in alts if t in rows]
-                    slot_score = sum(hit)
-                    if self.similarity == scoring.TFIDF:
-                        slot_score = slot_score * len(hit) / len(alts)
-                    score = score + slot_score
-                out.append((docid, score))
-            if not out:
-                return _no_hits()
-            d, s = zip(*out)
-            return np.array(d, dtype=np.int64), np.array(s, dtype=np.float64)
 
         return _Plan(
             weight,
@@ -1953,33 +1904,26 @@ class Searcher:
             else:
                 pred = _keyset_pred(specs, key_cols, req.search_after)
                 page = hits.where(pred).orderBy(*sort_cols).limit(req.size)
-            page, hl_cols = self._apply_highlight(page, req, plan)
-            if req.include_locations:
-                page, loc_cols = self._apply_locations(page, plan)
-                hl_cols = hl_cols + loc_cols
-            page = page.select(*out_cols, *hl_cols)
-            page, facets = self._finish_faceted(hits, page, req)
-            return SearchResult(hits=page, facets=facets, total=total)
-        # global top-k: TakeOrderedAndProject (per-partition top-k + driver
-        # merge — the collector/MultiSearch-merge analogue)
-        page = hits.orderBy(*sort_cols).limit(req.from_ + req.size)
-        if req.from_ > 0:
-            # offset paging over the tiny top-(from+size) set
-            from pyspark.sql import Window
+        else:
+            # global top-k: TakeOrderedAndProject (per-partition top-k +
+            # driver merge — the collector/MultiSearch-merge analogue)
+            page = hits.orderBy(*sort_cols).limit(req.from_ + req.size)
+            if req.from_ > 0:
+                # offset paging over the tiny top-(from+size) set
+                from pyspark.sql import Window
 
-            page = (
-                page.withColumn(
-                    "_rn", F.row_number().over(Window.orderBy(*sort_cols))
+                page = (
+                    page.withColumn(
+                        "_rn", F.row_number().over(Window.orderBy(*sort_cols))
+                    )
+                    .where(F.col("_rn") > req.from_)
+                    .drop("_rn")
                 )
-                .where(F.col("_rn") > req.from_)
-                .drop("_rn")
-            )
         page, hl_cols = self._apply_highlight(page, req, plan)
         if req.include_locations:
             page, loc_cols = self._apply_locations(page, plan)
             hl_cols = hl_cols + loc_cols
         page = page.select(*out_cols, *hl_cols)
-
         page, facets = self._finish_faceted(hits, page, req)
         return SearchResult(hits=page, facets=facets, total=total)
 

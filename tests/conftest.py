@@ -1,6 +1,3 @@
-import os
-import shutil
-
 import pytest
 from pyspark.sql import functions as F
 
@@ -8,7 +5,6 @@ from bleve_spark import IndexBuilder, SearchIndex, code_corpus_mapping
 from bleve_spark.corpus import generate_corpus
 from bleve_spark.session import get_spark
 
-INDEX_DIR = "/tmp/bleve_spark_test_index"
 N_SMOKE = 300
 
 
@@ -24,10 +20,11 @@ def corpus_pdf():
 
 
 @pytest.fixture(scope="session")
-def built_index(spark, corpus_pdf):
-    shutil.rmtree(INDEX_DIR, ignore_errors=True)
+def built_index(spark, corpus_pdf, tmp_path_factory):
+    # a per-session directory: concurrent pytest sessions never share it
+    path = str(tmp_path_factory.mktemp("index"))
     corpus = spark.createDataFrame(corpus_pdf.drop(columns=["content_sha256"]))
     mapping = code_corpus_mapping()
-    builder = IndexBuilder(spark, mapping, INDEX_DIR)
+    builder = IndexBuilder(spark, mapping, path)
     builder.build(corpus, id_expr=F.concat_ws("|", "repo", "path", "commit"))
-    return SearchIndex(spark, INDEX_DIR, mapping)
+    return SearchIndex(spark, path, mapping)

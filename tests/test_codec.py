@@ -1,4 +1,5 @@
 import numpy as np
+import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
@@ -45,11 +46,12 @@ def test_positions_roundtrip():
     assert [list(map(int, x)) for x in dec] == pls
 
 
-def _positions(docids):
-    """Ascending position lists, 0-3 per doc, for one block's docs."""
+def _positions(docids, tfs):
+    """Ascending position lists for one block's docs, tf of them per
+    doc: a position stream's npos header is its posting's tf."""
     return [
-        list(range(int(d) % 5, int(d) % 5 + 3 * (i % 4), 3))
-        for i, d in enumerate(docids)
+        list(range(int(d) % 5, int(d) % 5 + 3 * int(tf), 3))
+        for d, tf in zip(docids, tfs)
     ]
 
 
@@ -66,7 +68,7 @@ def _blocks_frame(blocks):
             "tfs_enc": [codec.varint_encode(t) for _, t, _ in blocks],
             "lens_enc": [codec.varint_encode(le) for _, _, le in blocks],
             "pos_enc": [
-                codec.encode_positions(_positions(d)) for d, _, _ in blocks
+                codec.encode_positions(_positions(d, t)) for d, t, _ in blocks
             ],
         }
     )
@@ -97,6 +99,22 @@ def _assert_batched_matches_loop(blocks):
         for p in codec.decode_positions(enc, len(d))
     ]
     assert [list(p) for p in out["positions"]] == exp_pos
+
+
+def test_batched_block_decode_rejects_header_tf_mismatch():
+    """A position stream whose npos header disagrees with its posting's
+    tf is corrupt: the batch decode raises instead of misaligning every
+    later posting's positions."""
+    from bleve_spark.index import _decode_batch
+
+    d = np.array([5, 9, 12], dtype=np.uint64)
+    tfs = np.array([2, 1, 1], dtype=np.uint64)
+    frame = _blocks_frame([(d, tfs, np.ones(3, dtype=np.uint64))])
+    assert [len(p) for p in _decode_batch(frame, True)["positions"]] == [2, 1, 1]
+    # as many values as the tfs imply, but the headers say 1, 2, 1
+    frame["pos_enc"] = [codec.encode_positions([[1], [3, 7], [2]])]
+    with pytest.raises(ValueError, match="corrupt posting batch"):
+        _decode_batch(frame, True)
 
 
 @settings(max_examples=50, deadline=None)
