@@ -1207,9 +1207,7 @@ def _q_knn_vector_field(spark, sf_dir):
     full recall, so the DuckDB cosine top-k is an exact oracle while
     the plan still exercises the bucket-prefilter route)."""
     idx = _vec_index(spark, sf_dir)
-    s = Searcher(
-        idx, knn_lsh_min_docs=0, knn_lsh_probe=16, knn_lsh_tables=4
-    )
+    s = Searcher(idx, knn_lsh_min_docs=0, knn_lsh_probe=16)
     res = s.search(
         SearchRequest(
             query=Q.MatchNoneQuery(),
@@ -1307,7 +1305,6 @@ def _q_knn_dot_product(spark, sf_dir):
         SearchIndex(spark, idx.index_path, dot_mapping),
         knn_lsh_min_docs=0,
         knn_lsh_probe=16,
-        knn_lsh_tables=4,
     )
     res = s.search(
         SearchRequest(

@@ -58,13 +58,16 @@ def varint_decode(buf: bytes) -> np.ndarray:
     b = np.frombuffer(buf, dtype=np.uint8)
     if len(b) == 0:
         return np.zeros(0, dtype=np.uint64)
-    ends = np.nonzero((b & 0x80) == 0)[0]
+    ends = np.flatnonzero(b < 0x80)
     starts = np.concatenate(([0], ends[:-1] + 1))
-    lengths = ends - starts + 1
-    vals = np.zeros(len(ends), dtype=np.uint64)
-    for j in range(int(lengths.max())):
-        m = lengths > j
-        vals[m] |= (b[starts[m] + j].astype(np.uint64) & _MASK7) << _U64(7 * j)
+    vals = (b[starts] & 0x7F).astype(np.uint64)
+    # the few values longer than one byte add their later bytes
+    at = np.flatnonzero(ends > starts)
+    j = 1
+    while len(at):
+        vals[at] |= (b[starts[at] + j].astype(np.uint64) & _MASK7) << _U64(7 * j)
+        j += 1
+        at = at[ends[at] >= starts[at] + j]
     return vals
 
 
@@ -108,29 +111,33 @@ def decode_positions(buf: bytes, ndocs: int) -> list:
     for k in range(ndocs):
         npos[k] = n = int(flat[i])
         i += n + 1
-    return positions_by_doc(flat, npos)
+    if not ndocs:
+        return []
+    return np.split(flat_positions(flat, npos), np.cumsum(npos)[:-1])
 
 
-def positions_by_doc(flat: np.ndarray, npos: np.ndarray) -> list:
-    """Split decoded position streams [npos, p0, gaps...] laid back to
-    back into one int64 array per stream, given each stream's `npos`
-    (a posting's tf): with the headers known, one segmented cumsum over
-    the rest gives every position (exact even if the global uint64 sum
-    wraps: the wrap cancels in the subtraction of each stream's base).
-    Raises ValueError when the headers disagree with `npos`."""
+def flat_positions(streams: np.ndarray, npos: np.ndarray) -> np.ndarray:
+    """The positions of decoded position streams [npos, p0, gaps...]
+    laid back to back, given each stream's `npos` (a posting's tf), as
+    one flat int64 array in which stream i owns the next npos[i] values.
+    With the headers known, one segmented cumsum over the rest gives
+    every position (exact even if the global uint64 sum wraps: the wrap
+    cancels in the subtraction of each stream's base). Raises
+    ValueError when the headers disagree with `npos`."""
     npos = np.asarray(npos, dtype=np.int64)
     ends = np.cumsum(npos)
     starts = ends - npos
     heads = starts + np.arange(len(npos))
-    if len(flat) != int(npos.sum()) + len(npos) or not np.array_equal(
-        flat[heads], npos.astype(np.uint64)
+    if len(streams) != int(npos.sum()) + len(npos) or not np.array_equal(
+        streams[heads], npos.astype(np.uint64)
     ):
         raise ValueError(
             "corrupt posting batch: position headers disagree with tfs"
         )
-    body = np.ones(len(flat), dtype=bool)
+    body = np.ones(len(streams), dtype=bool)
     body[heads] = False
-    cs = np.cumsum(flat[body], dtype=np.uint64)
-    base = np.concatenate((np.zeros(1, np.uint64), cs))[starts]
-    pos = (cs - np.repeat(base, npos)).astype(np.int64)
-    return [pos[a:b] for a, b in zip(starts.tolist(), ends.tolist())]
+    pos = streams[body]
+    np.cumsum(pos, out=pos)
+    base = np.concatenate((np.zeros(1, np.uint64), pos))[starts]
+    pos -= np.repeat(base, npos)
+    return pos.view(np.int64)

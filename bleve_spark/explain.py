@@ -13,8 +13,10 @@ DocumentMatch).
 The trees are built by the plan that search() runs, as the reference
 builds them from the scorer tree that produced the score: each planner
 in search.py pairs its DataFrame builder with an explain closure over
-the same plan-time state, and calls the node builders below. A tree
-therefore has the plan's shape (a one-token match is its bare term
+the same plan-time state, and calls the node builders below. A scored
+leaf's closure reads the one doc's postings on the driver (its posting
+block, with pyarrow) and runs the same numpy matching as search(). A
+tree therefore has the plan's shape (a one-token match is its bare term
 node) and its root value is the hit's score."""
 
 from __future__ import annotations

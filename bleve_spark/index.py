@@ -35,11 +35,10 @@ DECODED_SCHEMA = T.StructType(
         T.StructField("docid", T.LongType()),
         T.StructField("tf", T.IntegerType()),
         T.StructField("length", T.IntegerType()),
-        # int64: array-field positions are offset by element_index *
-        # ARRAY_POSITION_STRIDE (2^20), so ~2048+ elements overflow int32
-        T.StructField("positions", T.ArrayType(T.LongType())),
     ]
 )
+SCORED_SCHEMA = "docid long, score double"
+_STREAMS = ("docids_enc", "tfs_enc", "lens_enc", "pos_enc")
 
 
 _U64_ZERO = np.uint64(0)
@@ -56,9 +55,10 @@ def _successor(prefix: str) -> Optional[str]:
     return p[:-1] + chr(nxt)
 
 
-def _decode_batch(pdf: "pd.DataFrame", need_positions: bool) -> "pd.DataFrame":
+def _decode_batch(pdf: "pd.DataFrame") -> Tuple["pd.DataFrame", Optional[np.ndarray]]:
     """Decode a whole batch of posting blocks with one varint pass per
-    stream, no per-block Python dispatch.
+    stream, no per-block Python dispatch; the driver readers and the
+    Spark tasks both decode with it.
 
     LEB128 streams are self-delimiting, so the concatenation of every
     block's stream decodes to the concatenation of their values; block
@@ -74,10 +74,15 @@ def _decode_batch(pdf: "pd.DataFrame", need_positions: bool) -> "pd.DataFrame":
     per-block numpy dispatch (~25us) was ~6 s of the 1-char-prefix
     benchmark, vs ~0.1 s batched.
 
-    A block's pos_enc is its docs' position streams back to back, so
-    the batch's concatenated pos_enc is every posting's stream in
-    docid-row order and decodes in one call too; each stream's npos
-    header must equal its posting's tf.
+    Returns (postings, positions). `postings` holds one row per posting:
+    every column of `pdf` that is not an encoded stream (field, term,
+    an expansion's df, ...) repeated per posting, then docid, tf and
+    length. `positions` is None unless `pdf` carries pos_enc; then it is
+    one flat int64 array in which posting i owns the next tf[i] values.
+    A block's pos_enc is its docs' position streams back to back, so the
+    batch's concatenated pos_enc is every posting's stream in row order
+    and decodes in one call too; each stream's npos header must equal
+    its posting's tf.
     """
     d_bufs = pdf["docids_enc"].tolist()
     B = len(d_bufs)
@@ -111,25 +116,18 @@ def _decode_batch(pdf: "pd.DataFrame", need_positions: bool) -> "pd.DataFrame":
             "corrupt posting batch: stream lengths disagree "
             f"({len(docids)} docids, {len(tfs)} tfs, {len(lens)} lens)"
         )
-    out = pd.DataFrame(
-        {
-            "field": np.repeat(pdf["field"].to_numpy(), counts),
-            "term": np.repeat(pdf["term"].to_numpy(), counts),
-            "docid": docids,
-            "tf": tfs.astype(np.int32),
-            "length": lens.astype(np.int32),
-        }
-    )
-    if need_positions:
-        out["positions"] = pd.Series(
-            codec.positions_by_doc(
-                codec.varint_decode(b"".join(pdf["pos_enc"])), tfs
-            ),
-            dtype=object,
+    cols = {
+        c: np.repeat(pdf[c].to_numpy(), counts)
+        for c in pdf.columns
+        if c not in _STREAMS
+    }
+    cols.update(docid=docids, tf=tfs.astype(np.int32), length=lens.astype(np.int32))
+    positions = None
+    if "pos_enc" in pdf:
+        positions = codec.flat_positions(
+            codec.varint_decode(b"".join(pdf["pos_enc"].tolist())), tfs
         )
-    else:
-        out["positions"] = None
-    return out
+    return pd.DataFrame(cols), positions
 
 
 class SearchIndex:
@@ -203,10 +201,7 @@ class SearchIndex:
 
     @cached_property
     def docs(self) -> DataFrame:
-        d = self._table("docs")
-        if self.deleted_docids is not None:
-            d = d.join(self.deleted_docids, "docid", "left_anti")
-        return d
+        return self.live(self._table("docs"))
 
     @cached_property
     def postings(self) -> DataFrame:
@@ -352,25 +347,36 @@ class SearchIndex:
         return terms, df
 
     def read_postings(
-        self, field: str, terms: Iterable[str], need_positions: bool = False
-    ) -> "pd.DataFrame":
-        """Decoded live postings (term, docid, tf, length, positions) of
-        (field, term in terms): lists only the terms' tbucket= dirs of
-        each segment (a segment that logs no fanout is read whole),
-        decodes with `_decode_batch` and drops the snapshot's dead
-        docids."""
-        from .build import tbucket_of
+        self,
+        field: str,
+        terms: Optional[Iterable[str]],
+        need_positions: bool = False,
+        docid: Optional[int] = None,
+    ) -> Tuple["pd.DataFrame", Optional[np.ndarray]]:
+        """Decoded live postings of (field, term in terms), or of every
+        term of `field` when `terms` is None, as `_decode_batch` returns
+        them: ((term, docid, tf, length) rows, flat positions or None).
+        Lists only the terms' tbucket= dirs of each segment (a segment
+        that logs no fanout, or a read of every term, lists them all)
+        and drops the snapshot's dead docids. With `docid`, only that
+        doc's postings, read from its posting block (docid >>
+        BLOCK_SHIFT)."""
+        from .build import BLOCK_SHIFT, tbucket_of
 
-        terms = list(dict.fromkeys(terms))
-        cols = ["field", "term", "docids_enc", "tfs_enc", "lens_enc"]
+        cols = ["term", "docids_enc", "tfs_enc", "lens_enc"]
         if need_positions:
             cols.append("pos_enc")
-        filt = (pc.field("field") == field) & pc.field("term").isin(terms)
+        filt = pc.field("field") == field
+        if terms is not None:
+            terms = list(dict.fromkeys(terms))
+            filt = filt & pc.field("term").isin(terms)
+        if docid is not None:
+            filt = filt & (pc.field("block") == docid >> BLOCK_SHIFT)
         parts = []
-        for m, pdir in self._dirs("postings") if terms else ():
+        for m, pdir in self._dirs("postings") if terms != [] else ():
             n = m.get("tbuckets")
             dirs = [pdir]
-            if n:
+            if n and terms is not None:
                 dirs = [
                     os.path.join(pdir, f"tbucket={b}")
                     for b in sorted({tbucket_of(field, t, n) for t in terms})
@@ -384,10 +390,16 @@ class SearchIndex:
             blocks = pa.concat_tables(parts).to_pandas()
         else:
             blocks = pd.DataFrame({c: [] for c in cols}, dtype=object)
-        out = _decode_batch(blocks, need_positions)
+        postings, positions = _decode_batch(blocks)
+        ids = postings["docid"].to_numpy()
+        keep = np.ones(len(ids), dtype=bool) if docid is None else ids == docid
         if self.dead_docids.size:
-            out = out[~np.isin(out["docid"].to_numpy(), self.dead_docids)]
-        return out.drop(columns="field").reset_index(drop=True)
+            keep &= ~np.isin(ids, self.dead_docids)
+        if keep.all():
+            return postings, positions
+        if positions is not None:
+            positions = positions[np.repeat(keep, postings["tf"].to_numpy())]
+        return postings[keep].reset_index(drop=True), positions
 
     def live_docids(self) -> np.ndarray:
         """Every live docid: each segment's [docid_start, docid_end)
@@ -474,33 +486,48 @@ class SearchIndex:
             cond = F.col("tbucket").isin(bks) & cond
         return self.postings.where(cond)
 
-    def decoded(
-        self,
-        field: str,
-        terms: Iterable[str],
-        need_positions: bool = False,
-        blocks: Optional[DataFrame] = None,
-    ) -> DataFrame:
-        """Decode posting blocks into (field, term, docid, tf, length,
-        positions) rows via an Arrow-batched mapInPandas. Callers doing
-        block-max pruning pass a pre-filtered `blocks`."""
-        src = blocks if blocks is not None else self.blocks(field, terms)
-        # project away unused payloads BEFORE the pandas decode: scoring
-        # without positions must not read pos_enc (roughly half the
-        # postings bytes) — mapInPandas alone defeats column pruning
-        cols = ["field", "term", "docids_enc", "tfs_enc", "lens_enc"]
-        if need_positions:
-            cols.append("pos_enc")
-        src = src.select(*cols)
+    def decoded(self, field: str, terms: Iterable[str]) -> DataFrame:
+        """Live postings of (field, term in terms) as (field, term,
+        docid, tf, length) rows, decoded by an Arrow-batched
+        mapInPandas."""
+        src = self.blocks(field, terms).select(
+            "field", "term", "docids_enc", "tfs_enc", "lens_enc"
+        )
 
         def gen(batches):
             for pdf in batches:
                 if len(pdf):
-                    yield _decode_batch(pdf, need_positions)
+                    yield _decode_batch(pdf)[0]
 
-        out = src.mapInPandas(gen, DECODED_SCHEMA)
-        if self.deleted_docids is not None:
-            # mask dead docs at the postings level — the
-            # deleted-roaring-bitmap analogue (scorch README:213-218)
-            out = out.join(self.deleted_docids, "docid", "left_anti")
-        return out
+        return self.live(src.mapInPandas(gen, DECODED_SCHEMA))
+
+    def scored(self, blocks: DataFrame, score, columns: Sequence[str] = ()) -> DataFrame:
+        """DataFrame(docid, score) of posting blocks scored inside the
+        Spark tasks with the driver route's numpy code: each Arrow batch
+        of `blocks` decodes with `_decode_batch` and scores with
+        `score(postings) -> float64 array`, and only (docid, score)
+        leaves the task. `columns` are the other columns of `blocks`
+        that `score` reads per posting (an expansion's df). `score`
+        runs in the tasks, so it must not hold the Searcher or this
+        index."""
+        # project before mapInPandas, which defeats column pruning:
+        # scoring must not read pos_enc (about half the postings bytes)
+        src = blocks.select(*columns, "docids_enc", "tfs_enc", "lens_enc")
+
+        def gen(batches):
+            for pdf in batches:
+                if len(pdf):
+                    p, _ = _decode_batch(pdf)
+                    yield pd.DataFrame(
+                        {"docid": p["docid"].to_numpy(), "score": score(p)}
+                    )
+
+        return self.live(src.mapInPandas(gen, SCORED_SCHEMA))
+
+    def live(self, df: DataFrame) -> DataFrame:
+        """`df` (with a docid column) without the snapshot's dead
+        docids — the deleted-roaring-bitmap analogue (scorch
+        README:213-218)."""
+        if self.deleted_docids is None:
+            return df
+        return df.join(self.deleted_docids, "docid", "left_anti")

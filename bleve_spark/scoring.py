@@ -24,7 +24,6 @@ from __future__ import annotations
 import math
 
 import numpy as np
-from pyspark.sql import Column, functions as F
 
 BM25_K1 = 1.2
 BM25_B = 0.75
@@ -40,52 +39,12 @@ def idf(similarity: str, n_docs: int, df: int) -> float:
     return math.log(1.0 + (n_docs - df + 0.5) / (df + 0.5))
 
 
-def idf_col(similarity: str, n_docs: int, df_col: Column) -> Column:
-    """`idf` as a column over a per-row df column (multi-term
-    expansions score each expanded term with its own idf)."""
-    n = F.lit(float(n_docs))
-    dfd = df_col.cast("double")
-    if similarity == TFIDF:
-        return F.lit(1.0) + F.log(n / (dfd + F.lit(1.0)))
-    return F.log(F.lit(1.0) + (n - dfd + F.lit(0.5)) / (dfd + F.lit(0.5)))
-
-
 def term_weight(similarity: str, boost: float, idf_val: float) -> float:
     """Leaf weight fed into queryNorm (ref: scorer_term.go:92-96)."""
     if similarity == TFIDF:
         w = boost * idf_val
         return w * w
     return 0.0  # bm25: no queryNorm
-
-
-def term_score_col(
-    similarity: str,
-    tf_col: Column,
-    len_col: Column,
-    idf: Column,
-    boost: float,
-    query_norm: float | None,
-    avg_len: float,
-) -> Column:
-    """Per-posting score column; `idf` is a column (a literal for one
-    term, per-row for expansions and phrases)."""
-    if similarity == TFIDF:
-        # float32 norm emulation for parity
-        # (ref: index/upsidedown/upsidedown.go:608-609)
-        norm = (F.lit(1.0) / F.sqrt(F.greatest(len_col, F.lit(1)))).cast(
-            "float"
-        ).cast("double")
-        score = F.sqrt(tf_col.cast("double")) * norm * idf
-        if query_norm is not None:
-            # fieldWeight x queryWeight (ref: scorer_term.go:128,149-150)
-            score = score * (F.lit(boost) * idf * F.lit(query_norm))
-        return score
-    tf_d = tf_col.cast("double")
-    denom = tf_d + F.lit(BM25_K1) * (
-        F.lit(1.0 - BM25_B)
-        + F.lit(BM25_B) * len_col.cast("double") / F.lit(max(avg_len, 1e-9))
-    )
-    return F.lit(boost) * idf * tf_d * F.lit(BM25_K1 + 1.0) / denom
 
 
 def term_scores(
@@ -97,15 +56,18 @@ def term_scores(
     query_norm: float | None,
     avg_len: float,
 ) -> np.ndarray:
-    """`term_score_col` over numpy arrays, bit for bit: the same
-    operation order and the same float32 norm. `idf` is a scalar or one
-    value per posting."""
+    """Per-posting scores over numpy arrays: the one term scorer, run
+    on the driver and inside the Spark tasks alike. `idf` is a scalar or
+    one value per posting."""
     tf_d = np.asarray(tf, dtype=np.float64)
     len_d = np.asarray(length, dtype=np.float64)
     if similarity == TFIDF:
+        # float32 norm emulation for parity
+        # (ref: index/upsidedown/upsidedown.go:608-609)
         norm = (1.0 / np.sqrt(np.maximum(len_d, 1.0))).astype(np.float32)
         score = np.sqrt(tf_d) * norm.astype(np.float64) * idf
         if query_norm is not None:
+            # fieldWeight x queryWeight (ref: scorer_term.go:128,149-150)
             score = score * (boost * idf * query_norm)
         return score
     denom = tf_d + BM25_K1 * (

@@ -5,21 +5,26 @@ Driver-side "searcher construction" (the reference's planning phase,
 dictionary (df) and stats (N) — two tiny lookups — then compose a
 DataFrame expression tree; Catalyst picks the physical strategy. Execution
 (the reference's collector pull loop, search/collector/topn.go:159-280)
-becomes a distributed scan of the pruned posting blocks + score columns +
-global top-k via ORDER BY ... LIMIT (TakeOrderedAndProject = per-partition
-top-k then driver merge, the exact analogue of bleve's collector +
-MultiSearch merge, index_alias_impl.go:506-525).
+becomes a distributed scan of the pruned posting blocks, each task
+decoding and scoring its blocks with the driver route's numpy code and
+sending back only (docid, score), + global top-k via ORDER BY ... LIMIT
+(TakeOrderedAndProject = per-partition top-k then driver merge, the
+exact analogue of bleve's collector + MultiSearch merge,
+index_alias_impl.go:506-525).
 
 Iterator -> DataFrame mapping (SURVEY.md §2.4):
+  term scorer          -> mapInPandas: decode + scoring.term_scores
   conjunction zipper   -> inner join on docid, score sum
   disjunction heap     -> unionByName + groupBy(docid), coord factor
   boolean must/not     -> left-semi/left-anti joins
-  phrase positions     -> groupBy(docid block) + the numpy phrase kernel
+  phrase positions     -> encoded blocks grouped by their stored block
+                          column, decode + the numpy phrase kernel
   dictionary automaton -> predicates on the dictionary table
 
 The same plan also runs on the driver when its posting set is small
-(the Searcher docstring): numpy over pyarrow reads of the index files,
-closest to the reference's in-process iterators, with no Spark job.
+(the Searcher docstring): the same numpy code over pyarrow reads of the
+index files, closest to the reference's in-process iterators, with no
+Spark job.
 """
 
 from __future__ import annotations
@@ -39,9 +44,8 @@ from . import query as Q
 from . import scoring
 from . import wand
 from .analysis import get_analyzer
-from .build import BLOCK_SHIFT
 from .highlight import HighlightRequest, highlight_value
-from .index import SearchIndex
+from .index import SCORED_SCHEMA, SearchIndex, _decode_batch
 
 
 # Maximum clauses a multi-term expansion / disjunction may produce;
@@ -132,7 +136,8 @@ class SearchRequest:
     sort: Sequence[str] = ("-_score", "_id")
     fields: Sequence[str] = ()
     facets: Dict[str, FacetRequest] = dc_field(default_factory=dict)
-    similarity: str = scoring.TFIDF
+    # "tfidf" or "bm25"; None scores with the Searcher's similarity
+    similarity: Optional[str] = None
     search_after: Optional[Sequence] = None
     search_before: Optional[Sequence] = None
     highlight: Optional[HighlightRequest] = None
@@ -187,20 +192,22 @@ def _phrase_path_exists(pos_by_slot, deltas, nslots, slop) -> bool:
 
 
 def _phrase_hits(
-    rows, slots, deltas, slop, term_idf, boost, qn, avg_len, similarity
+    rows, positions, slots, deltas, slop, term_idf, boost, qn, avg_len,
+    similarity,
 ):
     """The one phrase matcher and scorer: the local route, the Spark
-    route (per docid block) and explain() all call it. `rows` is a
-    docid-closed frame of decoded postings with positions (term, docid,
-    tf, length, positions; one row per doc and term), `slots`
-    [(alternative terms, position)], `deltas` the position steps
-    between consecutive slots and `term_idf` {term: idf}. Returns the
-    docs with a phrase path, (docids, scores): docids sorted and unique
-    (int64), scores float64.
+    route (per posting block) and explain() all call it. `rows` is a
+    docid-closed frame of decoded postings (term, docid, tf, length; one
+    row per doc and term) and `positions` their flat positions, row i
+    owning the next tf[i] values, as `index._decode_batch` returns them.
+    `slots` is [(alternative terms, position)], `deltas` the position
+    steps between consecutive slots and `term_idf` {term: idf}. Returns
+    the docs with a phrase path, (docids, scores): docids sorted and
+    unique (int64), scores float64.
 
     Exact phrases match vectorized: each slot's (doc, position - slot
-    offset) keys, unique per slot, are counted across slots, and a key
-    every slot holds is a phrase start. A key packs the doc's rank among
+    offset) keys, unique per slot, are intersected across slots, and a
+    key every slot holds is a phrase start. A key packs the doc's rank among
     the candidates with the shifted position, less the batch's least;
     when that could overflow int64 it packs the position's rank among
     the batch's distinct shifted positions, which keeps it below n^2
@@ -219,50 +226,57 @@ def _phrase_hits(
         cand = np.intersect1d(cand, docids[m])
     if not len(cand):
         return _no_hits()
-    # the candidates' rows, in doc order
-    keep = np.flatnonzero(np.isin(docids, cand))
-    keep = keep[np.argsort(docids[keep], kind="stable")]
-    rows = rows.iloc[keep]
-    docids = docids[keep]
-    in_slot = [m[keep] for m in in_slot]
+    # per slot, the candidate rows' positions (read from the flat
+    # layout as they lie) and each position's doc rank among cand
     rank = np.searchsorted(cand, docids)
-    pos = rows["positions"].to_numpy()
-    npos = np.fromiter(map(len, pos), np.int64, len(pos))
-    flat = np.concatenate(pos).astype(np.int64, copy=False)
-    row_of = np.repeat(np.arange(len(pos)), npos)
+    is_cand = np.isin(docids, cand)
+    tf = rows["tf"].to_numpy(np.int64)
+    by_slot = []
+    for m in in_slot:
+        m = m & is_cand
+        by_slot.append((np.repeat(rank[m], tf[m]), positions[np.repeat(m, tf)]))
     if slop == 0:
-        shift = np.concatenate(([0], np.cumsum(deltas, dtype=np.int64)))
-        at = [np.flatnonzero(m[row_of]) for m in in_slot]
-        shifted = np.concatenate([flat[a] - shift[i] for i, a in enumerate(at)])
-        shifted -= shifted.min()
-        span = int(shifted.max()) + 1
+        for (_r, p), d in zip(by_slot, np.cumsum([0, *deltas]).tolist()):
+            p -= d  # the kernel's own copies: shift them in place
+        lo = min(int(p.min()) for _r, p in by_slot)
+        span = max(int(p.max()) for _r, p in by_slot) - lo + 1
         if len(cand) * span >= 2**63:
             # positions too far apart to pack: pack their ranks instead
-            shifted = np.unique(shifted, return_inverse=True)[1]
-            span = int(shifted.max()) + 1
-        ends = np.cumsum([len(a) for a in at])
-        keys = [
-            np.unique(rank[row_of[a]] * span + k)
-            for a, k in zip(at, np.split(shifted, ends[:-1]))
-        ]
-        key, count = np.unique(np.concatenate(keys), return_counts=True)
-        matched = cand[np.unique(key[count == nslots] // span)]
+            inv = np.unique(
+                np.concatenate([p for _r, p in by_slot]), return_inverse=True
+            )[1]
+            ends = np.cumsum([len(p) for _r, p in by_slot])
+            by_slot = [
+                (r, p) for (r, _p), p in zip(by_slot, np.split(inv, ends[:-1]))
+            ]
+            lo, span = 0, int(inv.max()) + 1
+        # a key every slot holds starts a phrase; each slot's keys are
+        # made and intersected in turn, so one slot's arrays are live
+        common = None
+        while by_slot:
+            r, p = by_slot.pop(0)
+            k = np.unique(r * span + (p - lo))
+            common = k if common is None else np.intersect1d(
+                common, k, assume_unique=True
+            )
+        matched = cand[np.unique(common // span)]
     else:
-        # each slot's positions, with every candidate's [lo, hi) slice
-        by_slot = []
-        for m in in_slot:
-            a = np.flatnonzero(m[row_of])
-            r = rank[row_of[a]]
-            by_slot.append(
+        # each slot's positions in doc order, with every candidate's
+        # [lo, hi) slice
+        slices = []
+        for r, p in by_slot:
+            order = np.argsort(r, kind="stable")
+            r, p = r[order], p[order]
+            slices.append(
                 (
-                    flat[a],
+                    p,
                     np.searchsorted(r, np.arange(len(cand))),
                     np.searchsorted(r, np.arange(len(cand)), "right"),
                 )
             )
         ok = [
             _phrase_path_exists(
-                [set(p[lo[k]:hi[k]].tolist()) for p, lo, hi in by_slot],
+                [set(p[lo[k]:hi[k]].tolist()) for p, lo, hi in slices],
                 deltas, nslots, slop,
             )
             for k in range(len(cand))
@@ -308,8 +322,11 @@ class _Plan:
     matches}, which highlighting and include_locations mark. All of them
     read the same plan-time state (term sets, idf, weights, phrase
     slots), so an explanation's value is the score search() gives and a
-    highlight marks the terms that scored. A phrase plan's build,
-    explain and local all match and score with `_phrase_hits`.
+    highlight marks the terms that scored. A leaf's build, explain and
+    local decode with `index._decode_batch` and score with the same
+    numpy code (`scoring.term_scores`; `_phrase_hits` for a phrase):
+    build inside the Spark tasks, local on the driver, and explain on
+    the driver over the one doc's posting block.
 
     `wand` is (field, leaves, conjunctive) with leaves [(term, boost,
     idf, df)] when the plan is a term leaf, or a conjunction/disjunction
@@ -424,25 +441,22 @@ class Searcher:
         similarity: str = scoring.TFIDF,
         wand_min_postings: int = 50_000_000,
         knn_lsh_min_docs: int = 1_000_000,
-        knn_lsh_planes: int = 16,
         knn_lsh_probe: int = 2,
-        knn_lsh_tables: int = 4,
     ):
         self.index = index
         self.similarity = similarity
         # SearchRequest.knn scans the corpus exhaustively below
         # knn_lsh_min_docs (one vectorized pass; exact) and switches to
         # multi-table multi-probe hyperplane-LSH candidate buckets
-        # above it — per table scanning
-        # ~(sum_{i<=probe} C(planes,i))/2^planes of the data, with
-        # recall 1-(1-p_table)^tables. Defaults (16 planes x 4 tables,
-        # probe 2) score ~0.8% of the corpus; measured recall@10 at
-        # 10^6 vectors in BASELINE.md. knn_lsh_tables=1 with
-        # probe == planes gives exact recall (full scan).
+        # above it (ops.similarity's LSH_N_TABLES tables of
+        # LSH_N_PLANES planes, the ones build time persists) — per
+        # table scanning ~(sum_{i<=probe} C(planes,i))/2^planes of the
+        # data, with recall 1-(1-p_table)^tables. Probe 2 scores ~0.8%
+        # of the corpus; measured recall@10 at 10^6 vectors in
+        # BASELINE.md. probe == planes (16) gives exact recall (full
+        # scan).
         self.knn_lsh_min_docs = knn_lsh_min_docs
-        self.knn_lsh_planes = knn_lsh_planes
         self.knn_lsh_probe = knn_lsh_probe
-        self.knn_lsh_tables = knn_lsh_tables
         # block-max WAND engages only when the query's summed df clears
         # this floor. Cost model (measured, BASELINE.md): the pruning
         # adds ~2 extra driver jobs (metadata agg + phase-1 theta) worth
@@ -497,9 +511,9 @@ class Searcher:
         """Posting blocks for (fld, terms), optionally cut down to a WAND
         survivor set — a literal id list (tiny phase-1 sets) or a
         broadcast-joined DataFrame(block) (phase-2 survivors)."""
-        if blocks is None:
-            return None
         src = self.index.blocks(fld, terms)
+        if blocks is None:
+            return src
         if isinstance(blocks, list):
             return src.where(F.col("block").isin(blocks))
         return src.join(F.broadcast(blocks), "block")
@@ -512,52 +526,34 @@ class Searcher:
         idf = scoring.idf(self.similarity, self.index.doc_count, df_count)
         weight = scoring.term_weight(self.similarity, boost, idf)
         avg_len = self.index.avg_len(fld)
+        # score() runs in Spark tasks too, so it must not hold self
+        similarity = self.similarity
+
+        def score(p, qn):
+            return scoring.term_scores(
+                similarity, p["tf"].to_numpy(), p["length"].to_numpy(), idf,
+                boost, qn, avg_len,
+            )
 
         def build(qn, blocks):
-            decoded = self.index.decoded(
-                fld,
-                [term],
-                blocks=self._restricted_blocks(fld, [term], blocks),
-            )
-            return decoded.select(
-                "docid",
-                scoring.term_score_col(
-                    self.similarity,
-                    F.col("tf"),
-                    F.col("length"),
-                    F.lit(idf),
-                    boost,
-                    qn,
-                    avg_len,
-                ).alias("score"),
+            return self.index.scored(
+                self._restricted_blocks(fld, [term], blocks),
+                lambda p: score(p, qn),
             )
 
         def explain(qn, docid, doc_id):
-            rows = (
-                self.index.decoded(fld, [term])
-                .where(F.col("docid") == docid)
-                .select("tf", "length")
-                .collect()
-            )
-            if not rows:
+            p, _ = self.index.read_postings(fld, [term], docid=docid)
+            if not len(p):
                 return None
-            tf, length = rows[0]
             return self._term_expl(
-                fld, term, doc_id, tf, length, idf, df_count, boost, qn
+                fld, term, doc_id, int(p["tf"].iat[0]),
+                int(p["length"].iat[0]), idf, df_count, boost, qn,
             )
 
         def local(qn):
-            p = self.index.read_postings(fld, [term])
+            p, _ = self.index.read_postings(fld, [term])
             order = np.argsort(p["docid"].to_numpy(), kind="stable")
-            return p["docid"].to_numpy()[order], scoring.term_scores(
-                self.similarity,
-                p["tf"].to_numpy()[order],
-                p["length"].to_numpy()[order],
-                idf,
-                boost,
-                qn,
-                avg_len,
-            )
+            return p["docid"].to_numpy()[order], score(p, qn)[order]
 
         return _Plan(
             weight,
@@ -581,12 +577,14 @@ class Searcher:
         searcher/search_multi_term.go).
 
         DataFrame-native: the matching dictionary slice never reaches the
-        driver. One small agg job yields (clause count, queryNorm weight);
-        at execution the same predicate filters the postings scan
-        (prefix predicates push down to parquet) and the slice joins in
-        per-term df, from which idf is computed as a column. A 1-char
-        prefix over millions of dictionary terms therefore costs one
-        scalar agg on the driver, not a million-entry literal plan.
+        driver. One small agg job yields the slice's term count per df,
+        from which the driver sums (clause count, queryNorm weight); at
+        execution the same predicate filters the postings scan (prefix
+        predicates push down to parquet), the slice joins its per-term
+        df to the encoded blocks, and each Spark task scores its
+        postings with idf per distinct df. A 1-char prefix over millions
+        of dictionary terms therefore costs one small agg on the driver,
+        not a million-entry literal plan.
 
         Clause guard parity (ref: search_multi_term.go:96-98,
         search_disjunction.go:105-115): when DisjunctionMaxClauseCount
@@ -602,98 +600,93 @@ class Searcher:
         slice could never run locally; it is not read, and the plan is
         the Spark agg's as for any other expansion."""
         n_docs = self.index.doc_count
-        idf_c = scoring.idf_col(self.similarity, n_docs, F.col("df"))
+        # score() runs in Spark tasks too, so it must not hold self
+        similarity = self.similarity
         got = None
         if prefix is not None:
             got = self.index.prefix_terms(fld, prefix, LOCAL_MAX_POSTINGS)
         if got is not None:
             slice_terms, dfs = got
-            term_idf = {
-                t: scoring.idf(self.similarity, n_docs, int(d))
-                for t, d in zip(slice_terms, dfs)
-            }
+            term_df = dict(zip(slice_terms, dfs.tolist()))
             n_terms = len(slice_terms)
             weight = sum(
-                scoring.term_weight(self.similarity, boost, i)
-                for i in term_idf.values()
+                scoring.term_weight(
+                    similarity, boost, scoring.idf(similarity, n_docs, d)
+                )
+                for d in term_df.values()
             )
         else:
-            if self.similarity == scoring.TFIDF:
-                w = F.lit(boost) * idf_c
-                weight_col = w * w
-            else:
-                weight_col = F.lit(0.0)
-            row = (
-                self.index.expansion(fld, predicate)
-                .agg(F.count("*").alias("n"), F.sum(weight_col).alias("w"))
-                .collect()[0]
+            by_df = self.index.expansion(fld, predicate).groupBy("df").count().collect()
+            n_terms = sum(r["count"] for r in by_df)
+            weight = sum(
+                r["count"] * scoring.term_weight(
+                    similarity, boost, scoring.idf(similarity, n_docs, r["df"])
+                )
+                for r in by_df
             )
-            n_terms = int(row["n"])
-            weight = float(row["w"]) if row["w"] is not None else 0.0
         if DisjunctionMaxClauseCount and n_terms > DisjunctionMaxClauseCount:
             raise TooManyClausesError(fld, n_terms, DisjunctionMaxClauseCount)
         if n_terms == 0:
             return self._empty_plan()
         avg_len = self.index.avg_len(fld)
 
-        def exp():
+        def score(p, qn):
+            # each posting carries its term's df: idf per distinct df
+            codes, uniq = pd.factorize(p["df"])
+            idf = np.array([scoring.idf(similarity, n_docs, int(d)) for d in uniq])
+            return scoring.term_scores(
+                similarity, p["tf"].to_numpy(), p["length"].to_numpy(),
+                idf[codes], boost, qn, avg_len,
+            )
+
+        def build(qn, _blocks):
             # known expansion cardinality picks the join strategy: small
             # slices broadcast; huge ones shuffle (AQE re-plans at runtime)
             slice_df = self.index.expansion(fld, predicate)
-            return F.broadcast(slice_df) if n_terms <= 65536 else slice_df
-
-        def expansion_postings():
+            if n_terms <= 65536:
+                slice_df = F.broadcast(slice_df)
             blocks = self.index.postings.where(
                 (F.col("field") == fld) & predicate
+            ).join(slice_df, "term")
+            agg = (
+                self.index.scored(blocks, lambda p: score(p, qn), ["df"])
+                .groupBy("docid")
+                .agg(F.sum("score").alias("sum_score"), F.count("*").alias("nmatch"))
             )
-            return self.index.decoded(fld, [], blocks=blocks)
-
-        def build(qn, _blocks):
-            per_term = (
-                expansion_postings()
-                .join(exp(), "term")
-                .select(
-                    "docid",
-                    scoring.term_score_col(
-                        self.similarity,
-                        F.col("tf"),
-                        F.col("length"),
-                        idf_c,
-                        boost,
-                        qn,
-                        avg_len,
-                    ).alias("score"),
-                )
-            )
-            agg = per_term.groupBy("docid").agg(
-                F.sum("score").alias("sum_score"),
-                F.count("*").alias("nmatch"),
-            )
-            score = F.col("sum_score")
-            if self.similarity == scoring.TFIDF:
+            score_col = F.col("sum_score")
+            if similarity == scoring.TFIDF:
                 # disjunction coord (ref: scorer/scorer_disjunction.go:65-66)
-                score = score * F.col("nmatch") / F.lit(n_terms)
-            return agg.select("docid", score.alias("score"))
+                score_col = score_col * F.col("nmatch") / F.lit(n_terms)
+            return agg.select("docid", score_col.alias("score"))
 
         def explain(qn, docid, doc_id):
-            rows = (
-                expansion_postings()
-                .where(F.col("docid") == docid)
-                .join(exp(), "term")
-                .select("term", "tf", "length", "df")
+            p, _ = self.index.read_postings(
+                fld, slice_terms if got is not None else None, docid=docid
+            )
+            if not len(p):
+                return None
+            # the df of the doc's terms that the expansion holds
+            known = term_df if got is not None else dict(
+                self.index.expansion(fld, predicate)
+                .where(F.col("term").isin(p["term"].tolist()))
                 .collect()
+            )
+            rows = sorted(
+                (t, int(tf), int(length))
+                for t, tf, length in zip(p["term"], p["tf"], p["length"])
+                if t in known
             )
             if not rows:
                 return None
-            n = self.index.doc_count
             kids = [
                 self._term_expl(
                     fld, t, doc_id, tf, length,
-                    scoring.idf(self.similarity, n, df), df, boost, qn,
+                    scoring.idf(similarity, n_docs, known[t]), known[t],
+                    boost, qn,
                 )
-                for t, tf, length, df in sorted(rows)
+                for t, tf, length in rows
             ]
-            if self.similarity == scoring.TFIDF:
+            if similarity == scoring.TFIDF:
                 return E.coord_explanation(doc_id, kids, len(kids), n_terms)
             return E.sum_explanation(doc_id, kids)
 
@@ -703,22 +696,12 @@ class Searcher:
             return {fld: {t for t, _df in expanded}}
 
         def local(qn):
-            p = self.index.read_postings(fld, slice_terms)
-            docids, score, nmatch = _by_docid(
-                p["docid"].to_numpy(),
-                scoring.term_scores(
-                    self.similarity,
-                    p["tf"].to_numpy(),
-                    p["length"].to_numpy(),
-                    p["term"].map(term_idf).to_numpy(np.float64),
-                    boost,
-                    qn,
-                    avg_len,
-                ),
-            )
-            if self.similarity == scoring.TFIDF:
-                score = score * nmatch / n_terms
-            return docids, score
+            p, _ = self.index.read_postings(fld, slice_terms)
+            p["df"] = p["term"].map(term_df)
+            docids, total, nmatch = _by_docid(p["docid"].to_numpy(), score(p, qn))
+            if similarity == scoring.TFIDF:
+                total = total * nmatch / n_terms
+            return docids, total
 
         if got is None:
             return _Plan(weight, build, explain, terms)
@@ -1017,10 +1000,10 @@ class Searcher:
         # hits() runs in Spark tasks too, so it must not hold self
         similarity = self.similarity
 
-        def hits(rows, qn):
+        def hits(rows, positions, qn):
             return _phrase_hits(
-                rows, slots, deltas, slop, term_idf, boost, qn, avg_len,
-                similarity,
+                rows, positions, slots, deltas, slop, term_idf, boost, qn,
+                avg_len, similarity,
             )
 
         def build(qn, _blocks):
@@ -1053,36 +1036,34 @@ class Searcher:
                     common = bi if common is None else common.join(bi, "block")
                 blocks_src = blocks_src.join(common, "block")
 
-            def kernel(rows):
-                d, sc = hits(rows, qn)
+            def kernel(pdf):
+                d, sc = hits(*_decode_batch(pdf), qn)
                 return pd.DataFrame({"docid": d, "score": sc})
 
-            # a docid block holds every posting of its docs
-            return (
-                self.index.decoded(
-                    fld, present, need_positions=True, blocks=blocks_src
-                )
-                .groupBy(F.shiftright("docid", BLOCK_SHIFT))
-                .applyInPandas(kernel, "docid long, score double")
+            # a posting block holds every posting of its docs: each task
+            # decodes and matches one block's encoded rows
+            cols = ["term", "block", "docids_enc", "tfs_enc", "lens_enc", "pos_enc"]
+            return self.index.live(
+                blocks_src.select(*cols)
+                .groupBy("block")
+                .applyInPandas(kernel, SCORED_SCHEMA)
             )
 
         def explain(qn, docid, doc_id):
-            cols = ["term", "docid", "tf", "length", "positions"]
-            rows = (
-                self.index.decoded(fld, present, need_positions=True)
-                .where(F.col("docid") == docid)
-                .select(*cols)
-                .collect()
+            rows, positions = self.index.read_postings(
+                fld, present, need_positions=True, docid=docid
             )
-            if not len(hits(pd.DataFrame(rows, columns=cols), qn)[0]):
+            if not len(hits(rows, positions, qn)[0]):
                 return None
-            by_term = {r["term"]: r for r in rows}
+            by_term = {
+                t: (int(tf), int(length))
+                for t, tf, length in zip(rows["term"], rows["tf"], rows["length"])
+            }
             slot_kids = []
             for alts, _p in slots:
                 kids = [
                     self._term_expl(
-                        fld, t, doc_id, by_term[t]["tf"],
-                        by_term[t]["length"], term_idf[t], stats[t][0],
+                        fld, t, doc_id, *by_term[t], term_idf[t], stats[t][0],
                         boost, qn,
                     )
                     for t in alts
@@ -1102,7 +1083,7 @@ class Searcher:
 
         def local(qn):
             return hits(
-                self.index.read_postings(fld, present, need_positions=True), qn
+                *self.index.read_postings(fld, present, need_positions=True), qn
             )
 
         return _Plan(
@@ -1692,9 +1673,13 @@ class Searcher:
         queryNorm matches() uses. Each node reuses what its planner
         computed (term sets, idf, weights, phrase slots, the expansion
         size), so every query type search() plans is explained in both
-        similarities, and the tree has the plan's shape. Driver-side:
-        small collects of this one doc's postings, one per scored
-        leaf."""
+        similarities, and the tree has the plan's shape. One Spark job
+        looks up the docid; term, phrase and prefix leaves then read
+        the doc's posting block on the driver with pyarrow. A prefix
+        planned on the Spark side and the other expansions also collect
+        the df of the doc's terms from the dictionary, and constant,
+        filter and must_not leaves test the doc's membership, one small
+        Spark job each."""
         doc_id = str(doc_id)
         doc = (
             self.index.docs.where(F.col("_id") == doc_id)
@@ -1707,7 +1692,7 @@ class Searcher:
         return plan.explain(self._query_norm(q, plan), doc[0]["docid"], doc_id)
 
     def search(self, req: SearchRequest) -> SearchResult:
-        if req.similarity != self.similarity:
+        if req.similarity is not None and req.similarity != self.similarity:
             # never mutate shared planner state — two concurrent requests
             # with different similarities must not race; plan through a
             # per-request clone instead
@@ -1770,12 +1755,9 @@ class Searcher:
                 validate_vector_field,
             )
             from .ops.similarity import (
-                LSH_N_PLANES,
-                LSH_N_TABLES,
                 cosine_to_query,
                 dot_to_query,
                 l2sq_to_query,
-                lsh_candidates,
                 lsh_candidates_tables,
             )
 
@@ -1800,39 +1782,23 @@ class Searcher:
             )
             cand = self.index.docs
             if lsh_safe and self.index.doc_count >= self.knn_lsh_min_docs:
-                if self.knn_lsh_tables > 1:
-                    pre = f"{kr.field}__buckets"
-                    src = cand
-                    if (
-                        pre in cand.columns
-                        and self.knn_lsh_tables == LSH_N_TABLES
-                        and self.knn_lsh_planes == LSH_N_PLANES
-                    ):
-                        # vector-mapped field: buckets were persisted
-                        # at build time — candidate selection is a
-                        # pure-JVM bitcount filter, no per-query
-                        # matmul over the corpus. (Drop any unrelated
-                        # user column named "buckets" first; the
-                        # reserved <field>__buckets wins.)
-                        if "buckets" in cand.columns:
-                            src = cand.drop("buckets")
-                        src = src.withColumnRenamed(pre, "buckets")
-                    cand = lsh_candidates_tables(
-                        src,
-                        kr.vector,
-                        n_tables=self.knn_lsh_tables,
-                        n_planes=self.knn_lsh_planes,
-                        probe_hamming=self.knn_lsh_probe,
-                        vec_col=kr.field,
-                    )
-                else:
-                    cand = lsh_candidates(
-                        cand,
-                        kr.vector,
-                        n_planes=self.knn_lsh_planes,
-                        probe_hamming=self.knn_lsh_probe,
-                        vec_col=kr.field,
-                    )
+                pre = f"{kr.field}__buckets"
+                if pre in cand.columns:
+                    # vector-mapped field: buckets were persisted at
+                    # build time — candidate selection is a pure-JVM
+                    # bitcount filter, no per-query matmul over the
+                    # corpus. (Drop any unrelated user column named
+                    # "buckets" first; the reserved <field>__buckets
+                    # wins.)
+                    if "buckets" in cand.columns:
+                        cand = cand.drop("buckets")
+                    cand = cand.withColumnRenamed(pre, "buckets")
+                cand = lsh_candidates_tables(
+                    cand,
+                    kr.vector,
+                    probe_hamming=self.knn_lsh_probe,
+                    vec_col=kr.field,
+                )
             if metric == EUCLIDEAN_DISTANCE:
                 # FAISS L2 reports squared distance; the reference KNN
                 # scorer inverts it into a similarity score

@@ -50,7 +50,7 @@ PHASE1_MAX_BLOCKS = 512
 
 def _ub_col(
     similarity: str,
-    idf_col: Column,
+    idf: Column,
     mult_col: Column,
     avg_len: float,
 ) -> Column:
@@ -66,7 +66,7 @@ def _ub_col(
     min_len = F.greatest(F.col("min_len"), F.lit(1))
     if similarity == scoring.TFIDF:
         norm_ub = (F.lit(1.0) / F.sqrt(min_len)).cast("float").cast("double")
-        return F.sqrt(max_tf) * norm_ub * idf_col * mult_col
+        return F.sqrt(max_tf) * norm_ub * idf * mult_col
     denom = max_tf + F.lit(scoring.BM25_K1) * (
         F.lit(1.0 - scoring.BM25_B)
         + F.lit(scoring.BM25_B)

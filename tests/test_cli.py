@@ -82,6 +82,8 @@ def test_cli_dump(cli_index, capsys):
     assert lines[0]["doc"]["body"] == "red fox runs fast"
     terms = {d.get("term") for d in lines[1:]}
     assert {"red", "fox", "runs", "fast"} <= terms
+    fox = next(d for d in lines[1:] if d.get("term") == "fox")
+    assert fox["tf"] == 1 and fox["positions"] == [2]
 
 
 def test_cli_check_clean_and_corrupt(cli_index, capsys):

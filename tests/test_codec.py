@@ -86,19 +86,23 @@ def _assert_batched_matches_loop(blocks):
     exp_term = np.concatenate(
         [np.repeat(f"t{i}", len(d)) for i, (d, _, _) in enumerate(blocks)]
     )
-    for need_positions in (False, True):
-        out = _decode_batch(frame, need_positions)
+    for with_positions in (False, True):
+        src = frame if with_positions else frame.drop(columns="pos_enc")
+        out, positions = _decode_batch(src)
         assert (out["docid"].to_numpy() == exp_docid).all()
         assert (out["tf"].to_numpy() == exp_tf).all()
         assert (out["length"].to_numpy() == exp_len).all()
         assert (out["term"].to_numpy() == exp_term).all()
-    # the batch's positions equal a per-block decode of each pos_enc
+        assert (positions is not None) == with_positions
+    # the batch's flat positions equal the concatenation of a per-block
+    # decode of each pos_enc
     exp_pos = [
-        list(p)
+        p
         for (d, _, _), enc in zip(blocks, frame["pos_enc"])
         for p in codec.decode_positions(enc, len(d))
     ]
-    assert [list(p) for p in out["positions"]] == exp_pos
+    assert positions.dtype == np.int64
+    assert positions.tolist() == np.concatenate(exp_pos).tolist()
 
 
 def test_batched_block_decode_rejects_header_tf_mismatch():
@@ -110,11 +114,11 @@ def test_batched_block_decode_rejects_header_tf_mismatch():
     d = np.array([5, 9, 12], dtype=np.uint64)
     tfs = np.array([2, 1, 1], dtype=np.uint64)
     frame = _blocks_frame([(d, tfs, np.ones(3, dtype=np.uint64))])
-    assert [len(p) for p in _decode_batch(frame, True)["positions"]] == [2, 1, 1]
+    assert len(_decode_batch(frame)[1]) == 4
     # as many values as the tfs imply, but the headers say 1, 2, 1
     frame["pos_enc"] = [codec.encode_positions([[1], [3, 7], [2]])]
     with pytest.raises(ValueError, match="corrupt posting batch"):
-        _decode_batch(frame, True)
+        _decode_batch(frame)
 
 
 @settings(max_examples=50, deadline=None)

@@ -3,9 +3,11 @@ message shapes must mirror the reference's scorer explanations
 (/root/reference/search/scorer/scorer_term.go:117-170,
 scorer_term_test.go explanation cases)."""
 
+import itertools
+
 import pytest
 
-from bleve_spark import Searcher, SearchRequest
+from bleve_spark import Searcher, SearchRequest, scoring, search
 from bleve_spark import query as Q
 
 
@@ -362,3 +364,63 @@ def test_one_token_match_explains_as_its_term(built_index):
     expl = s.explain(_match("apache"), hit["_id"])
     assert expl["value"] == pytest.approx(hit["score"], rel=1e-12)
     assert expl["message"].startswith("weight(content:apache^")
+
+
+@pytest.mark.parametrize("similarity", ["tfidf", "bm25"])
+@pytest.mark.parametrize("name", list(PLAN_SHAPES))
+def test_explain_follows_plan_on_the_spark_route(
+    built_index, name, similarity, monkeypatch
+):
+    """The same checks with every search on the Spark route: a prefix
+    then plans on the Spark agg, and its explanation reads the doc's
+    block of every term of the field on the driver."""
+    monkeypatch.setattr(search, "LOCAL_MAX_POSTINGS", 0)
+    test_explain_follows_plan(built_index, name, similarity)
+
+
+_groups = itertools.count()
+
+# a scored leaf of each kind, and a must/should boolean of them
+ONE_JOB_SHAPES = {
+    "term": _t("apache"),
+    "match_or": _match("apache commit"),
+    "phrase": PHRASE,
+    "prefix": Q.PrefixQuery(field="content", prefix="lic"),
+    "boolean": Q.BooleanQuery(
+        must=[_t("commit")],
+        should=[_match("apache commit"), PHRASE, Q.PrefixQuery(field="content", prefix="lic")],
+    ),
+}
+
+
+@pytest.mark.parametrize("name", list(ONE_JOB_SHAPES))
+def test_explain_starts_one_spark_job(spark, built_index, name):
+    """Scored leaves read their doc's postings on the driver: the one
+    Spark job explain() starts is the _id lookup."""
+    q = ONE_JOB_SHAPES[name]
+    s = Searcher(built_index)
+    hit = s.search(SearchRequest(query=q, size=1)).hits.collect()[0]
+    sc = spark.sparkContext
+    gid = f"explain-{next(_groups)}"
+    sc.setJobGroup(gid, gid)
+    try:
+        expl = s.explain(q, hit["_id"])
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert expl["value"] == pytest.approx(hit["score"], rel=1e-12)
+    assert len(sc.statusTracker().getJobIdsForGroup(gid)) == 1
+
+
+def test_request_similarity_defaults_to_the_searchers(built_index):
+    """A request that names no similarity scores with its Searcher's,
+    the one explain() uses."""
+    q = _match("apache commit")
+    s = Searcher(built_index, scoring.BM25)
+    got = s.search(SearchRequest(query=q, size=1)).hits.collect()[0]
+    want = s.search(
+        SearchRequest(query=q, size=1, similarity=scoring.BM25)
+    ).hits.collect()[0]
+    assert (got["_id"], got["score"]) == (want["_id"], want["score"])
+    assert s.explain(q, got["_id"])["value"] == pytest.approx(
+        got["score"], rel=1e-12
+    )

@@ -19,11 +19,22 @@ IDF = {"cache": 1.7, "get": 0.9, "set": 1.3, "index": 2.1}
 BOOST, QN, AVG_LEN = 1.5, 0.37, 40.0
 
 
+def _flat(out):
+    """(rows, flat positions) of (term, docid, tf, length, positions)
+    tuples, in the layout the decoder gives the kernel: row i owns the
+    next tf[i] values of the flat positions."""
+    rows = pd.DataFrame(
+        [o[:4] for o in out], columns=["term", "docid", "tf", "length"]
+    )
+    return rows, np.concatenate([o[4] for o in out]).astype(np.int64)
+
+
 def _rows(seed, ndocs=300):
     """Seeded postings: each doc holds a random subset of TERMS at
     positions drawn from a small range, so phrases match often. Docids
     start above 2^31 and one doc's positions sit above 2^32 (an array
-    element far down its field)."""
+    element far down its field). The kernel must not depend on the row
+    order, so the rows come shuffled."""
     rng = np.random.default_rng(seed)
     out = []
     for k in range(ndocs):
@@ -39,15 +50,17 @@ def _rows(seed, ndocs=300):
     rows = pd.DataFrame(
         out, columns=["term", "docid", "tf", "length", "positions"]
     )
-    # the kernel must not depend on the row order
-    return rows.sample(frac=1.0, random_state=seed).reset_index(drop=True)
+    rows = rows.sample(frac=1.0, random_state=seed)
+    return _flat(list(rows.itertuples(index=False, name=None)))
 
 
-def _reference(rows, slots, deltas, slop, similarity):
+def _reference(rows, positions, slots, deltas, slop, similarity):
     scores = scoring.term_scores(
         similarity, rows["tf"].to_numpy(), rows["length"].to_numpy(),
         rows["term"].map(IDF).to_numpy(np.float64), BOOST, QN, AVG_LEN,
     )
+    ends = np.cumsum(rows["tf"].to_numpy())
+    pos_of = [positions[e - n:e] for n, e in zip(rows["tf"], ends)]
     by_doc = {}
     for i, (t, d) in enumerate(zip(rows["term"], rows["docid"])):
         by_doc.setdefault(int(d), {})[t] = i
@@ -59,7 +72,7 @@ def _reference(rows, slots, deltas, slop, similarity):
                 int(p)
                 for t in alts
                 if t in at
-                for p in rows["positions"][at[t]]
+                for p in pos_of[at[t]]
             }
             for sl, (alts, _p) in enumerate(slots)
         }
@@ -99,10 +112,13 @@ def test_kernel_matches_per_doc_reference(name, slop, similarity):
     slots = PHRASES[name]
     deltas = [slots[i][1] - slots[i - 1][1] for i in range(1, len(slots))]
     for seed in (1, 2):
-        rows = _rows(seed)
-        want_d, want_s = _reference(rows, slots, deltas, slop, similarity)
+        rows, positions = _rows(seed)
+        want_d, want_s = _reference(
+            rows, positions, slots, deltas, slop, similarity
+        )
         got_d, got_s = _phrase_hits(
-            rows, slots, deltas, slop, IDF, BOOST, QN, AVG_LEN, similarity
+            rows, positions, slots, deltas, slop, IDF, BOOST, QN, AVG_LEN,
+            similarity,
         )
         assert len(want_d), "the seeded docs must hold some phrase"
         assert got_d.dtype == np.int64 and got_s.dtype == np.float64
@@ -122,21 +138,20 @@ def test_kernel_exact_match_far_apart_positions():
     # both terms, but never adjacent
     out += [("get", 2**40 + 9, 1, 9, np.array([3])),
              ("cache", 2**40 + 9, 1, 9, np.array([6]))]
-    rows = pd.DataFrame(
-        out, columns=["term", "docid", "tf", "length", "positions"]
-    )
+    rows, positions = _flat(out)
     slots = [(("get",), 1), (("cache",), 2)]
     for slop in (0, 1):
         d, _s = _phrase_hits(
-            rows, slots, [1], slop, IDF, BOOST, QN, AVG_LEN, scoring.TFIDF
+            rows, positions, slots, [1], slop, IDF, BOOST, QN, AVG_LEN,
+            scoring.TFIDF,
         )
         assert d.tolist() == [2**40 + k for k in range(len(starts))]
 
 
 def test_kernel_no_candidate_doc():
-    rows = _rows(4, ndocs=20)
+    rows, positions = _rows(4, ndocs=20)
     d, s = _phrase_hits(
-        rows, [(("missing",), 1), (("cache",), 2)], [1], 0, IDF, BOOST, QN,
-        AVG_LEN, scoring.TFIDF,
+        rows, positions, [(("missing",), 1), (("cache",), 2)], [1], 0, IDF,
+        BOOST, QN, AVG_LEN, scoring.TFIDF,
     )
     assert d.tolist() == [] and s.tolist() == []

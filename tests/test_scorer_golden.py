@@ -5,9 +5,6 @@ FIXTURES.md) plus hand-computed BM25(k1=1.2,b=0.75) values."""
 import math
 
 import numpy as np
-import pandas as pd
-import pytest
-from pyspark.sql import functions as F
 
 from bleve_spark import scoring
 
@@ -78,32 +75,3 @@ def test_conjunction_sum_and_disjunction_coord():
     assert s1 + s2 == math.sqrt(1) * IDF + math.sqrt(4) * IDF
     coord = 1 / 2
     assert (s1 * coord) == s1 / 2
-
-
-@pytest.mark.parametrize("with_qn", [False, True])
-@pytest.mark.parametrize("similarity", [scoring.TFIDF, scoring.BM25])
-def test_kernel_equals_the_spark_column_bit_for_bit(spark, similarity, with_qn):
-    """term_scores (the driver-local route's kernel) and term_score_col
-    (the Spark route's column) give the same float64 bits, for idf as a
-    per-posting column and as one literal."""
-    rng = np.random.default_rng([11, with_qn, similarity == scoring.BM25])
-    n = 2000
-    tf = rng.integers(1, 80, n)
-    length = rng.integers(0, 6000, n)
-    idf = rng.uniform(0.01, 12.0, n)
-    boost = float(rng.uniform(0.1, 5.0))
-    qn = float(rng.uniform(0.01, 2.0)) if with_qn else None
-    avg_len = float(rng.uniform(1.0, 900.0))
-    rows = spark.createDataFrame(
-        pd.DataFrame(
-            {"tf": tf.astype(np.int32), "length": length.astype(np.int32), "idf": idf}
-        )
-    )
-    for idf_col, idf_arg in ((F.col("idf"), idf), (F.lit(idf[0]), idf[0])):
-        col = scoring.term_score_col(
-            similarity, F.col("tf"), F.col("length"), idf_col, boost, qn, avg_len
-        )
-        want = np.array([r[0] for r in rows.select(col).collect()])
-        got = scoring.term_scores(similarity, tf, length, idf_arg, boost, qn, avg_len)
-        assert got.dtype == np.float64
-        assert got.tobytes() == want.tobytes()

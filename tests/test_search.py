@@ -484,9 +484,7 @@ def test_knn_request_merges_with_query(spark):
             knn=[KNNRequest(field="embedding", vector=[1.0, 0.0, 0.0], k=2)],
         )
     )
-    lsh = Searcher(
-        idx, knn_lsh_min_docs=0, knn_lsh_planes=8, knn_lsh_probe=8
-    ).search(
+    lsh = Searcher(idx, knn_lsh_min_docs=0, knn_lsh_probe=16).search(
         SearchRequest(
             query=Qm.MatchNoneQuery(),
             knn=[KNNRequest(field="embedding", vector=[1.0, 0.0, 0.0], k=2)],

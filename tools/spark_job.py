@@ -222,13 +222,14 @@ def cmd_dictionary(args):
 
 def cmd_dump(args):
     """Dump index contents (ref: cmd/bleve/cmd/dump.go + dumpDoc.go):
-    with --doc-id, the stored document and its decoded posting entries
-    (block-pruned via the docid->block alignment); else segment
-    metadata and bounded posting/doc table samples."""
+    with --doc-id, the stored document and its posting entries with
+    their positions, decoded on the driver from the doc's posting block
+    (docid >> BLOCK_SHIFT); else segment metadata and bounded
+    posting/doc table samples."""
+    import numpy as np
     from pyspark.sql import functions as F
 
     from bleve_spark import Index, SearchIndex
-    from bleve_spark.build import BLOCK_SHIFT
     from bleve_spark.writer import segment_metas
 
     spark = _session(args)
@@ -248,18 +249,19 @@ def cmd_dump(args):
             .collect()
         )
         docid = row[0]["docid"]
-        block = docid >> BLOCK_SHIFT
         for fld in sorted(reader.field_stats):
-            blocks = reader.postings.where(
-                (F.col("field") == fld) & (F.col("block") == block)
+            postings, positions = reader.read_postings(
+                fld, None, need_positions=True, docid=docid
             )
-            decoded = reader.decoded(
-                fld, [], need_positions=True, blocks=blocks
-            ).where(F.col("docid") == docid)
-            for r in decoded.collect():
-                d = r.asDict(recursive=True)
-                d["field"] = fld
-                print(json.dumps(d, default=str))
+            ends = np.cumsum(postings["tf"].to_numpy())
+            for (t, tf, length), end in zip(
+                postings[["term", "tf", "length"]].itertuples(index=False), ends
+            ):
+                print(json.dumps({
+                    "field": fld, "term": t, "docid": docid, "tf": int(tf),
+                    "length": int(length),
+                    "positions": positions[end - tf:end].tolist(),
+                }))
         return
     metas = segment_metas(args.index)
     print(json.dumps({"segments": metas}, default=str))
